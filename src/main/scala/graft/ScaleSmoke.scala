@@ -142,12 +142,12 @@ object ScaleSmoke {
     }
 
     if (args.contains("--s10-only")) {
-      // ---- s10 partition pruning MEASURED, not just plan-pinned -------
-      // Same probe code over two layouts of the same postings: the
-      // cid-partitioned artifact (DPP prunes to nprobe directories) vs
-      // an unpartitioned copy (cid is a row filter after a full scan).
-      // The input-RECORDS ratio is the pruning evidence (bytesRead is
-      // unreliable for local-FS array columns — a 102 MB full scan
+      // ---- s10 leaf pruning MEASURED, not just plan-pinned -------------
+      // The same VersionedIvf.probe over one artifact, reading only the
+      // manifest leaves of the probed cells (nprobe 8 of 128) vs probing
+      // EVERY cell (nprobe = nlist: every leaf read — the full-scan
+      // contrast). The input-RECORDS ratio is the pruning evidence
+      // (bytesRead is unreliable for local-FS array columns — a 102 MB full scan
       // reported 0.7 MB; recordsRead counts every row the scan actually
       // produced). Pruning wins when the UNION of probed cells is
       // small — the online-serving shape (2 queries × nprobe 8 → ≤16 of
@@ -174,17 +174,11 @@ object ScaleSmoke {
       val emb = spark.range(n)
         .select(col("id").as("vec_id"), array(cols: _*).as("embedding")).persist()
       emb.count()
-      val part = java.nio.file.Files.createTempDirectory("s10-part").toString
-      val flat = java.nio.file.Files.createTempDirectory("s10-flat").toString
+      val root = java.nio.file.Files.createTempDirectory("s10-root").toString
       timed("s10_build_index") {
-        Similarity.buildIvfIndex(emb, part, nlist)
+        graft.operators.VersionedIvf.build(emb, root, nlist)
         0L
       }
-      // identical postings, unpartitioned — the layout contrast
-      spark.read.parquet(s"$part/postings")
-        .write.mode("overwrite").parquet(s"$flat/postings")
-      spark.read.parquet(s"$part/centroids")
-        .write.mode("overwrite").parquet(s"$flat/centroids")
       // queries as a MATERIALIZED local table: an online probe arrives
       // as a handful of vectors, not as a scan of the corpus — and the
       // bytes ledger then shows only what the PROBE reads
@@ -192,146 +186,21 @@ object ScaleSmoke {
         spark.sparkContext.parallelize(
           emb.filter(col("vec_id") < nq).collect().toSeq, 1),
         emb.schema)
-      for ((name, dir2, nq) <- Seq(
-             ("s10_probe_pruned", part, 2),
-             ("s10_probe_fullscan", flat, 2),
-             ("s10_probe_pruned_wide", part, 64))) {
+      for ((name, nprobe, nq) <- Seq(
+             ("s10_probe_pruned", 8, 2),
+             ("s10_probe_fullscan", nlist, 2),
+             ("s10_probe_pruned_wide", 8, 64))) {
         val queries = queryTable(nq)
         // listener events are async — settle before/after snapshotting
         Thread.sleep(1000)
         val b0 = recsRead
         timed(name) {
-          exec(Similarity.probeIvfIndex(spark, dir2, queries, k = 10, nprobe = 8))
+          exec(graft.operators.VersionedIvf.probe(spark, root, queries,
+            k = 10, nprobe = nprobe))
         }
         Thread.sleep(1000)
-        println(s"""{"step":"${name}_records","input_records":${recsRead - b0},"corpus_records":$n,"queries":$nq,"nlist":$nlist,"nprobe":8}""")
+        println(s"""{"step":"${name}_records","input_records":${recsRead - b0},"corpus_records":$n,"queries":$nq,"nlist":$nlist,"nprobe":$nprobe}""")
       }
-      emb.unpersist()
-      spark.stop(); return
-    }
-
-    if (args.contains("--s11-only")) {
-      // ---- s11 incremental IVF maintenance: append must be BATCH-sized --
-      // Day-1 build over 99% of the corpus vs the 1% day-2 append. The
-      // append's input-records ledger must count ~(batch + centroids) —
-      // never the existing postings (a corpus-sized append is the rebuild
-      // s11 exists to avoid) — and the appended artifact must equal the
-      // frozen-centroid rebuild row-for-row (the d28 protocol).
-      val n = posArgs.lift(0).map(_.toLong).getOrElse(200000L)
-      val nlist = 128
-      var recsRead = 0L
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onTaskEnd(
-              t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-            if (t.taskMetrics != null)
-              recsRead += t.taskMetrics.inputMetrics.recordsRead
-        })
-      val cols = (0 until 64).map(i =>
-        (xxhash64(col("id"), lit(i)).cast("double") / 9.223372036854776e18))
-      val emb = spark.range(n)
-        .select(col("id").as("vec_id"), array(cols: _*).as("embedding")).persist()
-      emb.count()
-      val day1 = emb.filter(col("vec_id") % 100 =!= 0)
-      // the day-2 batch arrives as its OWN table (production ships a
-      // day's files, not a filter over the full corpus) — materialized
-      // so the append's input-records ledger counts exactly what the
-      // append reads: the batch + the frozen centroids, never postings
-      val batchDir = java.nio.file.Files.createTempDirectory("s11-batch").toString
-      emb.filter(col("vec_id") % 100 === 0).write.mode("overwrite").parquet(batchDir)
-      val day2 = spark.read.parquet(batchDir)
-      val grown = java.nio.file.Files.createTempDirectory("s11-grown").toString
-      val rebuilt = java.nio.file.Files.createTempDirectory("s11-rebuilt").toString
-      timed(s"s11_build_day1_99pct_$n") {
-        Similarity.buildIvfIndex(day1, grown, nlist); 0L
-      }
-      Thread.sleep(1000)
-      val b0 = recsRead
-      timed(s"s11_append_day2_1pct_$n") {
-        Similarity.appendIvfIndex(spark, day2, grown, batchId = "day2"); 0L
-      }
-      Thread.sleep(1000)
-      val appendRecs = recsRead - b0
-      timed(s"s11_rebuild_union_$n") {
-        Similarity.buildIvfIndex(emb, rebuilt, nlist,
-          centroidSource = Some(day1)); 0L
-      }
-      val g = spark.read.parquet(s"$grown/postings")
-        .select(col("vec_id"), col("cid").cast("long"))
-      val r = spark.read.parquet(s"$rebuilt/postings")
-        .select(col("vec_id"), col("cid").cast("long"))
-      val diff = g.exceptAll(r).count() + r.exceptAll(g).count()
-      println(s"""{"step":"s11_append_detail","corpus_records":$n,""" +
-        s""""batch_records":${n / 100},"append_input_records":$appendRecs,""" +
-        s""""append_eq_rebuild":${diff == 0L},"row_diff":$diff}""")
-      emb.unpersist()
-      spark.stop(); return
-    }
-
-    if (args.contains("--s15-only")) {
-      // ---- s15 takedown: delete cost must be LEAF-sized, not corpus ----
-      // Build a 128-cell index over n vectors, delete a ~200-id takedown
-      // set, and ledger the two cost components separately: the
-      // affected-leaf DETECTION is one column-pruned scan of the
-      // postings (vec_id + zero-IO partition columns — ~8 B/row, the
-      // price of not keeping a vec->leaf sidecar), while the REWRITE
-      // touches only the leaves that contained deleted ids. The
-      // comparison arm is the only alternative an append-only artifact
-      // offers: a full rebuild-without. Correctness: deleted index ==
-      // rebuild-without row-for-row (the s11 exceptAll protocol).
-      val n = posArgs.lift(0).map(_.toLong).getOrElse(200000L)
-      val nlist = 128
-      var recsRead = 0L; var bytesWritten = 0L
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onTaskEnd(
-              t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-            if (t.taskMetrics != null) {
-              recsRead += t.taskMetrics.inputMetrics.recordsRead
-              bytesWritten += t.taskMetrics.outputMetrics.bytesWritten
-            }
-        })
-      val cols = (0 until 64).map(i =>
-        (xxhash64(col("id"), lit(i)).cast("double") / 9.223372036854776e18))
-      val emb = spark.range(n)
-        .select(col("id").as("vec_id"), array(cols: _*).as("embedding")).persist()
-      emb.count()
-      val idx = java.nio.file.Files.createTempDirectory("s15-idx").toString
-      val ref = java.nio.file.Files.createTempDirectory("s15-ref").toString
-      timed(s"s15_build_$n") { Similarity.buildIvfIndex(emb, idx, nlist); 0L }
-      // the takedown set: ~n/4000 scattered ids, shipped as its own tiny
-      // table — small vs the 128 cells, so the affected-leaf fraction
-      // (and hence the rewrite bytes) stays well under the corpus
-      val delDir = java.nio.file.Files.createTempDirectory("s15-dels").toString
-      emb.filter(col("vec_id") % 4000 === 7).select(col("vec_id"))
-        .write.mode("overwrite").parquet(delDir)
-      val dels = spark.read.parquet(delDir)
-      Thread.sleep(1000)
-      val (r0, w0) = (recsRead, bytesWritten)
-      timed(s"s15_delete_${n}_ids_${n / 4000}") {
-        Similarity.deleteFromIvfIndex(spark, idx, dels); 0L
-      }
-      Thread.sleep(1000)
-      val (delRecs, delBytes) = (recsRead - r0, bytesWritten - w0)
-      val (r1, w1) = (recsRead, bytesWritten)
-      timed(s"s15_rebuild_without_$n") {
-        Similarity.buildIvfIndex(
-          emb.join(dels, Seq("vec_id"), "left_anti"), ref, nlist,
-          centroidSource = Some(emb)); 0L
-      }
-      Thread.sleep(1000)
-      val (rbRecs, rbBytes) = (recsRead - r1, bytesWritten - w1)
-      val g = spark.read.parquet(s"$idx/postings")
-        .select(col("vec_id"), col("cid").cast("long"))
-      val r = spark.read.parquet(s"$ref/postings")
-        .select(col("vec_id"), col("cid").cast("long"))
-      val diff = g.exceptAll(r).count() + r.exceptAll(g).count()
-      println(s"""{"step":"s15_delete_detail","corpus_records":$n,""" +
-        s""""deleted_ids":${n / 4000},"delete_input_records":$delRecs,""" +
-        s""""delete_bytes_written":$delBytes,""" +
-        s""""rebuild_input_records":$rbRecs,"rebuild_bytes_written":$rbBytes,""" +
-        s""""delete_eq_rebuild":${diff == 0L},"row_diff":$diff}""")
-      require(diff == 0L, "in-place delete diverged from rebuild-without")
       emb.unpersist()
       spark.stop(); return
     }
@@ -428,14 +297,14 @@ object ScaleSmoke {
       val duAfter = du(s"$root/data")
       // correctness: live snapshot == frozen-centroid rebuild-without
       timed(s"s16_rebuild_without_$n") {
-        Similarity.buildIvfIndex(
+        VersionedIvf.build(
           emb.join(dels, Seq("vec_id"), "left_anti"), ref, nlist,
           centroidSource = Some(day1)); 0L
       }
       val g = VersionedIvf.livePostings(spark, root)
         .select(col("vec_id"), col("cid"))
-      val r = spark.read.parquet(s"$ref/postings")
-        .select(col("vec_id"), col("cid").cast("long"))
+      val r = VersionedIvf.livePostings(spark, ref)
+        .select(col("vec_id"), col("cid"))
       val diff = g.exceptAll(r).count() + r.exceptAll(g).count()
       println(s"""{"step":"s16_versioned_detail","corpus_records":$n,""" +
         s""""batch_records":${n / 100},"append_input_records":$appendRecs,""" +
@@ -463,8 +332,8 @@ object ScaleSmoke {
       // rewrote all of it. Ledger: (a) one-doc takedown (the production
       // opt-out case) ≈ 1/256 of base; (b) 50 scattered ids ≈ the
       // ~46/256 expected hit-bucket fraction; both measured as bytes
-      // written and affected-leaf counts, plus the in-place sibling, and
-      // certified against rebuild-without row-for-row.
+      // written and affected-leaf counts, and certified against
+      // rebuild-without row-for-row.
       import graft.operators.VersionedBand
       val n = posArgs.lift(0).map(_.toLong).getOrElse(50000L)
       // AtomicLong: onTaskEnd fires on the listener-bus thread; a plain
@@ -530,15 +399,6 @@ object ScaleSmoke {
       }
       val (oneBytes, oneLeaves, oneSec) = measuredDelete(oneId, "one")
       val (fiftyBytes, fiftyLeaves, fiftySec) = measuredDelete(fiftyIds, "fifty")
-      // in-place sibling: same one-doc takedown through the d28 artifact
-      val idx = java.nio.file.Files.createTempDirectory("bd-idx").toString
-      Dedup.buildBandIndex(d.filter(col("doc_id") % 100 =!= 0), idx)
-      Dedup.appendBandIndex(d.filter(col("doc_id") % 100 === 0), idx, "day2")
-      Thread.sleep(1000)
-      val wIp = bytesWritten.get()
-      Dedup.deleteFromBandIndex(spark, idx, oneId)
-      Thread.sleep(1000)
-      val inplaceOneBytes = bytesWritten.get() - wIp
       // correctness: live snapshot == rebuild-without (both delete sets
       // applied; oneId ⊂ fiftyIds so the survivor set is %1000 ≠ 7)
       val ref = java.nio.file.Files.createTempDirectory("bd-ref").toString
@@ -555,7 +415,6 @@ object ScaleSmoke {
         f""""one_doc_fraction_of_base":${oneBytes.toDouble / math.max(1L, baseBytes)}%.4f,""" +
         f""""fifty_doc_bytes_written":$fiftyBytes,"fifty_doc_affected_leaves":$fiftyLeaves,"fifty_doc_sec":$fiftySec%.3f,""" +
         f""""fifty_doc_fraction_of_base":${fiftyBytes.toDouble / math.max(1L, baseBytes)}%.4f,""" +
-        s""""inplace_one_doc_bytes_written":$inplaceOneBytes,""" +
         s""""delete_eq_rebuild":${diff == 0L},"row_diff":$diff}""")
       require(diff == 0L, "bucketed band delete diverged from rebuild-without")
       require(oneLeaves <= 2,
@@ -931,48 +790,6 @@ object ScaleSmoke {
       println(s"""{"step":"d27_reconciliation","total_tokens":${rec.getLong(0)},""" +
         s""""removed_tokens":$removed,"d19_dup_tokens":$measured,""" +
         s""""rewrite_eq_measure":${removed == measured}}""")
-      spark.stop(); return
-    }
-
-    if (args.contains("--d28-only")) {
-      // band-index lifecycle at 50k docs: day-1 build over 99% of the
-      // corpus vs the 1% DAY-2 APPEND — the append's shuffle must be
-      // batch-sized (one batch signature pass), never corpus-sized, and
-      // the appended artifact must equal the full rebuild row-for-row.
-      // repartition: break spark.range's RangePartitioning gift so the
-      // signature aggregation pays its real doc_id exchange (see the
-      // --d27-only protocol note).
-      val d = docs(spark, nDocs)
-        .repartition(spark.sessionState.conf.numShufflePartitions)
-        .persist(); d.count()
-      val corpus = d.filter(col("doc_id") % 100 =!= 0)
-      val batch = d.filter(col("doc_id") % 100 === 0)
-      val idxDir = java.nio.file.Files
-        .createTempDirectory("graft_smoke_idx").toString
-      timed(s"d28_build_index_99pct_${nDocs}") {
-        Dedup.buildBandIndex(corpus, idxDir)
-        spark.read.parquet(idxDir).count()
-      }
-      timed(s"d28_append_index_1pct_${nDocs}") {
-        Dedup.appendBandIndex(batch, idxDir, batchId = "day2")
-        batch.count()
-      }
-      val compactDir = java.nio.file.Files
-        .createTempDirectory("graft_smoke_idx_c").toString
-      timed(s"d28_compact_${nDocs}") {
-        graft.sources.Formats.compactParquet(spark, idxDir, compactDir).toLong
-      }
-      val rebuildDir = java.nio.file.Files
-        .createTempDirectory("graft_smoke_idx_r").toString
-      Dedup.buildBandIndex(d, rebuildDir)
-      val appended = spark.read.parquet(compactDir)
-        .select(col("doc_id"), col("band"), col("bkey"))
-      val rebuilt = spark.read.parquet(rebuildDir)
-        .select(col("doc_id"), col("band"), col("bkey"))
-      val diff = appended.exceptAll(rebuilt).count() +
-        rebuilt.exceptAll(appended).count()
-      println(s"""{"step":"d28_append_eq_rebuild","index_rows":${rebuilt.count()},""" +
-        s""""row_diff":$diff,"append_eq_rebuild":${diff == 0L}}""")
       spark.stop(); return
     }
 

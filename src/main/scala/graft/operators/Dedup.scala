@@ -260,59 +260,10 @@ object Dedup {
       .distinct()
   }
 
-  /** The persisted LSH band index — [[bandTable]] as a FILESYSTEM artifact
-    * with a day-2 lifecycle: build once, append each admitted batch
-    * (band rows computed from the batch ALONE — old data never re-read),
-    * and compact the accumulating small files with
-    * [[graft.sources.Formats.compactParquet]]. Band rows are a pure
-    * per-document function (the MinHash signature sees only the doc's own
-    * shingles), so append(day1) ∪ append(day2) == rebuild(day1 ∪ day2)
-    * EXACTLY — and that is a cross-engine-certified property, not an
-    * assumption: the registered query d28 walks the whole lifecycle
-    * (build → append → RETRIED append → compact → read back) while its
-    * oracle computes the full-corpus rebuild from scratch. At 100 TB a
-    * day's append costs one batch-sized signature pass + write, never a
-    * corpus re-read (ScaleSmoke --d28-only measures append shuffle ≈
-    * batch-sized).
-    *
-    * Retry safety (r9 verdict #2): the artifact is PARTITIONED BY
-    * `batch_id` and every append is a DYNAMIC-partition-overwrite of its
-    * own batch's partition — a retried day-2 job replaces `batch_id=X/`
-    * instead of double-appending into a flat directory, so re-running an
-    * append is a no-op by construction (d28's registered arm executes the
-    * retry and stays hash-green; DedupSpec asserts it row-identical).
-    * The partition listing doubles as the artifact's batch manifest. */
-  def buildBandIndex(docs: DataFrame, path: String, bands: Int = 8,
-      batchId: String = "base", buckets: Int = BandBuckets): Unit = {
-    clusterForBandWrite(bandTable(docs, bands)
-        .withColumn("batch_id", lit(batchId))
-        .withColumn("bucket", bandBucket(col("doc_id"), buckets)))
-      .write.partitionBy("batch_id", "bucket").mode("overwrite").parquet(path)
-    writeBucketsMarker(path, buckets)
-  }
-
-  /** Day-2 append — see [[buildBandIndex]]. Idempotent under retry: the
-    * batch's rows land as a dynamic overwrite of partition
-    * `batch_id=<batchId>` (every bucket of it — bucket membership is a
-    * pure function of doc_id, so a retried batch repopulates exactly the
-    * same `(batch, bucket)` leaves), never as bare appended files. Run
-    * [[graft.sources.Formats.compactParquet]] when daily appends
-    * accumulate enough small files to matter. */
-  def appendBandIndex(newDocs: DataFrame, path: String, batchId: String,
-      bands: Int = 8): Unit =
-    clusterForBandWrite(bandTable(newDocs, bands)
-        .withColumn("batch_id", lit(batchId))
-        .withColumn("bucket",
-          bandBucket(col("doc_id"), bandBucketCountOrInit(path))))
-      .write.partitionBy("batch_id", "bucket")
-      .option("partitionOverwriteMode", "dynamic")
-      .mode("overwrite").parquet(path)
-
   /** The band artifact's declared schema — reads never infer (an EMPTY
     * partitioned index has no schema-bearing files to infer from: a
     * partitionBy write of zero rows emits only _SUCCESS). `batch_id` is
-    * resolved from partition directories on the live index and from the
-    * data column on a compacted copy. */
+    * resolved from the leaf's partition directory on read. */
   private[operators] val bandIndexSchema = new org.apache.spark.sql.types.StructType()
     .add("doc_id", org.apache.spark.sql.types.LongType)
     .add("sig", org.apache.spark.sql.types.ArrayType(
@@ -337,59 +288,14 @@ object Dedup {
     *
     * The bucket COUNT is a per-artifact build parameter (the `nlist`
     * convention: registered gate queries run small, production and the
-    * ScaleSmoke ledger run the default) recorded IN the artifact — a
-    * `buckets` manifest line on the versioned index, a `_graft_buckets`
-    * marker (underscore-prefixed: invisible to parquet listing) on the
-    * in-place one — so append/delete always derive the modulus from the
-    * artifact itself and a caller can never probe with a mismatched
-    * bucket function (a silent missed-takedown otherwise). */
+    * ScaleSmoke ledger run the default) recorded IN the artifact — the
+    * `buckets` line of the [[VersionedBand]] manifest — so append/delete
+    * always derive the modulus from the artifact itself and a caller can
+    * never probe with a mismatched bucket function (a silent
+    * missed-takedown otherwise). */
   private[graft] val BandBuckets = 256
   private[operators] def bandBucket(docId: Column, buckets: Int): Column =
     pmod(xxhash64(docId), lit(buckets)).cast("int")
-
-  private def bucketsMarker(path: String): java.nio.file.Path =
-    java.nio.file.Paths.get(path, "_graft_buckets")
-
-  private def writeBucketsMarker(path: String, buckets: Int): Unit =
-    java.nio.file.Files.writeString(bucketsMarker(path), s"$buckets\n")
-
-  /** The in-place artifact's recorded bucket count — fails loudly on an
-    * artifact with no marker rather than guessing a modulus. */
-  private[operators] def bandBucketCount(path: String): Int = {
-    val m = bucketsMarker(path)
-    require(java.nio.file.Files.exists(m),
-      s"band index at $path has no _graft_buckets marker — built by buildBandIndex?")
-    java.nio.file.Files.readString(m).trim.toInt
-  }
-
-  /** [[bandBucketCount]], initializing an EMPTY artifact (the
-    * append-into-empty streaming path builds day 1 through foreachBatch
-    * too) with the production default. An artifact that already has
-    * `batch_id=` partitions but NO marker is a pre-bucket (legacy)
-    * layout — appending bucketed partitions beside unbucketed ones
-    * would produce Spark's conflicting-directory-structures error on
-    * the next read (and a delete would NPE on the absent bucket
-    * column), so it fails loudly here: rebuild the artifact. */
-  private def bandBucketCountOrInit(path: String): Int = {
-    val m = bucketsMarker(path)
-    if (!java.nio.file.Files.exists(m)) {
-      val p = java.nio.file.Paths.get(path)
-      val legacy = java.nio.file.Files.isDirectory(p) && {
-        import scala.jdk.CollectionConverters._
-        val s = java.nio.file.Files.list(p)
-        try s.iterator().asScala.exists(
-          _.getFileName.toString.startsWith("batch_id="))
-        finally s.close()
-      }
-      require(!legacy,
-        s"band index at $path has batch_id= partitions but no " +
-          "_graft_buckets marker — a pre-bucket layout; rebuild it with " +
-          "buildBandIndex before appending")
-      java.nio.file.Files.createDirectories(p)
-      writeBucketsMarker(path, BandBuckets)
-    }
-    java.nio.file.Files.readString(m).trim.toInt
-  }
 
   /** [[bandIndexSchema]] plus the physical `bucket` partition column —
     * the on-disk layout; readers project it away before serving rows. */
@@ -402,98 +308,6 @@ object Dedup {
     * bucket (32 tasks × 256 buckets of tiny files). */
   private[operators] def clusterForBandWrite(rows: DataFrame): DataFrame =
     rows.repartition(col("batch_id"), col("bucket"))
-
-  private[operators] def readBandIndexDisk(spark: SparkSession,
-      path: String): DataFrame =
-    spark.read.schema(bandIndexDiskSchema).parquet(path)
-
-  def readBandIndex(spark: SparkSession, path: String): DataFrame =
-    readBandIndexDisk(spark, path)
-      .select(col("doc_id"), col("sig"), col("band"), col("bkey"),
-        col("batch_id"))
-
-  /** TAKEDOWN through the persisted band index (d31 — r12 verdict #1):
-    * remove every band row of the given doc_ids by rewriting ONLY the
-    * batch partitions that contain them. A production training-data
-    * pipeline takes deletions (opt-out, license revocation) as routine
-    * input, and the only alternative on an append-only artifact is a
-    * corpus-sized rebuild. Cost is leaf-sized by construction:
-    *
-    *   1. one index probe finds the AFFECTED `(batch, bucket)` leaves —
-    *      a semi-join against the (broadcast) delete set, collected as a
-    *      bounded pair list (≤ #batches × [[BandBuckets]], the partition
-    *      manifest). The bucket key is a pure function of doc_id
-    *      ([[bandBucket]]), so a takedown of any document — including a
-    *      day-1 `base` document — touches ~1/[[BandBuckets]] of its
-    *      batch, never the whole partition (r14 verdict #1: the base
-    *      partition IS the initial corpus, and a whole-partition rewrite
-    *      there is corpus-sized at 100 TB);
-    *   2. survivors of those leaves only are anti-joined and rewritten
-    *      via dynamic-partition overwrite — untouched leaves are never
-    *      read past the probe, never rewritten;
-    *   3. leaves left EMPTY are removed explicitly: a dynamic overwrite
-    *      only replaces partitions present in the written data, so a
-    *      fully-deleted leaf would otherwise survive as its old files
-    *      (the classic delete-everything leak).
-    *
-    * The survivor set is localCheckpoint-ed (leaf-sized, bounded by the
-    * affected leaves) before the write because source and target are
-    * the same artifact — Spark refuses a read-from/overwrite-to cycle on
-    * lazy file lineage. Idempotent: a retried delete finds no affected
-    * leaves (or rewrites identical survivors) — d31 executes the
-    * retry under the oracle. Delete-then-probe == rebuild-without is
-    * certified cross-engine (d31); degenerate shapes (delete everything /
-    * nothing / twice) are pinned in ArtifactLifecycleSpec; the
-    * affected-bucket-sized byte cost is measured in
-    * `ScaleSmoke --band-delete`. In-place rewrite is non-atomic for a
-    * CONCURRENT reader — the versioned artifact
-    * ([[graft.sources.VersionedArtifact]]) is the publish mechanism for
-    * that; this is the single-writer maintenance form. */
-  def deleteFromBandIndex(spark: SparkSession, path: String,
-      docIds: DataFrame): Unit = {
-    val ids = broadcast(docIds.select(col("doc_id")).distinct())
-    bandBucketCount(path) // loud legacy-layout guard: marker required
-    val idx = readBandIndexDisk(spark, path)
-    // \u0001-joined pair key: unambiguous for any batch id (the artifact
-    // family already reserves U+0001 as a protocol delimiter elsewhere)
-    def pairKey(df: DataFrame): Column =
-      concat_ws("\u0001", df("batch_id"), df("bucket"))
-    val affected = idx.join(ids, Seq("doc_id"), "left_semi")
-      .select(col("batch_id"), col("bucket")).distinct()
-      .collect().map(r => (r.getString(0), r.getInt(1)))
-    if (affected.isEmpty) return
-    val affectedKeys = affected.map { case (b, k) => s"$b\u0001$k" }.toSeq
-    val survivors = idx
-      .filter(pairKey(idx).isin(affectedKeys: _*))
-      .join(ids, Seq("doc_id"), "left_anti")
-      // LAZY checkpoint (r16, the CC-loop mechanism): the kept-leaf
-      // distinct below consumes every survivor row, materializing the
-      // cache in ITS job — one job instead of an eager-checkpoint count
-      // plus the distinct. The write still reads only cached blocks,
-      // so the read-from/overwrite-to cycle stays broken.
-      .localCheckpoint(false)
-    val kept = survivors.select(col("batch_id"), col("bucket")).distinct()
-      .collect().map(r => (r.getString(0), r.getInt(1))).toSet
-    if (kept.nonEmpty)
-      clusterForBandWrite(survivors).write.partitionBy("batch_id", "bucket")
-        .option("partitionOverwriteMode", "dynamic")
-        .mode("overwrite").parquet(path)
-    for ((b, k) <- affected if !kept((b, k))) deletePartitionDir(
-      java.nio.file.Paths.get(path, s"batch_id=$b", s"bucket=$k"))
-  }
-
-  /** Recursive best-effort removal of one partition directory — the
-    * explicit leaf drop for partitions a dynamic overwrite cannot empty. */
-  private[operators] def deletePartitionDir(p: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    if (!java.nio.file.Files.exists(p)) return
-    val walk = java.nio.file.Files.walk(p)
-    try walk.sorted(java.util.Comparator.reverseOrder())
-      .iterator().asScala.foreach(f =>
-        try java.nio.file.Files.deleteIfExists(f)
-        catch { case _: Exception => () })
-    finally walk.close()
-  }
 
   /** The d14/d30 oracle: full from-scratch band rebuild, banded pair
     * join, signature-estimated Jaccard, restricted to pairs touching the
@@ -534,32 +348,17 @@ object Dedup {
       bands: Int = 8): DataFrame =
     incrementalPairsCore(bandTable(corpus, bands), bandTable(batch, bands))
 
-  /** d14's incremental probe reading the corpus side from a PERSISTED
-    * [[buildBandIndex]] artifact instead of re-deriving it (d30) — the
-    * form a 100 TB pipeline actually runs: the corpus band table was
-    * paid for once at build/append time and is PROBED in place every
-    * day; only the batch computes signatures. Same quadrant contract as
-    * [[incrementalLshPairs]] (new-vs-corpus + new-vs-new, never
-    * old-vs-old), and d30's oracle — the full from-scratch rebuild —
-    * certifies that probing the artifact equals probing a fresh
-    * derivation. */
-  def incrementalLshPairsFromIndex(spark: SparkSession, indexPath: String,
-      batch: DataFrame, bands: Int = 8): DataFrame =
-    incrementalPairsCore(
-      readBandIndex(spark, indexPath)
-        .select(col("doc_id"), col("sig"), col("band"), col("bkey")),
-      bandTable(batch, bands))
-
-  /** d30's probe over a COMMITTED [[VersionedBand]] snapshot (d33 — r13
-    * verdict #4): the corpus side resolves the artifact's CURRENT pointer
-    * (or a pinned `asOf` version) and reads only manifest-named leaves,
-    * so the daily dedup pass is safe to run WHILE maintenance writers
-    * append/compact/take down — it observes one committed snapshot, never
-    * a half-landed batch. This makes the versioned artifact the primary
-    * production dedup path; the in-place d28/d30 family remains the
-    * single-writer maintenance form. Same quadrant contract
-    * (new-vs-corpus + new-vs-new, never old-vs-old) and the same
-    * from-scratch rebuild oracle as d14/d30. */
+  /** d14's incremental probe reading the corpus side from the PERSISTED
+    * [[VersionedBand]] artifact instead of re-deriving it (d30, d33, d34)
+    * — the form a 100 TB pipeline actually runs: the corpus band table
+    * was paid for once at build/append time and is PROBED every day;
+    * only the batch computes signatures. The corpus side resolves the
+    * artifact's CURRENT pointer (or a pinned `asOf` version) and reads
+    * only manifest-named leaves, so the daily dedup pass is safe to run
+    * WHILE maintenance writers append/compact/take down — it observes
+    * one committed snapshot, never a half-landed batch. Same quadrant
+    * contract as [[incrementalLshPairs]] (new-vs-corpus + new-vs-new,
+    * never old-vs-old) and the same from-scratch rebuild oracle. */
   def incrementalLshPairsFromVersioned(spark: SparkSession, root: String,
       batch: DataFrame, bands: Int = 8,
       asOf: Option[String] = None): DataFrame =
@@ -1817,18 +1616,18 @@ object Dedup {
     // d14 re-derives the corpus band table inline because a registered
     // query owns no cross-run state; d30 closes that caveat by walking
     // the real production shape inside one query: build the d28 artifact
-    // from the day-1 corpus, then probe IT with the day-2 batch — the
-    // corpus side is read back from parquet (declared schema), never
-    // recomputed, so at 100 TB a daily dedup pass costs one batch
-    // signature pass + an index scan. Same oracle as d14 (the
+    // from the day-1 corpus, then probe its live snapshot with the day-2
+    // batch — the corpus side is read back from parquet (declared
+    // schema), never recomputed, so at 100 TB a daily dedup pass costs
+    // one batch signature pass + an index scan. Same oracle as d14 (the
     // from-scratch rebuild): one hash certifies that probing the on-disk
     // artifact produces the identical pair set.
     Q("d30_incremental_dedup_from_index", { (s, dir) =>
         val docs = Tables.load(s, dir, "documents")
-        val idx = graft.RunDirs.dir("d30").resolve("index").toString
-        buildBandIndex(docs.filter(pmod(col("doc_id"), lit(10)) =!= 0), idx,
+        val root = graft.RunDirs.freshDir("d30").toString
+        VersionedBand.build(docs.filter(pmod(col("doc_id"), lit(10)) =!= 0), root,
           buckets = 8)
-        incrementalLshPairsFromIndex(s, idx,
+        incrementalLshPairsFromVersioned(s, root,
           docs.filter(pmod(col("doc_id"), lit(10)) === 0))
           .orderBy(col("d1"), col("d2"))
       }, Some(incrementalPairsOracleSql)),
@@ -1836,30 +1635,24 @@ object Dedup {
     // ---- d28: LSH band-index lifecycle (build → append → compact) ------
     // The persisted-artifact arm of d14: day-1 index built from the
     // corpus (doc_id % 10 != 0), the day-2 batch (doc_id % 10 == 0)
-    // APPENDED from the batch alone, the landing dir compacted, and the
+    // APPENDED from the batch alone, the live version compacted, and the
     // read-back artifact returned. The oracle rebuilds the band table of
     // the FULL corpus from scratch — green == "append == rebuild",
     // certified on the artifact that actually hits disk (bkey is the md5
     // of the signature slice, so signature content is certified too).
     Q("d28_band_index_lifecycle", { (s, dir) =>
         val docs = Tables.load(s, dir, "documents")
-        // deterministic per-process dirs, overwritten per run (the r9
-        // createTempDirectory form leaked two dirs per invocation; the
-        // r10 fixed path raced concurrent runs — see RunDirs)
-        val base = graft.RunDirs.dir("d28")
-        val idxDir = base.resolve("index").toString
-        val compactDir = base.resolve("compact").toString
+        val root = graft.RunDirs.freshDir("d28").toString
         val batch = docs.filter(pmod(col("doc_id"), lit(10)) === 0)
-        buildBandIndex(docs.filter(pmod(col("doc_id"), lit(10)) =!= 0), idxDir,
+        VersionedBand.build(docs.filter(pmod(col("doc_id"), lit(10)) =!= 0), root,
           buckets = 8)
-        appendBandIndex(batch, idxDir, batchId = "day2")
-        // the RETRY: re-append the same batch id — dynamic partition
-        // overwrite makes it a replace, so the gate's hash certifies
-        // double-append == no-op on the on-disk artifact
-        appendBandIndex(batch, idxDir, batchId = "day2")
-        graft.sources.Formats.compactParquet(s, idxDir, compactDir,
-          schema = Some(bandIndexDiskSchema))
-        readBandIndex(s, compactDir)
+        VersionedBand.append(s, batch, root, "day2")
+        // the RETRY: re-append the same batch id — manifest membership
+        // makes it a no-op, so the gate's hash certifies double-append
+        // == single append on the on-disk artifact
+        VersionedBand.append(s, batch, root, "day2")
+        VersionedBand.compact(s, root)
+        VersionedBand.readLive(s, root)
           .select(col("doc_id"), col("band"), col("bkey"))
           .orderBy(col("doc_id"), col("band"))
       }, {
@@ -1877,24 +1670,25 @@ object Dedup {
     // ---- d31: takedown through the persisted band index ----------------
     // The deletion arm d28's append-only lifecycle was missing (r12
     // verdict #1): build day 1, append day 2, then DELETE a doc set that
-    // spans both batches — the rewrite touches only the partitions that
-    // contain deleted docs, and a fully-emptied partition is dropped,
-    // not leaked. The delete runs TWICE (retry idempotence, the d28
-    // convention), and the oracle is the from-scratch rebuild WITHOUT
-    // the deleted docs: one hash certifies delete-then-read ==
-    // rebuild-without on the artifact that actually hits disk.
+    // spans both batches — the rewrite touches only the (batch, bucket)
+    // leaves that contain deleted docs, and a fully-emptied leaf has no
+    // successor in the new manifest. The delete runs TWICE (the retry
+    // finds nothing and commits nothing), and the oracle is the
+    // from-scratch rebuild WITHOUT the deleted docs: one hash certifies
+    // delete-then-read == rebuild-without on the artifact that actually
+    // hits disk.
     Q("d31_band_index_delete", { (s, dir) =>
         val docs = Tables.load(s, dir, "documents")
-        val idx = graft.RunDirs.dir("d31").resolve("index").toString
-        buildBandIndex(docs.filter(pmod(col("doc_id"), lit(10)) =!= 0), idx,
+        val root = graft.RunDirs.freshDir("d31").toString
+        VersionedBand.build(docs.filter(pmod(col("doc_id"), lit(10)) =!= 0), root,
           buckets = 8)
-        appendBandIndex(docs.filter(pmod(col("doc_id"), lit(10)) === 0), idx,
-          batchId = "day2")
+        VersionedBand.append(s,
+          docs.filter(pmod(col("doc_id"), lit(10)) === 0), root, "day2")
         val dels = docs.filter(pmod(col("doc_id"), lit(7)) === 0)
           .select(col("doc_id"))
-        deleteFromBandIndex(s, idx, dels)
-        deleteFromBandIndex(s, idx, dels) // retried — finds nothing affected
-        readBandIndex(s, idx)
+        VersionedBand.delete(s, root, dels)
+        VersionedBand.delete(s, root, dels) // retried — finds nothing affected
+        VersionedBand.readLive(s, root)
           .select(col("doc_id"), col("band"), col("bkey"))
           .orderBy(col("doc_id"), col("band"))
       }, {

@@ -528,11 +528,6 @@ object GraphOps {
     * aggregate per round on the already-checkpointed set, no diff join.
     * At the fixed point the set is exactly the star forest
     * {(v, min(component)) : v not a root}. */
-  /** Measurement toggle for the per-round checkpoint mode (A/B tool —
-    * graft.tools.CcBench flips it inside one JVM so eager vs lazy compare
-    * under identical JIT state); production default is lazy. */
-  @volatile private[graft] var ccEagerCheckpoint = false
-
   def connectedComponentsStar(edges: DataFrame, maxIter: Int = 50): (DataFrame, Int) = {
     val canon = canonicalEdges(edges).persist()
     val nodes = canon.select(explode(array(col("u"), col("v"))).as("node"))
@@ -584,7 +579,7 @@ object GraphOps {
       // materialization job (and its extra pass over the cached blocks)
       // is gone. JobsPerRoundSpec pins the 1-job-per-round contract.
       val next = smallStar(largeStar(e)).distinct()
-        .localCheckpoint(ccEagerCheckpoint)
+        .localCheckpoint(false)
       val chk = next.agg(count(lit(1)), bit_xor(xxhash64(col("u"), col("v"))))
         .collect().head
       val cur = (chk.getLong(0), if (chk.isNullAt(1)) 0L else chk.getLong(1))

@@ -222,31 +222,22 @@ object Similarity {
 
   /** Home-cell assignment IN-ROW — (vec_id, e, nrm, cid) with zero
     * exchanges (r16 optimization, guide §2.4 "remove shuffles outright"):
-    * the write paths used `corpus.join(argmaxCell(cellScores(...)),
-    * "vec_id")`, which scores n·nlist rows, reduces them through a
-    * hash-aggregate EXCHANGE, and then re-attaches the (vec_id, cid)
-    * pairs to the corpus through a second join — at scale that join
-    * re-shuffles the whole corpus (the 64-dim vectors, not just keys) by
-    * vec_id solely to pick up one small column. The centroid table is
-    * broadcast-sized BY CONTRACT (it already rides a broadcast hash join
-    * in [[cellScores]]), so the argmax can instead FOLD over the
-    * broadcast centroid list per corpus row: same 6dp-rounded cosine,
-    * same max(cos, -cid) lexicographic tiebreak (struct comparison ==
-    * the aggregate's struct ordering), one narrow codegen pass, no
-    * per-row array materialization (`aggregate`, not `transform`+max).
-    * An empty centroid table assigns nothing — the inner-join semantics
-    * the degenerate-lifecycle specs pin — via the size filter. Every
-    * other corpus column rides through untouched (retrain's corpus
-    * carries batch lineage). */
-  /** Measurement toggle (A/B tool — graft.tools.AbBench flips it inside
-    * one JVM so old/new assignment compare under identical JIT state);
-    * production default is the in-row fold. */
-  @volatile private[graft] var assignInRow = true
-
+    * scoring n·nlist rows, reducing them through a hash-aggregate
+    * exchange and re-attaching the (vec_id, cid) pairs to the corpus
+    * through a second join re-shuffles the whole corpus (the 64-dim
+    * vectors, not just keys) by vec_id solely to pick up one small
+    * column. The centroid table is broadcast-sized BY CONTRACT
+    * ([[MaxNlist]]), so the argmax instead FOLDS over the broadcast
+    * centroid list per corpus row: same 6dp-rounded cosine, same
+    * max(cos, -cid) lexicographic tiebreak (struct comparison == the
+    * [[argmaxCell]] aggregate's struct ordering), one narrow codegen
+    * pass, no per-row array materialization (`aggregate`, not
+    * `transform`+max). An empty centroid table assigns nothing — the
+    * inner-join semantics the degenerate-lifecycle specs pin — via the
+    * size filter. Every other corpus column rides through untouched
+    * (retrain's corpus carries batch lineage). */
   private[graft] def assignCells(corpus: DataFrame,
       cents: DataFrame): DataFrame = {
-    if (!assignInRow)
-      return corpus.join(argmaxCell(cellScores(corpus, cents)), "vec_id")
     val centsArr = broadcast(cents.agg(
       collect_list(struct(col("cid"), col("ce"), col("cnrm"))).as("__cents")))
     val init = struct(lit(-2.0).as("ccos"), lit(Long.MinValue).as("ncid"))
@@ -263,184 +254,26 @@ object Similarity {
       .drop("__cents", "__best")
   }
 
-  /** PERSISTED IVF index build (s10) — the d28 artifact-lifecycle pattern
-    * for ANN: an index a pipeline builds ONCE and probes many times,
-    * instead of [[ivfTopK]]'s rebuild-per-query-set. Two parquet
-    * artifacts: `centroids` (broadcast-sized) and `postings`
-    * PARTITIONED BY cell id — the layout that makes a probe read only
-    * its `nprobe` cells' directories (dynamic partition pruning off the
-    * probe join, q54's mechanism; at nlist ≈ √n the probe scans
-    * nprobe/√n of the corpus instead of all of it). The write is
-    * mode=overwrite, so a retried build is idempotent.
-    *
-    * Day-2 lifecycle (s11): postings carry a second `batch_id` partition
-    * level (cid outermost — probe pruning keys on cid) so
-    * [[appendIvfIndex]] can land a later batch as a dynamic-partition
-    * overwrite of its own batch's leaves, d28's retry-idempotence
-    * mechanism. `centroidSource` is the production IVF training split:
-    * centroids are trained on a sample (or day 1) and FROZEN, and the
-    * full corpus is indexed against them — which is also exactly what
-    * makes append(day2) == rebuild(day1 ∪ day2, frozen cents): the
-    * per-vector assignment sees only its own vector and the frozen
-    * centroid table. */
-  def buildIvfIndex(emb: DataFrame, dir: String, nlist: Int = 8,
-      centroidSource: Option[DataFrame] = None,
-      batchId: String = "base"): Unit = {
-    graft.plans.GraftFunctions.register(emb.sparkSession)
-    val corpus = prepCorpus(emb)
-    val cents = prepCentroids(centroidSource.getOrElse(emb), nlist)
-    cents.write.mode("overwrite").parquet(s"$dir/centroids")
-    // in-row assignment (see [[assignCells]]): no argmax exchange, no
-    // corpus-shuffling join-back — the build is one narrow pass + write
-    assignCells(corpus, cents)
-      .select(col("vec_id"), col("e"), col("nrm"), col("cid"),
-        lit(batchId).as("batch_id"))
-      .write.mode("overwrite").partitionBy("cid", "batch_id")
-      .parquet(s"$dir/postings")
-  }
+  /** Cap on `nlist` for the persisted IVF artifact ([[VersionedIvf.build]]).
+    * [[assignCells]] collects the WHOLE centroid table into one
+    * broadcast row, and a row is one int-addressed byte region: Spark
+    * refuses any row or array past ~2 GiB (`Int.MaxValue` bytes). One
+    * centroid costs its 8·dim-byte vector plus ~48 bytes of struct and
+    * array headers, so at dim 4096 (above the common 384–3072 text
+    * embedding widths) 2^15 centroids are 32768 × 32816 B ≈ 1.07 GB —
+    * half the row limit, with room for the collect's buffer copy. At the
+    * nlist ≈ √n sizing rule that still serves a 10^9-vector corpus.
+    * [[VersionedIvf.retrain]] needs no check of its own: its centroids
+    * are the live cells, at most the build's nlist. */
+  private[graft] val MaxNlist = 1 << 15
 
-  /** Append a day-2 embedding batch into a [[buildIvfIndex]] artifact —
-    * the r11-verdict gap: a production corpus grows daily, and the ANN
-    * index must grow with it WITHOUT a corpus-sized rebuild. Cells are
-    * assigned against the FROZEN day-1 centroids (read back from the
-    * artifact — the build's quantizer is the contract), so the append
-    * costs one batch×centroids broadcast score pass + a batch-sized
-    * write: never re-reads, never re-shuffles the existing postings
-    * (ScaleSmoke --s11-only measures the slope). Retry-safe the d28 way:
-    * the batch's rows land as a DYNAMIC overwrite of their own
-    * (cid, batch_id=<batchId>) leaves — assignment is deterministic, so
-    * a re-run rewrites the identical leaves instead of double-appending.
-    * An empty batch writes nothing and leaves the artifact untouched. */
-  def appendIvfIndex(spark: org.apache.spark.sql.SparkSession,
-      newEmb: DataFrame, dir: String, batchId: String): Unit = {
-    // "base" is the build's reserved batch id (r12 ADVICE): a dynamic
-    // overwrite at batch_id=base would silently REPLACE day-1 postings
-    // for the batch's cells with only the new rows, and ivfIndexStats
-    // would misclassify the survivors' base/new split.
-    require(batchId != "base",
-      "appendIvfIndex: batch id \"base\" is reserved for the build")
-    graft.plans.GraftFunctions.register(spark)
-    val cents = spark.read.schema(centroidsSchema).parquet(s"$dir/centroids")
-    val corpus = prepCorpus(newEmb)
-    assignCells(corpus, cents) // in-row: no exchange, no join-back
-      .select(col("vec_id"), col("e"), col("nrm"), col("cid"),
-        lit(batchId).as("batch_id"))
-      .write.partitionBy("cid", "batch_id")
-      .option("partitionOverwriteMode", "dynamic")
-      .mode("overwrite").parquet(s"$dir/postings")
-  }
-
-  /** TAKEDOWN through the persisted IVF index (s15 — r12 verdict #1):
-    * remove the given vec_ids from the postings by rewriting ONLY the
-    * (cid, batch_id) leaves that contain them — the deletion sibling of
-    * [[appendIvfIndex]]'s leaf-sized growth path, and the one routine
-    * production input an append-only artifact can't take without a
-    * corpus-sized rebuild. Mechanism (the d31 band-index protocol):
-    * one index probe semi-joins the broadcast delete set to find the
-    * affected leaves (collected — bounded by the delete set, the
-    * probed-cells convention); survivors of those leaves only are
-    * anti-joined, localCheckpoint-ed (leaf-sized; source and target are
-    * the same files), and dynamically overwritten; leaves left EMPTY
-    * are dropped explicitly, because a dynamic overwrite only replaces
-    * partitions present in the written data. The CENTROIDS are model
-    * parameters, not member data — they persist through a delete (the
-    * frozen-quantizer contract append relies on); refreshing them after
-    * heavy deletion is [[graft.operators.VersionedIvf.retrain]]'s job.
-    * Idempotent under retry (second run finds no affected leaves);
-    * delete-then-probe == rebuild-without is certified cross-engine by
-    * s15, degenerate shapes by ArtifactLifecycleSpec. In-place rewrite
-    * is for a single maintenance writer; concurrent-reader atomicity is
-    * the versioned artifact's job ([[graft.operators.VersionedIvf]]). */
-  def deleteFromIvfIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String, vecIds: DataFrame): Unit = {
-    val ids = broadcast(vecIds.select(col("vec_id")).distinct())
-    val postings = spark.read.schema(postingsSchema).parquet(s"$dir/postings")
-    val affected = postings.join(ids, Seq("vec_id"), "left_semi")
-      .select(col("cid"), col("batch_id")).distinct()
-      .collect().map(r => (r.getLong(0), r.getString(1)))
-    if (affected.isEmpty) return
-    val leafPred = affected.map { case (c, b) =>
-      col("cid") === c && col("batch_id") === b }.reduce(_ || _)
-    val survivors = postings.filter(leafPred)
-      .join(ids, Seq("vec_id"), "left_anti")
-      // lazy checkpoint: the kept-leaf distinct materializes it (one job
-      // instead of two — the deleteFromBandIndex mechanism); the write
-      // still reads only cached blocks, never the files it overwrites
-      .localCheckpoint(false)
-    val kept = survivors.select(col("cid"), col("batch_id")).distinct()
-      .collect().map(r => (r.getLong(0), r.getString(1))).toSet
-    if (kept.nonEmpty)
-      survivors.write.partitionBy("cid", "batch_id")
-        .option("partitionOverwriteMode", "dynamic")
-        .mode("overwrite").parquet(s"$dir/postings")
-    for ((c, b) <- affected if !kept((c, b))) Dedup.deletePartitionDir(
-      java.nio.file.Paths.get(dir, "postings", s"cid=$c", s"batch_id=$b"))
-  }
-
-  /** IVF index HEALTH stats (s14) — the monitoring hook that closes the
-    * build → append → compact → probe lifecycle: per cell, the occupancy
-    * split between the base build and appended batches plus the summed
-    * member-to-centroid cosine (integer micro-units — the s04/g12
-    * cross-engine convention). This is what tells a pipeline its FROZEN
-    * centroids have drifted: appended vectors piling into few cells
-    * (occupancy skew) or falling affinity (sum_ccos_micro / n trending
-    * down vs the base) are the retrain signals, and both come straight
-    * off the persisted artifact — one postings scan + a centroid
-    * broadcast, no corpus access, no index mutation. */
-  def ivfIndexStats(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(spark)
-    val cents = spark.read.schema(centroidsSchema).parquet(s"$dir/centroids")
-    val postings = spark.read.schema(postingsSchema).parquet(s"$dir/postings")
-    postings.join(broadcast(cents), "cid")
-      .select(col("cid").cast("long").as("cid"), col("batch_id"),
-        round(VectorFns.dot(col("e"), col("ce")) / (col("nrm") * col("cnrm")), 6)
-          .as("ccos"))
-      .groupBy(col("cid"))
-      .agg(
-        sum(when(col("batch_id") === "base", 1L).otherwise(0L)).as("n_base"),
-        sum(when(col("batch_id") =!= "base", 1L).otherwise(0L)).as("n_new"),
-        sum(round(col("ccos") * 1000000, 0).cast("long")).as("sum_ccos_micro"))
-  }
-
-  /** Compact an IVF index into `outDir` — the lake-maintenance pass for
-    * s11's growth path (d28's compaction arm, layout-aware): daily
-    * appends leave one small file per (cid, batch) leaf, so after N days
-    * a probe of `nprobe` cells opens nprobe·N footers. The compactor
-    * rewrites postings clustered ONE TASK PER CELL (`repartition(cid)` →
-    * `partitionBy(cid)`), collapsing every cell to a single file while
-    * KEEPING the cid directory layout the probe's partition pruning
-    * needs; batch lineage survives as a data column (the d28
-    * compacted-copy convention — the live index's partition listing is
-    * the manifest, a compacted copy carries it in-row). Row-identical by
-    * construction: keys are never touched, and s12's oracle certifies
-    * probe-after-compact == rebuild-and-probe cross-engine. */
-  def compactIvfIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String, outDir: String): Unit = {
-    // containment must be checked BOTH ways (r12 ADVICE): outDir inside
-    // dir corrupts the index being read; dir inside outDir means the
-    // mode("overwrite") writes clobber the source mid-read.
-    val dirC = new java.io.File(dir).getCanonicalPath + java.io.File.separator
-    val outC = new java.io.File(outDir).getCanonicalPath + java.io.File.separator
-    require(!outC.startsWith(dirC),
-      s"compactIvfIndex: outDir ($outDir) must not be nested inside the index ($dir)")
-    require(!dirC.startsWith(outC),
-      s"compactIvfIndex: the index ($dir) must not be nested inside outDir ($outDir)")
-    spark.read.schema(centroidsSchema).parquet(s"$dir/centroids")
-      .write.mode("overwrite").parquet(s"$outDir/centroids")
-    spark.read.schema(postingsSchema).parquet(s"$dir/postings")
-      .repartition(col("cid"))
-      .write.mode("overwrite").partitionBy("cid").parquet(s"$outDir/postings")
-  }
-
-  /** Declared layout of the [[buildIvfIndex]] artifacts — the index is a
-    * CONTRACT, not something a reader infers. Reading with these schemas
-    * (instead of inference) is what keeps a probe alive on the day-2
-    * degenerate shape: an empty corpus makes `partitionBy` write a
-    * fileless directory, and schema inference over zero files throws
-    * `UNABLE_TO_INFER_SCHEMA` (the round-11 EmptyInputSpec red). It also
-    * pins the partition-column type: inference would read small cell-id
-    * directory names back as INT while the builder wrote LONG cell ids. */
+  /** Declared layout of the IVF artifact's centroids and postings
+    * ([[VersionedIvf]]) — the index is a CONTRACT, not something a
+    * reader infers. Reading with these schemas (instead of inference)
+    * is what keeps a probe alive on the degenerate shape: an empty
+    * corpus makes `partitionBy` write a fileless directory, and schema
+    * inference over zero files throws `UNABLE_TO_INFER_SCHEMA` (the
+    * round-11 EmptyInputSpec red). */
   private[operators] val centroidsSchema = org.apache.spark.sql.types.StructType(Seq(
     org.apache.spark.sql.types.StructField("cid", org.apache.spark.sql.types.LongType),
     org.apache.spark.sql.types.StructField("ce",
@@ -454,62 +287,10 @@ object Similarity {
     org.apache.spark.sql.types.StructField("cid", org.apache.spark.sql.types.LongType),
     org.apache.spark.sql.types.StructField("batch_id", org.apache.spark.sql.types.StringType)))
 
-  /** Probe a [[buildIvfIndex]] artifact: same query protocol, scoring,
-    * rounding, and tie-breaks as [[ivfTopK]], so probe-from-artifact ==
-    * rebuild-and-probe exactly — which s10 certifies against s05's own
-    * oracle (the artifact round trip is parquet doubles, lossless).
-    *
-    * The probed-cell set is COLLECTED (one tiny job: ≤ |queries|·nprobe
-    * cell ids) and pruned STATICALLY via `isin` on the partition column.
-    * Dynamic partition pruning is NOT trusted here, by measurement: the
-    * probe side carries a window + a local query table, the DPP
-    * subquery can't reuse that broadcast, and Spark silently planted
-    * `dynamicpruningexpression(true)` — a full 200k-record scan wearing
-    * a pruning expression (the smoke arm's records ledger caught it).
-    * An index PROBE's query set is small by contract — that's what
-    * makes it a probe — so the eager collect is the knnJoin `knownBytes`
-    * convention: construction runs one bounded job, and the scan prunes
-    * to the probed directories deterministically in every Spark version
-    * and under AQE. */
-  def probeIvfIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
-      queries: DataFrame, k: Int, nprobe: Int = 2): DataFrame =
-    probeIvfIndexFiltered(spark, dir, queries, k, nprobe, lit(true))
-
-  /** FILTERED vector search (s13): top-k among index vectors passing a
-    * predicate — the attribute-filtered ANN every production vector
-    * store headlines (category/tenant/date-scoped retrieval). The filter
-    * applies to the POSTINGS rows BEFORE ranking (pre-filtering), never
-    * to the ranked output: post-filtering a top-k returns < k rows
-    * whenever the filter is selective, which is the classic filtered-ANN
-    * bug. Cell pruning is untouched — the filter composes with the
-    * partition IN-list, so a scoped probe still reads only its nprobe
-    * cells' directories and drops ineligible rows at the scan. The
-    * recall caveat is structural and documented: under a selective
-    * filter the probed cells may hold fewer than k eligible candidates,
-    * and production raises nprobe with filter selectivity (the same
-    * knob/recall trade ScaleSmoke's curve measures unfiltered). */
-  def probeIvfIndexFiltered(spark: org.apache.spark.sql.SparkSession,
-      dir: String, queries: DataFrame, k: Int, nprobe: Int,
-      postingsFilter: org.apache.spark.sql.Column): DataFrame = {
-    graft.plans.GraftFunctions.register(spark)
-    val cents = spark.read.schema(centroidsSchema).parquet(s"$dir/centroids")
-    val postings = spark.read.schema(postingsSchema).parquet(s"$dir/postings")
-    val (qs, qprobe) = queryProbe(cents, queries, nprobe,
-      postings.schema("cid").dataType)
-    val probedCells = qprobe.select(col("cid")).distinct()
-      .collect().map(_.get(0))
-    rankProbe(postings.filter(col("cid").isin(probedCells: _*)),
-      qs, qprobe, k, postingsFilter)
-  }
-
-  /** Query-side probe protocol shared by the plain and VERSIONED probes
-    * ([[VersionedIvf.probe]]): the (query, probed-cell) pairs ranked with
-    * s05's exact conventions. `cidType` matches the postings side's
-    * cid type (an INFERRED partition column reads back as int for small
-    * cell ids) — casting the QUERY side keeps partition pruning alive. */
+  /** Query-side probe protocol of [[VersionedIvf.probe]]: the
+    * (query, probed-cell) pairs ranked with s05's exact conventions. */
   private[operators] def queryProbe(cents: DataFrame, queries: DataFrame,
-      nprobe: Int, cidType: org.apache.spark.sql.types.DataType)
-      : (DataFrame, DataFrame) = {
+      nprobe: Int): (DataFrame, DataFrame) = {
     val qs = queries.select(col("vec_id").as("qid"),
         VectorFns.toDouble(col("embedding")).as("qe"))
       .filter(VectorFns.nonZero(col("qe")))
@@ -520,14 +301,13 @@ object Similarity {
         round(VectorFns.dot(col("qe"), col("ce")) / (col("qnrm") * col("cnrm")), 6)
           .as("ccos"))
       .withColumn("pr", row_number().over(wp)).filter(col("pr") <= nprobe)
-      .select(col("qid"), col("cid").cast(cidType).as("cid"))
+      .select(col("qid"), col("cid"))
     (qs, qprobe)
   }
 
-  /** Candidate ranking shared by the plain and versioned probes —
-    * `postings` arrives already restricted to the probed cells (isin on
-    * the partition column, or the versioned manifest's explicit leaf
-    * selection). One definition of the scoring/tie-break protocol. */
+  /** Candidate ranking of [[VersionedIvf.probe]] — `postings` arrives
+    * already restricted to the probed cells (the manifest's explicit
+    * leaf selection). One definition of the scoring/tie-break protocol. */
   private[operators] def rankProbe(postings: DataFrame, qs: DataFrame,
       qprobe: DataFrame, k: Int,
       postingsFilter: org.apache.spark.sql.Column): DataFrame = {
@@ -949,19 +729,19 @@ object Similarity {
 
     // ---- s10: PERSISTED IVF index lifecycle -----------------------------
     // The d28 pattern for ANN: build the index artifact once (centroids +
-    // cid-PARTITIONED postings under this process's RunDirs), probe it
-    // with s05's exact protocol, and certify probe-from-artifact against
-    // s05's own full-replay oracle — one hash proves the artifact round
-    // trip loses nothing AND the partitioned layout serves the identical
-    // ranking. The probe's postings scan carries a dynamic-partition-
-    // pruning filter from the broadcast probe join (PlanSpec pins it), so
-    // a probe reads nprobe cells' directories, not the corpus.
+    // cid-partitioned postings under this process's RunDirs, published as
+    // a VersionedIvf snapshot), probe it with s05's exact protocol, and
+    // certify probe-from-artifact against s05's own full-replay oracle —
+    // one hash proves the artifact round trip loses nothing AND the
+    // partitioned layout serves the identical ranking. The probe reads
+    // only the manifest leaves of its nprobe cells (PlanSpec pins it),
+    // not the corpus.
     Q("s10_ivf_index_lifecycle",
       (s, dir) => {
         val emb = Tables.load(s, dir, "embeddings")
-        val idx = graft.RunDirs.dir("s10").toString
-        buildIvfIndex(emb, idx, nlist = 8)
-        probeIvfIndex(s, idx, emb.filter(col("vec_id") < 5), k = 10, nprobe = 2)
+        val root = graft.RunDirs.freshDir("s10").toString
+        VersionedIvf.build(emb, root, nlist = 8)
+        VersionedIvf.probe(s, root, emb.filter(col("vec_id") < 5), k = 10, nprobe = 2)
           .orderBy(col("qid"), col("rank"))
       },
       Some(ivfTopKOracleSql)),
@@ -969,9 +749,9 @@ object Similarity {
     // ---- s11: INCREMENTAL IVF index maintenance --------------------------
     // The day-2 story for s10 (r11 verdict's #1 missing piece): build the
     // index on day 1 (vec_id % 4 <> 3), APPEND day 2 against the FROZEN
-    // day-1 centroids (one batch-sized score pass + a dynamic-partition
-    // overwrite of the batch's own leaves — the d28 retry mechanism,
-    // exercised here by running the append TWICE), then probe the grown
+    // day-1 centroids (one batch-sized score pass + a batch-sized segment
+    // committed by manifest; the retry — running the append TWICE — is a
+    // manifest-membership no-op), then probe the grown
     // artifact. The oracle replays rebuild-on-the-union with the same
     // frozen centroids — append == rebuild holds exactly because cell
     // assignment is a pure per-vector function of the frozen centroid
@@ -982,11 +762,11 @@ object Similarity {
         val emb = Tables.load(s, dir, "embeddings")
         val day1 = emb.filter(col("vec_id") % 4 =!= 3)
         val day2 = emb.filter(col("vec_id") % 4 === 3)
-        val idx = graft.RunDirs.dir("s11").toString
-        buildIvfIndex(day1, idx, nlist = 8)
-        appendIvfIndex(s, day2, idx, batchId = "day2")
-        appendIvfIndex(s, day2, idx, batchId = "day2") // retried — idempotent
-        probeIvfIndex(s, idx, emb.filter(col("vec_id") < 5), k = 10, nprobe = 2)
+        val root = graft.RunDirs.freshDir("s11").toString
+        VersionedIvf.build(day1, root, nlist = 8)
+        VersionedIvf.append(s, day2, root, "day2")
+        VersionedIvf.append(s, day2, root, "day2") // retried — manifest no-op
+        VersionedIvf.probe(s, root, emb.filter(col("vec_id") < 5), k = 10, nprobe = 2)
           .orderBy(col("qid"), col("rank"))
       },
       Some(ivfOracleSql("vec_id < 8 AND vec_id % 4 <> 3"))),
@@ -994,8 +774,9 @@ object Similarity {
     // ---- s12: IVF index compaction ---------------------------------------
     // The maintenance pass s11's growth path accumulates toward: after a
     // build + append the postings carry one file per (cid, batch) leaf;
-    // compaction rewrites them one-file-per-cell WITHOUT losing the cid
-    // layout partition pruning keys on. Probe-after-compact must equal
+    // compaction rewrites the live version one-file-per-cell WITHOUT
+    // losing the cid layout the probe's leaf selection keys on, and
+    // publishes it as a swap. Probe-after-compact must equal
     // rebuild-and-probe — same oracle as s11, so one hash certifies the
     // compactor moved every row and changed none.
     Q("s12_ivf_compaction",
@@ -1003,13 +784,11 @@ object Similarity {
         val emb = Tables.load(s, dir, "embeddings")
         val day1 = emb.filter(col("vec_id") % 4 =!= 3)
         val day2 = emb.filter(col("vec_id") % 4 === 3)
-        val base = graft.RunDirs.dir("s12")
-        val idx = base.resolve("index").toString
-        val compacted = base.resolve("compact").toString
-        buildIvfIndex(day1, idx, nlist = 8)
-        appendIvfIndex(s, day2, idx, batchId = "day2")
-        compactIvfIndex(s, idx, compacted)
-        probeIvfIndex(s, compacted, emb.filter(col("vec_id") < 5),
+        val root = graft.RunDirs.freshDir("s12").toString
+        VersionedIvf.build(day1, root, nlist = 8)
+        VersionedIvf.append(s, day2, root, "day2")
+        VersionedIvf.compact(s, root)
+        VersionedIvf.probe(s, root, emb.filter(col("vec_id") < 5),
             k = 10, nprobe = 2)
           .orderBy(col("qid"), col("rank"))
       },
@@ -1022,7 +801,7 @@ object Similarity {
     // contract is at-least-once — a failed trigger REPLAYS its batch
     // with the same id — and the VERSIONED artifact (r13 verdict #2: a
     // live writer must give concurrent probes snapshot isolation, which
-    // the in-place dynamic-overwrite append cannot) makes that replay a
+    // an overwrite-in-place append cannot) makes that replay a
     // manifest-membership no-op: exactly-once that survives compaction,
     // plus CAS commits so the appender can race a maintenance writer.
     // This registered form splits day 2 into two content-derived
@@ -1032,8 +811,7 @@ object Similarity {
     // == rebuild. StreamingSpec runs the real readStream → foreachBatch
     // form with a mid-stream retry and asserts the replay is a manifest
     // no-op (version count unchanged) and the artifact equals the
-    // rebuild. The in-place append keeps its registered coverage via
-    // s10–s15.
+    // rebuild.
     Q("st16_stream_index_maintenance",
       (s, dir) => {
         val emb = Tables.load(s, dir, "embeddings")
@@ -1057,9 +835,9 @@ object Similarity {
     Q("s13_ivf_filtered_search",
       (s, dir) => {
         val emb = Tables.load(s, dir, "embeddings")
-        val idx = graft.RunDirs.dir("s13").toString
-        buildIvfIndex(emb, idx, nlist = 8)
-        probeIvfIndexFiltered(s, idx, emb.filter(col("vec_id") < 5), k = 10,
+        val root = graft.RunDirs.freshDir("s13").toString
+        VersionedIvf.build(emb, root, nlist = 8)
+        VersionedIvf.probeFiltered(s, root, emb.filter(col("vec_id") < 5), k = 10,
             nprobe = 2, col("vec_id") % 2 === 0)
           .orderBy(col("qid"), col("rank"))
       },
@@ -1075,10 +853,10 @@ object Similarity {
     Q("s14_ivf_index_stats",
       (s, dir) => {
         val emb = Tables.load(s, dir, "embeddings")
-        val idx = graft.RunDirs.dir("s14").toString
-        buildIvfIndex(emb.filter(col("vec_id") % 4 =!= 3), idx, nlist = 8)
-        appendIvfIndex(s, emb.filter(col("vec_id") % 4 === 3), idx, "day2")
-        ivfIndexStats(s, idx).orderBy(col("cid"))
+        val root = graft.RunDirs.freshDir("s14").toString
+        VersionedIvf.build(emb.filter(col("vec_id") % 4 =!= 3), root, nlist = 8)
+        VersionedIvf.append(s, emb.filter(col("vec_id") % 4 === 3), root, "day2")
+        VersionedIvf.stats(s, root).orderBy(col("cid"))
       },
       Some("""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings
              |        WHERE list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]) > 0),
@@ -1103,21 +881,23 @@ object Similarity {
     // The deletion arm of the s10–s12 lifecycle (r12 verdict #1): build
     // day 1 with frozen centroids, append day 2, then DELETE a vector
     // set spanning both batches and probe the survivor index. Only the
-    // leaves containing deleted vectors are rewritten (emptied leaves
-    // dropped); the delete runs TWICE (retry idempotence). The oracle
+    // leaves containing deleted vectors are rewritten, into a fresh
+    // segment (an emptied leaf has no successor in the new manifest);
+    // the delete runs TWICE (the retry finds nothing and commits
+    // nothing). The oracle
     // replays rebuild-on-the-union-without-the-deleted against the same
     // frozen day-1 centroids — one hash certifies leaf-localized delete
     // == rebuild-without, on the artifact that hits disk.
     Q("s15_ivf_delete",
       (s, dir) => {
         val emb = Tables.load(s, dir, "embeddings")
-        val idx = graft.RunDirs.dir("s15").toString
-        buildIvfIndex(emb.filter(col("vec_id") % 4 =!= 3), idx, nlist = 8)
-        appendIvfIndex(s, emb.filter(col("vec_id") % 4 === 3), idx, "day2")
+        val root = graft.RunDirs.freshDir("s15").toString
+        VersionedIvf.build(emb.filter(col("vec_id") % 4 =!= 3), root, nlist = 8)
+        VersionedIvf.append(s, emb.filter(col("vec_id") % 4 === 3), root, "day2")
         val dels = emb.filter(col("vec_id") % 7 === 0).select(col("vec_id"))
-        deleteFromIvfIndex(s, idx, dels)
-        deleteFromIvfIndex(s, idx, dels) // retried — finds nothing affected
-        probeIvfIndex(s, idx, emb.filter(col("vec_id") < 5), k = 10, nprobe = 2)
+        VersionedIvf.delete(s, root, dels)
+        VersionedIvf.delete(s, root, dels) // retried — finds nothing affected
+        VersionedIvf.probe(s, root, emb.filter(col("vec_id") < 5), k = 10, nprobe = 2)
           .orderBy(col("qid"), col("rank"))
       },
       Some(ivfOracleSql("vec_id < 8 AND vec_id % 4 <> 3",

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.functions.VectorFns
 
 /** The IVF ANN index under VERSION-POINTER commits (r12 verdict #2/#3/#8)
-  * — the concurrent-reader-safe sibling of the in-place s10–s15 lifecycle.
+  * — the one persisted IVF artifact; s10–s17 and st16 all run on it.
   *
   * Every operation (build / append / delete / compact / retrain) lands a
   * COMPLETE new snapshot — immutable data dirs plus a manifest naming
@@ -49,25 +49,21 @@ import graft.functions.VectorFns
   * in-row. The `batch` lines make append EXACTLY-ONCE by manifest
   * membership — a replayed foreachBatch trigger whose id is already
   * committed is a no-op even after a compaction has rewritten the
-  * physical leaves (the in-place index can't offer that: its only
-  * idempotence is the dynamic-overwrite rewrite itself). A full
-  * [[build]] over an existing artifact CARRIES FORWARD the committed
-  * batch ids (r13 ADVICE), so exactly-once survives a rebuild whose
-  * corpus already contains those batches' rows.
+  * physical leaves. A full [[build]] over an existing artifact CARRIES
+  * FORWARD the committed batch ids (r13 ADVICE), so exactly-once
+  * survives a rebuild whose corpus already contains those batches' rows.
   *
   * Scale shape: append/delete write only batch/affected-leaf-sized data;
   * a new version's manifest REFERENCES the untouched leaves instead of
   * copying them (the Iceberg/Delta snapshot shape), so commit cost is
   * metadata-sized (measured in `ScaleSmoke --s16-only`). A probe reads
   * the nprobe probed cells' leaf dirs by explicit manifest selection —
-  * stronger than catalog partition pruning (nothing to mis-estimate) and
-  * exactly the collected-IN-list convention the in-place probe already
-  * pins. Reads accept `asOf` — a published version name — for pinned
+  * stronger than catalog partition pruning (nothing to mis-estimate).
+  * Reads accept `asOf` — a published version name — for pinned
   * (time-travel) scans: a long-running consumer keeps one snapshot while
   * maintenance publishes past it, protected by vacuum's grace window.
-  * Reference for semantics: the in-place operators in [[Similarity]];
-  * s16/s17 certify the whole versioned chain against the same
-  * frozen-centroid rebuild oracle.
+  * s10–s17 certify every operation against the frozen-centroid rebuild
+  * oracle.
   */
 object VersionedIvf {
 
@@ -219,14 +215,20 @@ object VersionedIvf {
     * postings land under the new version's data dirs, then the pointer
     * flips (CAS against the pre-build version — a rebuild that lost a
     * race to another writer surfaces [[CommitConflictException]]).
-    * `centroidSource` is the frozen-training split, as in
-    * [[Similarity.buildIvfIndex]]. On a REBUILD over an existing
+    * `centroidSource` is the production IVF training split: centroids
+    * are trained on a sample (or day 1) and FROZEN, and the full corpus
+    * is indexed against them — which is what makes append(day2) ==
+    * rebuild(day1 ∪ day2, frozen cents). `nlist` is capped at
+    * [[Similarity.MaxNlist]]. On a REBUILD over an existing
     * artifact the prior manifest's committed batch ids carry forward
     * (r13 ADVICE): a replayed append of a batch whose rows the rebuild
     * corpus already contains stays a no-op. Returns the committed
     * version. */
   def build(emb: DataFrame, root: String, nlist: Int = 8,
       centroidSource: Option[DataFrame] = None): String = {
+    require(nlist <= Similarity.MaxNlist,
+      s"nlist $nlist exceeds the cap MaxNlist = ${Similarity.MaxNlist}: the " +
+        "centroid table rides one broadcast row, bounded at ~2 GiB")
     val spark = emb.sparkSession
     graft.plans.GraftFunctions.register(spark)
     val prior = currentSnapshot(root)
@@ -359,8 +361,9 @@ object VersionedIvf {
     ver
   }
 
-  /** Compaction as a REAL SWAP (the r12 gap: the in-place compactor
-    * writes a copy with no publish protocol): the live postings rewrite
+  /** Compaction as a REAL SWAP (s12 — daily appends leave one small file
+    * per (cid, batch) leaf, so after N days a probe of `nprobe` cells
+    * opens nprobe·N footers): the live postings rewrite
     * one-task-per-cell into a single segment — one file per cell, batch
     * lineage in-row — and the pointer flips to it. Probes in flight keep
     * the old leaves; the superseded dirs wait for [[vacuum]]. Commits by
@@ -436,9 +439,9 @@ object VersionedIvf {
     * resolves once, probed cells select manifest entries explicitly
     * (nprobe cells' dirs read, nothing else), and the ranking is
     * [[Similarity.rankProbe]] — identical scoring, rounding and
-    * tie-breaks, so versioned probe == in-place probe == rebuild oracle
-    * (s16). A pinned reader is unaffected by concurrent publishes and by
-    * vacuum inside the retention grace window. */
+    * tie-breaks, so probe == rebuild oracle (s10, s16). A pinned reader
+    * is unaffected by concurrent publishes and by vacuum inside the
+    * retention grace window. */
   def probe(spark: SparkSession, root: String, queries: DataFrame, k: Int,
       nprobe: Int = 2, asOf: Option[String] = None): DataFrame =
     probeFiltered(spark, root, queries, k, nprobe, lit(true), asOf)
@@ -449,16 +452,19 @@ object VersionedIvf {
     graft.plans.GraftFunctions.register(spark)
     val m = resolveManifest(root, asOf)
     val cents = readCentroids(spark, root, m)
-    val (qs, qprobe) = Similarity.queryProbe(cents, queries, nprobe,
-      org.apache.spark.sql.types.LongType)
+    val (qs, qprobe) = Similarity.queryProbe(cents, queries, nprobe)
     val probed = qprobe.select(col("cid")).distinct()
       .collect().map(_.getLong(0)).toSet
     val postings = readLeaves(spark, root, m.leaves.filter(l => probed(l.cid)))
     Similarity.rankProbe(postings, qs, qprobe, k, postingsFilter)
   }
 
-  /** Health stats of the live version — [[Similarity.ivfIndexStats]]'s
-    * aggregation over the manifest-resolved postings. */
+  /** IVF index HEALTH stats (s14) — the drift monitor: per cell, the
+    * occupancy split between the base build and appended batches plus
+    * the summed member-to-centroid cosine (integer micro-units — the
+    * s04/g12 cross-engine convention), over the live manifest's
+    * postings. Appended vectors piling into few cells or falling
+    * affinity are the [[retrain]] signals. */
   def stats(spark: SparkSession, root: String): DataFrame = {
     graft.plans.GraftFunctions.register(spark)
     val m = liveSnapshot(root)._2

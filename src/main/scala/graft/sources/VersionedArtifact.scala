@@ -14,11 +14,11 @@ final class CommitConflictException(msg: String)
 
 /** Version-pointer commits for filesystem artifacts (r12 verdict #2).
   *
-  * The d28/s10 artifact family publishes in place: an append is a
-  * dynamic-partition overwrite and a compaction writes a copy, so a probe
-  * CONCURRENT with a writer — or a crash mid-commit — can observe a
-  * partially-landed batch. Retry-idempotence protects the writer; nothing
-  * protects the reader. The standard public-knowledge fix (the
+  * An artifact rewritten in place — an append as a partition overwrite,
+  * a compaction as a copy — lets a probe CONCURRENT with a writer, or a
+  * crash mid-commit, observe a partially-landed batch: retry-idempotence
+  * protects the writer, nothing protects the reader. The standard
+  * public-knowledge fix (the
   * Iceberg/Delta commit shape) is snapshot isolation via an atomic
   * pointer: a writer lands a COMPLETE new version (immutable data files +
   * a manifest enumerating them), then flips one pointer file with an

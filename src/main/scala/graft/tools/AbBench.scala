@@ -33,18 +33,8 @@ object AbBench {
     spark.sparkContext.setLogLevel("WARN")
     val saved = overrides.map { case (k, _) =>
       (k, spark.conf.getOption(k)) }
-    // keys starting with "graft." flip in-engine measurement toggles
-    // instead of SQLConf entries (code-path A/B under one JVM)
-    def setFlag(k: String, v: Boolean): Unit = k match {
-      case "graft.assignInRow" =>
-        graft.operators.Similarity.assignInRow = v
-      case "graft.ccEagerCheckpoint" =>
-        graft.operators.GraphOps.ccEagerCheckpoint = v
-      case other => throw new IllegalArgumentException(s"unknown flag $other")
-    }
     def setMode(on: Boolean): Unit = overrides.foreach { case (k, v) =>
-      if (k.startsWith("graft.")) setFlag(k, if (on) v.toBoolean else !v.toBoolean)
-      else if (on) spark.conf.set(k, v)
+      if (on) spark.conf.set(k, v)
       else saved.toMap.apply(k) match {
         case Some(sv) => spark.conf.set(k, sv)
         case None => spark.conf.unset(k)

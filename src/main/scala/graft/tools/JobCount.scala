@@ -29,12 +29,6 @@ object JobCount {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // measurement toggles (same registry as AbBench) via env, so before/
-    // after job counts can be taken from one build
-    sys.env.get("GRAFT_ASSIGN_IN_ROW").foreach(v =>
-      graft.operators.Similarity.assignInRow = v.toBoolean)
-    sys.env.get("GRAFT_CC_EAGER_CHECKPOINT").foreach(v =>
-      graft.operators.GraphOps.ccEagerCheckpoint = v.toBoolean)
     val counter = new java.util.concurrent.atomic.AtomicLong
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit =

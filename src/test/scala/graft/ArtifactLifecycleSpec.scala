@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Dedup, Similarity, TextOps}
+import graft.operators.{Dedup, TextOps, VersionedBand, VersionedIvf}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -29,171 +29,193 @@ class ArtifactLifecycleSpec extends AnyFunSuite {
   private def tmp(tag: String): String =
     java.nio.file.Files.createTempDirectory(tag).toString
 
-  private def probeRows(dir: String, queries: DataFrame): Array[_] =
-    Similarity.probeIvfIndex(spark, dir, queries, k = 5, nprobe = 2).collect()
+  private def probeRows(root: String, queries: DataFrame): Array[_] =
+    VersionedIvf.probe(spark, root, queries, k = 5, nprobe = 2).collect()
 
   // ---- IVF index (s10 / s11) -------------------------------------------
 
   test("IVF: build on an empty corpus, probe with real queries — empty result, no throw") {
-    val idx = tmp("alc-ivf-empty")
-    Similarity.buildIvfIndex(emb.limit(0), idx, nlist = 8)
-    assert(probeRows(idx, emb.filter($"vec_id" < 3)).isEmpty)
+    val root = tmp("alc-ivf-empty")
+    VersionedIvf.build(emb.limit(0), root, nlist = 8)
+    assert(probeRows(root, emb.filter($"vec_id" < 3)).isEmpty)
   }
 
   test("IVF: append an EMPTY batch — artifact byte-identical, probe unchanged") {
-    val idx = tmp("alc-ivf-appendempty")
-    Similarity.buildIvfIndex(emb, idx, nlist = 8)
-    val before = probeRows(idx, emb.filter($"vec_id" < 3)).toSeq
-    Similarity.appendIvfIndex(spark, emb.limit(0), idx, batchId = "day2")
-    assert(probeRows(idx, emb.filter($"vec_id" < 3)).toSeq === before)
+    val root = tmp("alc-ivf-appendempty")
+    VersionedIvf.build(emb, root, nlist = 8)
+    val before = probeRows(root, emb.filter($"vec_id" < 3)).toSeq
+    val leavesBefore = VersionedIvf.currentManifest(root).get.leaves
+    VersionedIvf.append(spark, emb.limit(0), root, batchId = "day2")
+    // the commit records the batch id but serves exactly the same leaves
+    assert(VersionedIvf.currentManifest(root).get.leaves === leavesBefore)
+    assert(probeRows(root, emb.filter($"vec_id" < 3)).toSeq === before)
   }
 
   test("IVF: probe with ZERO queries — empty result, no throw") {
-    val idx = tmp("alc-ivf-zeroq")
-    Similarity.buildIvfIndex(emb, idx, nlist = 8)
-    assert(probeRows(idx, emb.limit(0)).isEmpty)
+    val root = tmp("alc-ivf-zeroq")
+    VersionedIvf.build(emb, root, nlist = 8)
+    assert(probeRows(root, emb.limit(0)).isEmpty)
   }
 
   test("IVF: append into an EMPTY build — no centroids means no postings, probe empty") {
     // a build that saw zero rows trained zero centroids; a later batch
     // has nothing to be assigned against, so the append is a structured
-    // no-op (the pipeline's real fix is re-training — which is buildIvfIndex
-    // itself) rather than a crash or a silently self-centroided index
-    val idx = tmp("alc-ivf-appendinto")
-    Similarity.buildIvfIndex(emb.limit(0), idx, nlist = 8)
-    Similarity.appendIvfIndex(spark, emb, idx, batchId = "day2")
-    assert(probeRows(idx, emb.filter($"vec_id" < 3)).isEmpty)
+    // no-op (the pipeline's real fix is a rebuild) rather than a crash or
+    // a silently self-centroided index
+    val root = tmp("alc-ivf-appendinto")
+    VersionedIvf.build(emb.limit(0), root, nlist = 8)
+    VersionedIvf.append(spark, emb, root, batchId = "day2")
+    assert(VersionedIvf.livePostings(spark, root).count() === 0L)
+    assert(probeRows(root, emb.filter($"vec_id" < 3)).isEmpty)
   }
 
   test("IVF: stats over an EMPTY index — empty result, no throw") {
-    val idx = tmp("alc-ivf-stats-empty")
-    Similarity.buildIvfIndex(emb.limit(0), idx, nlist = 8)
-    assert(Similarity.ivfIndexStats(spark, idx).collect().isEmpty)
+    val root = tmp("alc-ivf-stats-empty")
+    VersionedIvf.build(emb.limit(0), root, nlist = 8)
+    assert(VersionedIvf.stats(spark, root).collect().isEmpty)
   }
 
   test("IVF: compact an EMPTY index — probe survives, empty result") {
-    val idx = tmp("alc-ivf-compact-src")
-    val out = tmp("alc-ivf-compact-dst")
-    Similarity.buildIvfIndex(emb.limit(0), idx, nlist = 8)
-    Similarity.compactIvfIndex(spark, idx, out)
-    assert(probeRows(out, emb.filter($"vec_id" < 3)).isEmpty)
+    val root = tmp("alc-ivf-compact")
+    VersionedIvf.build(emb.limit(0), root, nlist = 8)
+    VersionedIvf.compact(spark, root)
+    assert(probeRows(root, emb.filter($"vec_id" < 3)).isEmpty)
   }
 
   test("IVF delete: EVERYTHING — probe empty, no leaked leaves, no throw") {
-    val idx = tmp("alc-ivf-del-all")
-    Similarity.buildIvfIndex(emb.filter($"vec_id" < 40), idx, nlist = 4)
-    Similarity.deleteFromIvfIndex(spark, idx,
-      emb.filter($"vec_id" < 40).select($"vec_id"))
-    assert(probeRows(idx, emb.filter($"vec_id" < 3)).isEmpty)
-    // the delete-everything leak: dynamic overwrite can't empty a leaf,
-    // so emptied leaves must be physically gone
-    val leaves = java.nio.file.Files.walk(
-        java.nio.file.Paths.get(idx, "postings"))
-      .filter(p => p.toString.endsWith(".parquet")).count()
-    assert(leaves === 0L, "fully-deleted leaves left parquet files behind")
+    val root = tmp("alc-ivf-del-all")
+    VersionedIvf.build(emb.filter($"vec_id" < 40), root, nlist = 4)
+    VersionedIvf.append(spark, emb.filter($"vec_id" >= 40 && $"vec_id" < 60),
+      root, "day2")
+    VersionedIvf.delete(spark, root,
+      emb.filter($"vec_id" < 60).select($"vec_id"))
+    assert(probeRows(root, emb.filter($"vec_id" < 3)).isEmpty)
+    assert(VersionedIvf.currentManifest(root).get.leaves.isEmpty)
+    // once the superseded versions are vacuumed, no postings file of
+    // either batch is left on disk — only the centroids the live
+    // version still names
+    VersionedIvf.vacuum(root, keepVersions = 1)
+    import scala.jdk.CollectionConverters._
+    val w = java.nio.file.Files.walk(java.nio.file.Paths.get(root, "data"))
+    val postingFiles = try w.iterator().asScala
+      .map(_.toString)
+      .filter(p => p.endsWith(".parquet") && !p.contains("-cents-"))
+      .toSeq
+    finally w.close()
+    assert(postingFiles.isEmpty, s"fully-deleted leaves left files: $postingFiles")
   }
 
   test("IVF delete: NOTHING (empty id set) — artifact untouched") {
-    val idx = tmp("alc-ivf-del-none")
-    Similarity.buildIvfIndex(emb.filter($"vec_id" < 40), idx, nlist = 4)
-    val before = probeRows(idx, emb.filter($"vec_id" < 3)).toSeq
-    Similarity.deleteFromIvfIndex(spark, idx, emb.limit(0).select($"vec_id"))
+    val root = tmp("alc-ivf-del-none")
+    VersionedIvf.build(emb.filter($"vec_id" < 40), root, nlist = 4)
+    val before = probeRows(root, emb.filter($"vec_id" < 3)).toSeq
+    val live = graft.sources.VersionedArtifact.currentName(root)
+    VersionedIvf.delete(spark, root, emb.limit(0).select($"vec_id"))
     // ids absent from the index are a no-op too
-    Similarity.deleteFromIvfIndex(spark, idx,
+    VersionedIvf.delete(spark, root,
       emb.filter($"vec_id" > 100000).select($"vec_id"))
-    assert(probeRows(idx, emb.filter($"vec_id" < 3)).toSeq === before)
+    assert(graft.sources.VersionedArtifact.currentName(root) === live,
+      "a no-op delete committed a new version")
+    assert(probeRows(root, emb.filter($"vec_id" < 3)).toSeq === before)
   }
 
   test("IVF delete: TWICE == once, and equals rebuild-without") {
-    val idxDel = tmp("alc-ivf-del-twice")
-    val idxRef = tmp("alc-ivf-del-ref")
+    val root = tmp("alc-ivf-del-twice")
+    val ref = tmp("alc-ivf-del-ref")
     val corpus = emb.filter($"vec_id" < 60)
-    Similarity.buildIvfIndex(corpus, idxDel, nlist = 4)
+    VersionedIvf.build(corpus, root, nlist = 4)
     val dels = corpus.filter($"vec_id" % 3 === 0).select($"vec_id")
-    Similarity.deleteFromIvfIndex(spark, idxDel, dels)
-    Similarity.deleteFromIvfIndex(spark, idxDel, dels)
+    val once = VersionedIvf.delete(spark, root, dels)
+    assert(VersionedIvf.delete(spark, root, dels) === once,
+      "the retried delete committed again")
     // rebuild WITHOUT the deleted ids against the SAME frozen centroids
-    Similarity.buildIvfIndex(corpus.filter($"vec_id" % 3 =!= 0), idxRef,
+    VersionedIvf.build(corpus.filter($"vec_id" % 3 =!= 0), ref,
       nlist = 4, centroidSource = Some(corpus))
     val qs = emb.filter($"vec_id" < 3)
-    assert(probeRows(idxDel, qs).toSeq === probeRows(idxRef, qs).toSeq)
+    assert(probeRows(root, qs).toSeq === probeRows(ref, qs).toSeq)
   }
 
   // ---- LSH band index (d28 / d30) ----------------------------------------
 
+  private def bandRows(root: String): Set[Seq[Any]] =
+    VersionedBand.readLive(spark, root).collect().map(_.toSeq).toSet
+
   test("band delete: EVERYTHING — read-back empty, partitions dropped") {
-    val idx = tmp("alc-band-del-all")
-    Dedup.buildBandIndex(docs.filter($"doc_id" < 30), idx)
-    Dedup.appendBandIndex(docs.filter($"doc_id" >= 30 && $"doc_id" < 40),
-      idx, batchId = "day2")
-    Dedup.deleteFromBandIndex(spark, idx,
+    val root = tmp("alc-band-del-all")
+    VersionedBand.build(docs.filter($"doc_id" < 30), root)
+    VersionedBand.append(spark, docs.filter($"doc_id" >= 30 && $"doc_id" < 40),
+      root, batchId = "day2")
+    VersionedBand.delete(spark, root,
       docs.filter($"doc_id" < 40).select($"doc_id"))
-    assert(Dedup.readBandIndex(spark, idx).count() === 0L)
+    assert(VersionedBand.readLive(spark, root).count() === 0L)
+    assert(VersionedBand.currentManifest(root).get.leaves.isEmpty,
+      "emptied leaves are still named by the live manifest")
   }
 
   test("band delete: NOTHING / missing ids — artifact untouched; TWICE == once") {
-    val idx = tmp("alc-band-del-none")
-    Dedup.buildBandIndex(docs.filter($"doc_id" < 30), idx)
-    val before = Dedup.readBandIndex(spark, idx).collect().map(_.toSeq).toSet
-    Dedup.deleteFromBandIndex(spark, idx, docs.limit(0).select($"doc_id"))
-    Dedup.deleteFromBandIndex(spark, idx,
+    val root = tmp("alc-band-del-none")
+    VersionedBand.build(docs.filter($"doc_id" < 30), root)
+    val before = bandRows(root)
+    VersionedBand.delete(spark, root, docs.limit(0).select($"doc_id"))
+    VersionedBand.delete(spark, root,
       docs.filter($"doc_id" > 100000).select($"doc_id"))
-    assert(Dedup.readBandIndex(spark, idx).collect().map(_.toSeq).toSet ===
-      before)
+    assert(bandRows(root) === before)
     val dels = docs.filter($"doc_id" % 4 === 1).select($"doc_id")
-    Dedup.deleteFromBandIndex(spark, idx, dels)
-    val once = Dedup.readBandIndex(spark, idx).collect().map(_.toSeq).toSet
-    Dedup.deleteFromBandIndex(spark, idx, dels)
-    assert(Dedup.readBandIndex(spark, idx).collect().map(_.toSeq).toSet ===
-      once)
+    val v = VersionedBand.delete(spark, root, dels)
+    val once = bandRows(root)
+    assert(VersionedBand.delete(spark, root, dels) === v)
+    assert(bandRows(root) === once)
     assert(once.nonEmpty && once.size < before.size)
   }
 
   test("incremental probe from an EMPTY index: only new-vs-new pairs can form") {
-    val idx = tmp("alc-d30-emptyidx")
-    Dedup.buildBandIndex(docs.limit(0), idx)
+    val root = tmp("alc-d30-emptyidx")
+    VersionedBand.build(docs.limit(0), root)
     // no corpus: result must equal the batch's self-pairs alone — and on
     // a tiny all-distinct batch that is simply "no throw, schema intact"
-    val out = Dedup.incrementalLshPairsFromIndex(spark, idx,
+    val out = Dedup.incrementalLshPairsFromVersioned(spark, root,
       docs.filter($"doc_id" < 5))
     assert(out.columns.toSeq === Seq("d1", "d2", "est_jaccard"))
     out.count() // must execute without schema-inference failure
   }
 
   test("incremental probe with an EMPTY batch: empty result, index untouched") {
-    val idx = tmp("alc-d30-emptybatch")
-    Dedup.buildBandIndex(docs.filter($"doc_id" < 20), idx)
-    assert(Dedup.incrementalLshPairsFromIndex(spark, idx, docs.limit(0))
+    val root = tmp("alc-d30-emptybatch")
+    VersionedBand.build(docs.filter($"doc_id" < 20), root)
+    val before = bandRows(root)
+    assert(Dedup.incrementalLshPairsFromVersioned(spark, root, docs.limit(0))
       .count() === 0L)
+    assert(bandRows(root) === before)
   }
 
   test("band index: build on an empty corpus reads back empty with the declared schema") {
-    val idx = tmp("alc-band-empty")
-    Dedup.buildBandIndex(docs.limit(0), idx)
-    val back = Dedup.readBandIndex(spark, idx)
+    val root = tmp("alc-band-empty")
+    VersionedBand.build(docs.limit(0), root)
+    val back = VersionedBand.readLive(spark, root)
     assert(back.count() === 0L)
     assert(back.columns.toSet ===
       Set("doc_id", "sig", "band", "bkey", "batch_id"))
   }
 
   test("band index: append a real batch into an empty build serves exactly the batch") {
-    val idx = tmp("alc-band-appendinto")
-    Dedup.buildBandIndex(docs.limit(0), idx)
+    val root = tmp("alc-band-appendinto")
+    VersionedBand.build(docs.limit(0), root)
     val batch = docs.filter($"doc_id" < 10)
-    Dedup.appendBandIndex(batch, idx, batchId = "day2")
-    val back = Dedup.readBandIndex(spark, idx)
+    VersionedBand.append(spark, batch, root, batchId = "day2")
+    val back = VersionedBand.readLive(spark, root)
     assert(back.select($"doc_id").distinct().count() ===
       batch.count())
     assert(back.filter($"batch_id" =!= "day2").count() === 0L)
   }
 
   test("band index: append an EMPTY batch leaves the artifact untouched") {
-    val idx = tmp("alc-band-appendempty")
-    Dedup.buildBandIndex(docs.filter($"doc_id" < 10), idx)
-    val before = Dedup.readBandIndex(spark, idx).collect().map(_.toSeq).toSet
-    Dedup.appendBandIndex(docs.limit(0), idx, batchId = "day2")
-    assert(Dedup.readBandIndex(spark, idx).collect().map(_.toSeq).toSet ===
-      before)
+    val root = tmp("alc-band-appendempty")
+    VersionedBand.build(docs.filter($"doc_id" < 10), root)
+    val before = bandRows(root)
+    val leavesBefore = VersionedBand.currentManifest(root).get.leaves
+    VersionedBand.append(spark, docs.limit(0), root, batchId = "day2")
+    assert(VersionedBand.currentManifest(root).get.leaves === leavesBefore)
+    assert(bandRows(root) === before)
   }
 
   // ---- versioned IVF index (s16/s17) -------------------------------------
@@ -228,6 +250,34 @@ class ArtifactLifecycleSpec extends AnyFunSuite {
       emb.filter($"vec_id" >= 60 && $"vec_id" < 80), root, "day2")
     val after = vprobe(root, qs)
     assert(after !== before, "retried append after the crash never landed")
+    // the same window for a TAKEDOWN: the delete's survivor segment is
+    // written and its manifest staged, but the writer dies before the
+    // flip — the prior version keeps serving row-identical, and vacuum
+    // reclaims none of its leaves
+    import graft.sources.{VersionedArtifact => VA}
+    val live = VA.currentName(root).get
+    val m = operators.VersionedIvf.currentManifest(root).get
+    val rowsBefore = operators.VersionedIvf.livePostings(spark, root)
+      .collect().map(_.toSeq).toSeq.sortBy(_.head.toString)
+    val hit = m.leaves.maxBy(_.path)
+    val crashVer = VA.nextName(root)
+    val leafRel = s"data/$crashVer-delete-wcrash/cid=${hit.cid}/batch_id=${hit.batch}"
+    val leafRows = spark.read.parquet(s"$root/${hit.path}")
+    leafRows.filter($"vec_id" =!= leafRows.agg(min($"vec_id")).head().getLong(0))
+      .write.parquet(s"$root/$leafRel")
+    val kept = m.leaves.filterNot(_ == hit) :+ hit.copy(path = leafRel)
+    VA.stage(root, crashVer, Seq(s"centroids ${m.centroids}") ++
+      m.batches.map(b => s"batch $b") ++
+      kept.map(l => s"leaf ${l.cid} ${l.batch} ${l.path}"), base = Some(live))
+    def rowsNow() = operators.VersionedIvf.livePostings(spark, root)
+      .collect().map(_.toSeq).toSeq.sortBy(_.head.toString)
+    assert(rowsNow() === rowsBefore, "a staged delete leaked into the read path")
+    assert(vprobe(root, qs) === after)
+    val removed = operators.VersionedIvf.vacuum(root, keepVersions = 1)
+    val served = (m.centroids +: m.leaves.map(_.path)).map(_.split("/")(1)).toSet
+    assert(!removed.exists(served), s"vacuum reclaimed a served leaf: $removed")
+    assert(rowsNow() === rowsBefore && vprobe(root, qs) === after,
+      "vacuum broke the version the crashed delete left serving")
   }
 
   test("versioned: vacuum never touches what the live version serves") {
@@ -306,6 +356,32 @@ class ArtifactLifecycleSpec extends AnyFunSuite {
     val v1 = operators.VersionedBand.append(spark, batch, root, "day2")
     val v2 = operators.VersionedBand.append(spark, batch, root, "day2")
     assert(v1 === v2)
+    // crash window for a TAKEDOWN: the delete's survivor leaf is written
+    // and its manifest staged, but never published — the prior version
+    // keeps serving row-identical and vacuum reclaims none of its leaves
+    import graft.sources.{VersionedArtifact => VA}
+    val m = operators.VersionedBand.currentManifest(root).get
+    val served = operators.VersionedBand.readLive(spark, root)
+      .collect().map(_.toSeq).toSeq.sortBy(_.take(3).toString)
+    val hit = m.leaves.maxBy(_.path)
+    val crashVer = VA.nextName(root)
+    val leafRel =
+      s"data/$crashVer-delete-wcrash/batch_id=${hit.batch}/bucket=${hit.bucket}"
+    val leafRows = spark.read.parquet(s"$root/${hit.path}")
+    leafRows.filter($"doc_id" =!= leafRows.agg(min($"doc_id")).head().getLong(0))
+      .write.parquet(s"$root/$leafRel")
+    VA.stage(root, crashVer, Seq(s"buckets ${m.buckets}") ++
+      m.batches.map(b => s"batch $b") ++
+      (m.leaves.filterNot(_ == hit) :+ hit.copy(path = leafRel))
+        .map(l => s"leaf ${l.batch} ${l.path}"), base = Some(v1))
+    def servedNow() = operators.VersionedBand.readLive(spark, root)
+      .collect().map(_.toSeq).toSeq.sortBy(_.take(3).toString)
+    assert(servedNow() === served, "a staged delete leaked into the read path")
+    val removed = operators.VersionedBand.vacuum(root, keepVersions = 1)
+    assert(!removed.exists(m.leaves.map(_.path.split("/")(1)).toSet),
+      s"vacuum reclaimed a served leaf: $removed")
+    assert(servedNow() === served,
+      "vacuum broke the version the crashed delete left serving")
     // empty build: read-back empty with declared schema, no throw
     val root2 = tmp("alc-vband-empty")
     operators.VersionedBand.build(docs.limit(0), root2)
@@ -560,8 +636,13 @@ class ArtifactLifecycleSpec extends AnyFunSuite {
     // (RunDirs.freshDir). A regression to a carried root would no-op
     // the appends on run 2 and probe a silently smaller corpus.
     val dir = "/root/testdata/sf0.001"
-    for (name <- Seq("d32_band_versioned_lifecycle",
+    for (name <- Seq("d28_band_index_lifecycle",
+        "d30_incremental_dedup_from_index", "d31_band_index_delete",
+        "d32_band_versioned_lifecycle",
         "d33_incremental_dedup_versioned", "d34_dedup_time_travel",
+        "s10_ivf_index_lifecycle", "s11_ivf_incremental",
+        "s12_ivf_compaction", "s13_ivf_filtered_search",
+        "s14_ivf_index_stats", "s15_ivf_delete",
         "s16_ivf_versioned_lifecycle",
         "s17_ivf_retrain", "st16_stream_index_maintenance")) {
       val q = SparkEntry.queries(name)
@@ -753,14 +834,16 @@ class ArtifactLifecycleSpec extends AnyFunSuite {
     }
   }
 
-  test("in-place band takedown touches only hit (batch, bucket) leaf files") {
-    val idx = tmp("alc-band-bucketloc-inplace")
-    Dedup.buildBandIndex(docs.filter($"doc_id" < 60), idx)
-    Dedup.appendBandIndex(docs.filter($"doc_id" >= 60 && $"doc_id" < 80),
-      idx, batchId = "day2")
+  test("band takedown never rewrites a published file, writes one hit leaf") {
+    val root = tmp("alc-band-bucketloc-files")
+    // 8 buckets: every leaf holds several docs, so the hit leaf keeps
+    // survivors and the delete must write exactly one new leaf
+    VersionedBand.build(docs.filter($"doc_id" < 60), root, buckets = 8)
+    VersionedBand.append(spark, docs.filter($"doc_id" >= 60 && $"doc_id" < 80),
+      root, batchId = "day2")
     import scala.jdk.CollectionConverters._
     def leafFiles(): Map[String, Long] = {
-      val w = java.nio.file.Files.walk(java.nio.file.Paths.get(idx))
+      val w = java.nio.file.Files.walk(java.nio.file.Paths.get(root, "data"))
       try w.iterator().asScala
         .filter(p => p.toString.endsWith(".parquet"))
         .map(p => p.toString ->
@@ -769,19 +852,17 @@ class ArtifactLifecycleSpec extends AnyFunSuite {
       finally w.close()
     }
     val before = leafFiles()
-    Dedup.deleteFromBandIndex(spark, idx,
+    VersionedBand.delete(spark, root,
       docs.filter($"doc_id" === 7).select($"doc_id"))
     val after = leafFiles()
-    // every surviving pre-delete file outside the hit bucket is the SAME
-    // file (path + mtime): the dynamic overwrite rewrote only hit leaves
-    val common = before.keySet intersect after.keySet
-    assert(common.forall(k => before(k) == after(k)),
-      "an untouched leaf file was rewritten")
-    val touched = (before.keySet diff after.keySet) ++
-      (after.keySet diff before.keySet)
-    assert(touched.nonEmpty, "delete touched nothing — probe failed?")
-    val touchedDirs = touched.map(_.split("/").dropRight(1).mkString("/")).toSet
-    assert(touchedDirs.size <= 2, // hit leaf's old + new file dir(s)
-      s"one-doc takedown touched ${touchedDirs.size} leaf dirs: $touchedDirs")
+    // every pre-delete file is still there, unmodified (path + mtime):
+    // a takedown writes a new segment and never touches published data
+    assert(before.forall { case (k, t) => after.get(k).contains(t) },
+      "a published leaf file was rewritten or removed")
+    val added = after.keySet diff before.keySet
+    assert(added.nonEmpty, "delete wrote nothing — probe failed?")
+    val addedDirs = added.map(_.split("/").dropRight(1).mkString("/"))
+    assert(addedDirs.size === 1,
+      s"one-doc takedown wrote ${addedDirs.size} leaf dirs: $addedDirs")
   }
 }

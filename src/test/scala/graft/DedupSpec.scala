@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Dedup, Similarity}
+import graft.operators.{Dedup, Similarity, VersionedBand}
 import graft.functions.VectorFns
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -349,26 +349,27 @@ class DedupSpec extends AnyFunSuite {
     val corpus = many.filter(col("doc_id") % 10 =!= 0)
     val batch = many.filter(col("doc_id") % 10 === 0)
     def tmp() = java.nio.file.Files.createTempDirectory("graft_idx_spec").toString
-    val lifecycleDir = tmp(); val rebuildDir = tmp(); val compactDir = tmp()
-    Dedup.buildBandIndex(corpus, lifecycleDir)
-    Dedup.appendBandIndex(batch, lifecycleDir, batchId = "day2")
-    Dedup.buildBandIndex(many, rebuildDir)
-    def rows(dir: String) = Dedup.readBandIndex(spark, dir)
+    val lifecycleDir = tmp(); val rebuildDir = tmp()
+    VersionedBand.build(corpus, lifecycleDir)
+    val v = VersionedBand.append(spark, batch, lifecycleDir, batchId = "day2")
+    VersionedBand.build(many, rebuildDir)
+    def rows(root: String) = VersionedBand.readLive(spark, root)
       .select(col("doc_id"), col("band"), col("bkey")).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSet
-    def rowsMulti(dir: String) = Dedup.readBandIndex(spark, dir)
+    def rowsMulti(root: String) = VersionedBand.readLive(spark, root)
       .select(col("doc_id"), col("band"), col("bkey")).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSeq.sorted
     val appended = rows(lifecycleDir)
     assert(appended === rows(rebuildDir), "append != full rebuild")
-    // retry safety: re-appending the same batch id replaces its own
-    // partition — row-identical INCLUDING multiplicity, not just as a set
+    // retry safety: re-appending the same batch id is a manifest no-op —
+    // row-identical INCLUDING multiplicity, not just as a set
     val before = rowsMulti(lifecycleDir)
-    Dedup.appendBandIndex(batch, lifecycleDir, batchId = "day2")
+    assert(VersionedBand.append(spark, batch, lifecycleDir, batchId = "day2") === v)
     assert(rowsMulti(lifecycleDir) === before, "retried append changed the artifact")
-    val nFiles = graft.sources.Formats.compactParquet(spark, lifecycleDir, compactDir)
-    assert(rows(compactDir) === appended, "compaction changed the index")
-    assert(nFiles >= 1)
+    VersionedBand.compact(spark, lifecycleDir)
+    assert(rowsMulti(lifecycleDir) === before, "compaction changed the index")
+    assert(VersionedBand.currentManifest(lifecycleDir).get.leaves
+      .forall(_.path.contains("-compact-")), "compaction did not swap every leaf")
   }
 
   test("incremental LSH == full pair set minus old-old, for any batch split") {

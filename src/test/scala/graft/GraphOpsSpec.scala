@@ -9,7 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
   *
   * Micro-graphs are hand-computable; 50.txt parity uses an independent
   * in-memory O(n³)-ish enumeration as the oracle (the reference repo
-  * publishes no expected outputs).
+  * publishes no expected outputs) over a generated file of the same
+  * shape ([[EdgeListFixture]]).
   */
 class GraphOpsSpec extends AnyFunSuite {
 
@@ -163,20 +164,24 @@ class GraphOpsSpec extends AnyFunSuite {
   }
 
   test("50.txt parity with independent brute-force oracle") {
-    val path = "/root/reference/src/main/resources/50.txt"
+    // 50 lines over 12 nodes: dense enough that many triangles form, with
+    // the duplicate and reversed edges of the paper's 50.txt shape
+    val path = EdgeListFixture.write("edges50", nEdges = 50, nNodes = 12, seed = 50L)
     val df = EdgeList.read(spark, path)
     val es = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(es.length === 50)
+    assert(bruteTriangles(es).nonEmpty, "fixture forms no triangle — weak test")
     assert(triSet(GraphOps.triangles(df)) === bruteTriangles(es))
   }
 
   test("maxSplitBytes bounds input split size without changing results") {
-    // 100k.txt is ~1.8 MB: a 256 KiB split cap must yield 7 scan
-    // partitions (1.8M/256K = 7.02; the trailing 2% folds into the last
-    // split under Hadoop's 1.1x slop) — the reference's per-run
-    // split-size knob, §2.1 — and the parsed edges must be identical to
-    // the default read
-    val path = "/root/reference/src/main/resources/100k.txt"
+    // 100k edge lines of two 9-digit ids are 2.0 MB (the paper's 100k.txt
+    // is ~1.8 MB): a 256 KiB split cap must yield at least 7 scan
+    // partitions — the reference's per-run split-size knob, §2.1 — and
+    // the parsed edges must be identical to the default read
+    val path = EdgeListFixture.write("edges100k", nEdges = 100000,
+      nNodes = 5280, seed = 100000L)
+    assert(java.nio.file.Files.size(java.nio.file.Paths.get(path)) >= 1800000L)
     val capped = EdgeList.read(spark, path, maxSplitBytes = Some(256L << 10))
     assert(capped.rdd.getNumPartitions >= 7)
     val default = EdgeList.read(spark, path)

@@ -609,25 +609,27 @@ class PlanSpec extends AnyFunSuite {
   test("s10 probe scan statically prunes to the probed cell directories") {
     // the whole point of the cid-partitioned postings artifact: a probe
     // must read its nprobe cells' directories, not the corpus. The
-    // pruning is STATIC (probed cells collected at construction): DPP
-    // was measured planting dynamicpruningexpression(true) here — a
-    // full scan wearing a pruning expression — because the probe side's
-    // window + local query table defeat broadcast reuse. This pin
-    // asserts the real thing: an IN list on the partition column in
-    // PartitionFilters, and no silent true-literal.
-    import graft.operators.Similarity
+    // pruning is STATIC — the probed cells are collected at construction
+    // and only their manifest leaves are handed to the scan — because
+    // dynamic partition pruning was measured planting
+    // dynamicpruningexpression(true) here (a full scan wearing a pruning
+    // expression). This pin asserts the real thing: one query with
+    // nprobe 2 over 8 cells reads postings files of at most 2 leaves.
+    import graft.operators.VersionedIvf
     val emb = Tables.load(spark, dir, "embeddings")
-    val idx = java.nio.file.Files.createTempDirectory("s10-plan").toString
-    Similarity.buildIvfIndex(emb, idx, nlist = 8)
-    val plan = executedPlan(Similarity.probeIvfIndex(
-      spark, idx, emb.filter(col("vec_id") < 5), k = 10, nprobe = 2))
-    val pf = "PartitionFilters: \\[[^\\]]*".r.findAllIn(plan)
-      .filter(_.contains("cid")).toSeq
-    // the vestigial dynamicpruningexpression(true) Spark still plants is
-    // harmless BESIDE the static IN — it is the IN list that prunes
-    // (ScaleSmoke --s10-only: 24k of 200k records read)
-    assert(pf.nonEmpty && pf.forall(f => f.contains("cid") && f.contains(" IN (")),
-      s"postings scan not statically pruned to probed cells:\n$plan")
+    val root = java.nio.file.Files.createTempDirectory("s10-plan").toString
+    VersionedIvf.build(emb, root, nlist = 8)
+    val leaves = VersionedIvf.currentManifest(root).get.leaves
+    assert(leaves.map(_.cid).distinct.size === 8, s"expected 8 cells: $leaves")
+    val probe = VersionedIvf.probe(
+      spark, root, emb.filter(col("vec_id") === 0), k = 10, nprobe = 2)
+    probe.collect()
+    val postingsFiles = probe.inputFiles.toSeq
+      .filter(f => f.contains("/data/") && !f.contains("-cents-"))
+    val readLeaves = leaves.filter(l => postingsFiles.exists(_.contains(s"/${l.path}/")))
+    assert(postingsFiles.nonEmpty && readLeaves.size <= 2 &&
+      postingsFiles.forall(f => readLeaves.exists(l => f.contains(s"/${l.path}/"))),
+      s"postings scan not pruned to the probed cells: $postingsFiles")
   }
 
   test("st15 chunk metrics: one aggregation exchange, no join") {

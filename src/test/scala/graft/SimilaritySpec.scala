@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.Similarity
+import graft.operators.{Similarity, VersionedIvf}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -171,32 +171,48 @@ class SimilaritySpec extends AnyFunSuite {
 
   // ---- s11: incremental IVF index maintenance ---------------------------
 
-  private def postingsRows(dir: String): Set[(Long, Long, String)] =
-    spark.read.parquet(s"$dir/postings")
-      .select($"vec_id", $"cid".cast("long"), $"batch_id")
+  private def postingsRows(root: String): Set[(Long, Long, String)] =
+    VersionedIvf.livePostings(spark, root)
+      .select($"vec_id", $"cid", $"batch_id")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
+
+  private def tmp(tag: String): String =
+    java.nio.file.Files.createTempDirectory(tag).toString
+
+  test("IVF build refuses an nlist past the one-row centroid cap, naming the cap") {
+    // the whole centroid table rides ONE broadcast row (assignCells), so
+    // an unbounded nlist would hit Spark's ~2 GiB row limit mid-job; the
+    // build must refuse up front and commit nothing
+    val root = tmp("ivf-nlist-cap")
+    val e = intercept[IllegalArgumentException] {
+      VersionedIvf.build(emb, root, nlist = Similarity.MaxNlist + 1)
+    }
+    assert(e.getMessage.contains(s"MaxNlist = ${Similarity.MaxNlist}"),
+      s"failure does not name the cap: ${e.getMessage}")
+    assert(graft.sources.VersionedArtifact.currentName(root).isEmpty)
+  }
 
   test("s11: append(day2) == rebuild(union, frozen day-1 centroids), and a retried append is a no-op") {
     val day1 = emb.filter($"vec_id" % 4 =!= 3)
     val day2 = emb.filter($"vec_id" % 4 === 3)
-    val grown = java.nio.file.Files.createTempDirectory("s11-grown").toString
-    val rebuilt = java.nio.file.Files.createTempDirectory("s11-rebuilt").toString
-    Similarity.buildIvfIndex(day1, grown, nlist = 8)
-    Similarity.appendIvfIndex(spark, day2, grown, batchId = "day2")
+    val grown = tmp("s11-grown")
+    val rebuilt = tmp("s11-rebuilt")
+    VersionedIvf.build(day1, grown, nlist = 8)
+    val v = VersionedIvf.append(spark, day2, grown, batchId = "day2")
     val afterFirst = postingsRows(grown)
-    Similarity.appendIvfIndex(spark, day2, grown, batchId = "day2")
+    assert(VersionedIvf.append(spark, day2, grown, batchId = "day2") === v,
+      "retried append committed a new version")
     assert(postingsRows(grown) === afterFirst,
-      "retried append changed the artifact — dynamic overwrite not idempotent")
+      "retried append changed the artifact")
     // rebuild the union against the SAME frozen day-1 centroids: cell
     // assignment is a pure per-vector function of the centroid table, so
     // postings must agree on every (vec_id, cid) — batch_id is lineage
-    Similarity.buildIvfIndex(emb, rebuilt, nlist = 8,
-      centroidSource = Some(day1))
+    VersionedIvf.build(emb, rebuilt, nlist = 8, centroidSource = Some(day1))
     assert(afterFirst.map(r => (r._1, r._2)) ===
       postingsRows(rebuilt).map(r => (r._1, r._2)))
     // and the probe over the grown artifact == the probe over the rebuild
-    def probe(dir: String) = Similarity
-      .probeIvfIndex(spark, dir, queries, k, nprobe = 2)
+    def probe(root: String) = VersionedIvf
+      .probe(spark, root, queries, k, nprobe = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
         r.getInt(3))).toSet
     assert(probe(grown) === probe(rebuilt))
@@ -209,14 +225,14 @@ class SimilaritySpec extends AnyFunSuite {
     // nothing was lost or double-indexed on the way in
     val day1 = emb.filter($"vec_id" % 4 =!= 3)
     val day2 = emb.filter($"vec_id" % 4 === 3)
-    val idx = java.nio.file.Files.createTempDirectory("s11-all").toString
-    Similarity.buildIvfIndex(day1, idx, nlist = 8)
-    Similarity.appendIvfIndex(spark, day2, idx, batchId = "day2")
-    val got = topkSet(Similarity.probeIvfIndex(spark, idx, queries, k, nprobe = 8))
+    val root = tmp("s11-all")
+    VersionedIvf.build(day1, root, nlist = 8)
+    VersionedIvf.append(spark, day2, root, batchId = "day2")
+    val got = topkSet(VersionedIvf.probe(spark, root, queries, k, nprobe = 8))
     assert(got === exact)
     // and at the registered nprobe=2 the approximation keeps real signal
     val r2 = recall(topkSet(
-      Similarity.probeIvfIndex(spark, idx, queries, k, nprobe = 2)))
+      VersionedIvf.probe(spark, root, queries, k, nprobe = 2)))
     info(s"s11 grown-index recall@10 (nprobe=2, 6 frozen day-1 cells): $r2")
     assert(r2 >= 0.25, s"recall $r2 below the 2-of-6-cells floor")
   }
@@ -225,10 +241,10 @@ class SimilaritySpec extends AnyFunSuite {
     // with every cell probed the only restriction left is the filter, so
     // pre-filtering must reproduce brute force over the filtered corpus —
     // the property post-filtering (rank first, filter after) fails
-    val idx = java.nio.file.Files.createTempDirectory("s13-idx").toString
-    Similarity.buildIvfIndex(emb, idx, nlist = 8)
-    val got = topkSet(Similarity.probeIvfIndexFiltered(
-      spark, idx, queries, k, nprobe = 8, col("vec_id") % 2 === 0))
+    val root = tmp("s13-idx")
+    VersionedIvf.build(emb, root, nlist = 8)
+    val got = topkSet(VersionedIvf.probeFiltered(
+      spark, root, queries, k, nprobe = 8, col("vec_id") % 2 === 0))
     val exactEven = topkSet(Similarity.bruteForceTopK(
       emb.filter($"vec_id" % 2 === 0), queries, k))
     assert(got === exactEven)
@@ -239,10 +255,10 @@ class SimilaritySpec extends AnyFunSuite {
   test("s14: index stats account for every vector and survive compaction") {
     val day1 = emb.filter($"vec_id" % 4 =!= 3)
     val day2 = emb.filter($"vec_id" % 4 === 3)
-    val idx = java.nio.file.Files.createTempDirectory("s14-idx").toString
-    Similarity.buildIvfIndex(day1, idx, nlist = 8)
-    Similarity.appendIvfIndex(spark, day2, idx, batchId = "day2")
-    val stats = Similarity.ivfIndexStats(spark, idx).collect()
+    val root = tmp("s14-idx")
+    VersionedIvf.build(day1, root, nlist = 8)
+    VersionedIvf.append(spark, day2, root, batchId = "day2")
+    val stats = VersionedIvf.stats(spark, root).collect()
     val totalBase = stats.map(_.getLong(1)).sum
     val totalNew = stats.map(_.getLong(2)).sum
     // every non-zero vector of each split lands in exactly one cell
@@ -252,37 +268,33 @@ class SimilaritySpec extends AnyFunSuite {
       graft.functions.VectorFns.toDouble($"embedding"))).count()
     assert(totalBase === d1n)
     assert(totalNew === d2n)
-    // the monitor reads the same truth off a compacted copy (lineage
+    // the monitor reads the same truth off the compacted version (lineage
     // survives as a data column)
-    val out = java.nio.file.Files.createTempDirectory("s14-out").toString
-    Similarity.compactIvfIndex(spark, idx, out)
-    assert(Similarity.ivfIndexStats(spark, out).collect().map(_.toSeq).toSet ===
+    VersionedIvf.compact(spark, root)
+    assert(VersionedIvf.stats(spark, root).collect().map(_.toSeq).toSet ===
       stats.map(_.toSeq).toSet)
   }
 
   test("s12: compaction collapses every cell to ONE file and keeps the cid layout") {
     val day1 = emb.filter($"vec_id" % 4 =!= 3)
     val day2 = emb.filter($"vec_id" % 4 === 3)
-    val idx = java.nio.file.Files.createTempDirectory("s12-idx").toString
-    val out = java.nio.file.Files.createTempDirectory("s12-out").toString
-    Similarity.buildIvfIndex(day1, idx, nlist = 8)
-    Similarity.appendIvfIndex(spark, day2, idx, batchId = "day2")
-    Similarity.compactIvfIndex(spark, idx, out)
-    val cidDirs = new java.io.File(s"$out/postings").listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("cid="))
-    assert(cidDirs.nonEmpty, "compacted postings lost the cid directory layout")
-    cidDirs.foreach { d =>
-      val parts = d.listFiles().filter(_.getName.endsWith(".parquet"))
+    val root = tmp("s12-idx")
+    VersionedIvf.build(day1, root, nlist = 8)
+    VersionedIvf.append(spark, day2, root, batchId = "day2")
+    val before = postingsRows(root)
+    VersionedIvf.compact(spark, root)
+    val leaves = VersionedIvf.currentManifest(root).get.leaves
+    assert(leaves.nonEmpty, "compacted postings lost the cid directory layout")
+    assert(leaves.map(_.cid).distinct.size === leaves.size,
+      s"a cell has more than one leaf after compaction: $leaves")
+    leaves.foreach { l =>
+      assert(l.path.endsWith(s"/cid=${l.cid}"), s"leaf off the cid layout: $l")
+      val parts = new java.io.File(s"$root/${l.path}").listFiles()
+        .filter(_.getName.endsWith(".parquet"))
       assert(parts.length === 1,
-        s"${d.getName}: ${parts.length} files after compaction, expected 1")
+        s"cid=${l.cid}: ${parts.length} files after compaction, expected 1")
     }
     // row-identical through the rewrite (batch lineage kept as a column)
-    val before = spark.read.parquet(s"$idx/postings")
-      .select($"vec_id", $"cid".cast("long"), $"batch_id")
-      .collect().map(_.toSeq).toSet
-    val after = spark.read.parquet(s"$out/postings")
-      .select($"vec_id", $"cid".cast("long"), $"batch_id")
-      .collect().map(_.toSeq).toSet
-    assert(after === before)
+    assert(postingsRows(root) === before)
   }
 }

@@ -47,24 +47,28 @@ class StreamingSpec extends AnyFunSuite {
     // maintains the persisted LSH band index via foreachBatch, keyed by
     // Spark's own batchId — exactly the sink contract foreachBatch
     // documents (a failed trigger REPLAYS its batch with the same id).
-    // d28's dynamic-partition-overwrite append makes that replay a
-    // no-op, so the maintained artifact equals the batch rebuild even
-    // with a simulated retry injected.
+    // The whole corpus arrives through the stream into an EMPTY build,
+    // and manifest membership makes the replay a no-op, so the
+    // maintained artifact equals the batch rebuild even with a simulated
+    // retry injected.
+    import graft.operators.VersionedBand
     val docs = Tables.load(spark, dir, "documents").filter(col("doc_id") < 200)
     val replay = Files.createTempDirectory("graft-idx-replay").toString
     docs.withColumn("part", col("doc_id") % 4).repartition(4, col("part"))
       .drop("part").write.mode("overwrite").parquet(replay)
-    val idxDir = Files.createTempDirectory("graft-idx-stream").toString
+    val root = Files.createTempDirectory("graft-idx-stream").toString
+    VersionedBand.build(docs.limit(0), root)
     val stream = spark.readStream.schema(docs.schema)
       .option("maxFilesPerTrigger", 1).parquet(replay)
     var replayed = false
     val q = stream.writeStream.outputMode("append")
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        graft.operators.Dedup.appendBandIndex(batch, idxDir, s"b$batchId")
+        VersionedBand.append(spark, batch, root, s"b$batchId")
         if (batchId == 1 && !replayed) { // simulated mid-stream retry
           replayed = true
-          graft.operators.Dedup.appendBandIndex(batch, idxDir, s"b$batchId")
+          VersionedBand.append(spark, batch, root, s"b$batchId")
         }
+        ()
       }
       .start()
     try q.processAllAvailable() finally q.stop()
@@ -72,13 +76,12 @@ class StreamingSpec extends AnyFunSuite {
       .select(col("doc_id"), col("band"), col("bkey")).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSeq.sorted
     val rebuildDir = Files.createTempDirectory("graft-idx-rebuild").toString
-    graft.operators.Dedup.buildBandIndex(docs, rebuildDir)
-    val maintained = rows(graft.operators.Dedup.readBandIndex(spark, idxDir))
+    VersionedBand.build(docs, rebuildDir)
+    val maintained = rows(VersionedBand.readLive(spark, root))
     assert(replayed, "the simulated retry must have fired")
     assert(maintained.nonEmpty)
     // multiplicity-identical INCLUDING the replayed batch
-    assert(maintained ===
-      rows(graft.operators.Dedup.readBandIndex(spark, rebuildDir)))
+    assert(maintained === rows(VersionedBand.readLive(spark, rebuildDir)))
   }
 
   test("streaming IVF maintenance: foreachBatch append is replay-idempotent (st16)") {
@@ -90,7 +93,7 @@ class StreamingSpec extends AnyFunSuite {
     // retry must be a MANIFEST no-op — the version count stays at
     // build + one commit per distinct batch — and the final snapshot
     // must equal the frozen-centroid rebuild
-    import graft.operators.{Similarity, VersionedIvf}
+    import graft.operators.VersionedIvf
     val emb = Tables.load(spark, dir, "embeddings")
     val day1 = emb.filter(col("vec_id") % 4 =!= 3)
     val day2 = emb.filter(col("vec_id") % 4 === 3)
@@ -117,8 +120,7 @@ class StreamingSpec extends AnyFunSuite {
       .start()
     try q.processAllAvailable() finally q.stop()
     val rebuildDir = Files.createTempDirectory("graft-ivf-rebuild").toString
-    Similarity.buildIvfIndex(emb, rebuildDir, nlist = 8,
-      centroidSource = Some(day1))
+    VersionedIvf.build(emb, rebuildDir, nlist = 8, centroidSource = Some(day1))
     assert(replayed, "the simulated retry must have fired")
     assert(replayVersions._1 === replayVersions._2,
       s"the replayed trigger committed a new version: $replayVersions")
@@ -128,8 +130,8 @@ class StreamingSpec extends AnyFunSuite {
       .select(col("vec_id"), col("cid")).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
     assert(maintained.nonEmpty)
-    assert(maintained === spark.read.parquet(s"$rebuildDir/postings")
-      .select(col("vec_id"), col("cid").cast("long")).collect()
+    assert(maintained === VersionedIvf.livePostings(spark, rebuildDir)
+      .select(col("vec_id"), col("cid")).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted)
   }
 
@@ -139,7 +141,7 @@ class StreamingSpec extends AnyFunSuite {
     // foreachBatch keyed by Spark's batchId; a simulated trigger retry
     // must be a MANIFEST no-op (published-version count unchanged) and
     // the final snapshot must equal the from-scratch rebuild
-    import graft.operators.{Dedup, VersionedBand}
+    import graft.operators.VersionedBand
     val docs = Tables.load(spark, dir, "documents").filter(col("doc_id") < 200)
     val day1 = docs.filter(col("doc_id") % 4 =!= 3)
     val day2 = docs.filter(col("doc_id") % 4 === 3)
@@ -171,13 +173,13 @@ class StreamingSpec extends AnyFunSuite {
     // build + 3 micro-batch commits, the replay adding none
     assert(graft.sources.VersionedArtifact.publishedVersions(root).size === 4)
     val rebuildDir = Files.createTempDirectory("graft-vband-rebuild").toString
-    Dedup.buildBandIndex(docs, rebuildDir)
+    VersionedBand.build(docs, rebuildDir)
     def rows(df: org.apache.spark.sql.DataFrame) = df
       .select(col("doc_id"), col("band"), col("bkey")).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSeq.sorted
     val maintained = rows(VersionedBand.readLive(spark, root))
     assert(maintained.nonEmpty)
-    assert(maintained === rows(Dedup.readBandIndex(spark, rebuildDir)))
+    assert(maintained === rows(VersionedBand.readLive(spark, rebuildDir)))
   }
 
   test("streaming ingest breaker: per-batch metrics == st15 ledger; poisoned chunk kills the query") {
