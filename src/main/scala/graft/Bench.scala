@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every registered query against
   * `SPARK_GRAFT_SF_DIR` and prints ONE JSON line.
   *
@@ -170,14 +168,8 @@ object Bench {
     else if (!quiet((loadAtStart, load5AtStart)))
       System.err.println(f"bench: load $loadAtStart%.1f/5m $load5AtStart%.1f — artifact will be tagged loaded-floors-only")
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // AFTER setLogLevel: Spark's level reset wipes per-logger overrides
-    GraftSession.silenceBoundedWindowWarning()
+    val spark = GraftSession.get(master = s"local[$cpus]",
+      shufflePartitions = cpus.toInt, appName = "graft-bench")
     val totals = ShuffleTotals.install(spark)
 
     try {

@@ -13,35 +13,44 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
-  /** Build (or reuse) a session with graft defaults. */
+  /** Build (or reuse) a session with graft defaults: only the static confs
+    * go to the builder, the shuffle partition count comes from the caller,
+    * and everything else is [[tune]]'s, so a session from here and a
+    * session built elsewhere and tuned in place are configured alike. */
   def get(master: String = sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[*]"),
           shufflePartitions: Int = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32").toInt,
           appName: String = "graft"): SparkSession = {
     val spark = SparkSession.builder()
       .master(master)
       .appName(appName)
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", (64L << 20).toString)
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    silenceBoundedWindowWarning()
-    graft.plans.GraftFunctions.register(spark)
-    installRules(spark)
-    spark
+    spark.conf.set("spark.sql.shuffle.partitions", shufflePartitions.toString)
+    tune(spark)
   }
 
-  /** Apply graft defaults to an externally-built session (e.g. the driver's). */
+  /** Apply graft's runtime confs, log filters, native functions and
+    * optimizer rule to a live session (the engine's own, or one built
+    * elsewhere). Idempotent: functions and the rule are installed only if
+    * absent. Operators do not register
+    * anything themselves — a session that never went through here fails
+    * with an unresolved-routine error naming the graft function. Sessions
+    * cloned from a tuned one (streaming micro-batches run on
+    * `cloneSession()`) inherit the conf, the function registry and
+    * `extraOptimizations`. */
   def tune(spark: SparkSession): SparkSession = {
     spark.conf.set("spark.sql.adaptive.enabled", "true")
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
+    spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", (64L << 20).toString)
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     silenceBoundedWindowWarning()
     graft.plans.GraftFunctions.register(spark)
-    installRules(spark)
+    val rules = spark.experimental.extraOptimizations
+    if (!rules.contains(graft.plans.RewriteHofDotProduct))
+      spark.experimental.extraOptimizations =
+        rules :+ graft.plans.RewriteHofDotProduct
     spark
   }
 
@@ -70,7 +79,7 @@ object GraftSession {
     * blocks are never needed after the queries that read them complete
     * (each call site documents why) — 76 identical copies of that note
     * per bench run were the other half of the tail flood. */
-  private[graft] def silenceBoundedWindowWarning(): Unit = {
+  private def silenceBoundedWindowWarning(): Unit = {
     // Message-specific DENY filters, not level scoping (r9 ADVICE): a
     // blanket ERROR level on these loggers would also swallow a future
     // ACCIDENTAL corpus-sized unpartitioned window or any OTHER warning
@@ -88,8 +97,8 @@ object GraftSession {
     * an exact-name config that already carries a filter is left alone —
     * safe because this method is the only filter writer in the process.
     * Spark's `setLogLevel` (Configurator.setAllLevels) rewrites LEVELS on
-    * existing configs but never removes filters, so the deny survives the
-    * mains' level resets; call sites still re-apply defensively. */
+    * existing configs but never removes filters, so the deny survives a
+    * later level reset. */
   private def denyLoggerMessage(loggerName: String, pattern: String): Unit = {
     import org.apache.logging.log4j.LogManager
     import org.apache.logging.log4j.core.{Filter, LoggerContext}
@@ -110,14 +119,5 @@ object GraftSession {
         Filter.Result.DENY, Filter.Result.NEUTRAL))
       ctx.updateLoggers()
     }
-  }
-
-  /** Install graft optimizer rules on a LIVE session (new sessions can use
-    * `spark.sql.extensions=graft.plans.GraftExtensions` instead). */
-  private def installRules(spark: SparkSession): Unit = {
-    val rules = spark.experimental.extraOptimizations
-    if (!rules.contains(graft.plans.RewriteHofDotProduct))
-      spark.experimental.extraOptimizations =
-        rules :+ graft.plans.RewriteHofDotProduct
   }
 }

@@ -1404,7 +1404,6 @@ object ScaleSmoke {
       n
     }
     println(s"""{"step":"skew_evidence","aqe_skew_split_fired":$skewFired}""")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", (64L << 20).toString)
 
     if (!skewFired)
       println("""{"warn":"AQE skew split did not fire - inspect plan/thresholds"}""")

@@ -44,8 +44,6 @@ object StreamBench {
     val nFiles = args.lift(1).map(_.toInt).getOrElse(20)
     val xFactor = args.lift(2).map(_.toInt).getOrElse(1)
     val spark = GraftSession.get(appName = "graft-stream-bench")
-    spark.sparkContext.setLogLevel("WARN")
-    GraftSession.silenceBoundedWindowWarning() // after the level reset
 
     // stage the replay: nFiles roughly equal parquet chunks
     val evBase = Tables.load(spark, sfDir, "events")

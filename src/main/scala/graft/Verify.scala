@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -14,14 +13,8 @@ object Verify {
     // must select the same set or a filtered rerun compares stale output
     val keep = (name: String) => only.forall(_.exists(name.startsWith))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftSession.silenceBoundedWindowWarning() // after the level reset
+    val spark = GraftSession.get(master = s"local[$cpus]",
+      shufflePartitions = cpus.toInt, appName = "graft-verify")
     new java.io.File(outDir).mkdirs()
     // Closed-over-the-registry dump: a query that throws still writes a
     // one-row sentinel parquet (schema: verify_error STRING), so the

@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 /** Vector math over `ARRAY<FLOAT/DOUBLE>` embedding columns. The dot
   * product is a native codegen'd Catalyst expression
   * ([[graft.plans.DotProduct]] — a tight primitive loop inside whole-stage
-  * codegen); callers must have run [[graft.plans.GraftFunctions.register]]
-  * on the session (all graft entry points do). Sums fold left-to-right in
+  * codegen), registered on the session by [[graft.GraftSession.tune]]
+  * (which every session from `GraftSession.get` has been through). Sums fold left-to-right in
   * array order, matching DuckDB's list functions, which keeps cosine
   * values engine-portable bit-for-bit.
   */

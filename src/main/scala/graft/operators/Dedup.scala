@@ -921,7 +921,6 @@ object Dedup {
     // corpus-sized side (one heavy long-array row per doc), so broadcast
     // only when its true array volume fits — otherwise doc_id
     // equi-shuffles, deterministically.
-    graft.plans.GraftFunctions.register(docs.sparkSession)
     val arrBytes = arrs.agg(coalesce(sum(col("sz")).cast("long"), lit(0L)))
       .head().getLong(0) * 8L + arrs.count() * 32L
     val byId0 = arrs.select(col("doc_id"), sort_array(col("arr")).as("arr"),
@@ -1035,7 +1034,6 @@ object Dedup {
     * vector (not per pair), and the per-pair dot is the native codegen'd
     * [[graft.plans.DotProduct]]. */
   def embeddingNearDupPairs(emb: DataFrame, minCos: Double = 0.4): DataFrame = {
-    graft.plans.GraftFunctions.register(emb.sparkSession)
     val e = emb.select(col("vec_id"), VectorFns.toDouble(col("embedding")).as("e"))
       .filter(VectorFns.nonZero(col("e")))
       .withColumn("nrm", VectorFns.norm(col("e")))
@@ -1191,7 +1189,6 @@ object Dedup {
   def semanticClustersBanded(emb: DataFrame, minCos: Double = 0.4,
       dim: Int = 64, planes: Int = 8, tables: Int = 8): DataFrame = {
     require(planes * tables <= 64, "signature must fit one long")
-    graft.plans.GraftFunctions.register(emb.sparkSession)
     val mask = (1L << planes) - 1
     // zero-norm vectors skip candidate generation (VectorFns.nonZero) but
     // keep their singleton row via the final left join over all of emb
@@ -1264,7 +1261,6 @@ object Dedup {
     * — instead of silently dropping the rows (r7 ADVICE). */
   def embeddingDecontaminate(corpus: DataFrame, evalSet: DataFrame,
       minCos: Double = 0.4): DataFrame = {
-    graft.plans.GraftFunctions.register(corpus.sparkSession)
     val ev = evalSet.select(col("vec_id").as("eid"),
         VectorFns.toDouble(col("embedding")).as("ee"))
       .filter(VectorFns.nonZero(col("ee")))
@@ -1378,7 +1374,6 @@ object Dedup {
     * [[semanticClustersBanded]]'s actual join input. */
   private[graft] def bandedCandidateCount(emb: DataFrame, dim: Int = 64,
       planes: Int = 8, tables: Int = 8): Long = {
-    graft.plans.GraftFunctions.register(emb.sparkSession)
     val mask = (1L << planes) - 1
     val sig = emb.select(col("vec_id"), VectorFns.toDouble(col("embedding")).as("e"))
       // same nonZero gate as the operator (and as bandedJoinVolume): a
@@ -1405,7 +1400,6 @@ object Dedup {
     * quadratic cost at smoke scale). Used by `ScaleSmoke --d23-only`. */
   private[graft] def bandedJoinVolume(emb: DataFrame, dim: Int = 64,
       planes: Int = 8, tables: Int = 8): Long = {
-    graft.plans.GraftFunctions.register(emb.sparkSession)
     val mask = (1L << planes) - 1
     emb.select(VectorFns.toDouble(col("embedding")).as("e"))
       .filter(VectorFns.nonZero(col("e")))

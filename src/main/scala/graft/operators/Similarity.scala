@@ -50,7 +50,6 @@ object Similarity {
     * vectors (self excluded), ranked on cosine rounded to 6dp with vec_id
     * tiebreak (deterministic + engine-portable). */
   def bruteForceTopK(emb: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    graft.plans.GraftFunctions.register(emb.sparkSession)
     val corpus = emb.select(col("vec_id"), VectorFns.toDouble(col("embedding")).as("e"))
       .filter(VectorFns.nonZero(col("e")))
       .withColumn("nrm", VectorFns.norm(col("e")))
@@ -82,7 +81,6 @@ object Similarity {
   def lshTopKMulti(emb: DataFrame, queries: DataFrame, k: Int, dim: Int = 64,
       planes: Int = 4, tables: Int = 16): DataFrame = {
     require(planes * tables <= 64, "signature must fit one long")
-    graft.plans.GraftFunctions.register(emb.sparkSession)
     val mask = (1L << planes) - 1
     def bandRows(sig: Column): Column = explode(array((0 until tables).map { t =>
       struct(lit(t).as("t"), shiftright(sig, t * planes).bitwiseAND(lit(mask)).as("b"))
@@ -111,7 +109,6 @@ object Similarity {
     * bucket. Returns the same shape as [[bruteForceTopK]]; recall < 1. */
   def lshTopK(emb: DataFrame, queries: DataFrame, k: Int, dim: Int = 64,
       planes: Int = 8): DataFrame = {
-    graft.plans.GraftFunctions.register(emb.sparkSession)
     val corpus = emb.select(col("vec_id"), VectorFns.toDouble(col("embedding")).as("e"))
       .filter(VectorFns.nonZero(col("e")))
       .withColumn("nrm", VectorFns.norm(col("e")))
@@ -181,7 +178,6 @@ object Similarity {
     * home-cell assignment). */
   private[operators] def ivfParts(emb: DataFrame, nlist: Int)
       : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    graft.plans.GraftFunctions.register(emb.sparkSession)
     val corpus = prepCorpus(emb)
     val cents = prepCentroids(emb, nlist)
     val scores = cellScores(corpus, cents)
@@ -410,7 +406,6 @@ object Similarity {
     * as every ranking here. */
   def quantizedRerank(emb: DataFrame, queries: DataFrame, k: Int,
       candMult: Int = 4): DataFrame = {
-    graft.plans.GraftFunctions.register(emb.sparkSession)
     val floats = emb.select(col("vec_id"), VectorFns.toDouble(col("embedding")).as("e"))
       .filter(VectorFns.nonZero(col("e")))
       .withColumn("nrm", VectorFns.norm(col("e")))
@@ -479,7 +474,6 @@ object Similarity {
     * No all-pairs float join anywhere. */
   def pqTopK(emb: DataFrame, queries: DataFrame, k: Int, m: Int = 8,
       ksub: Int = 16, dim: Int = 64): DataFrame = {
-    graft.plans.GraftFunctions.register(emb.sparkSession)
     val dsub = dim / m
     require(m * dsub == dim, s"dim $dim must split into $m subvectors")
     def subs(df: DataFrame) = df
@@ -531,7 +525,6 @@ object Similarity {
   def ivfPqTopK(emb: DataFrame, queries: DataFrame, k: Int,
       nlist: Int = 8, nprobe: Int = 2, m: Int = 8, ksub: Int = 16,
       dim: Int = 64, candMult: Int = 4): DataFrame = {
-    graft.plans.GraftFunctions.register(emb.sparkSession)
     val dsub = dim / m
     require(m * dsub == dim, s"dim $dim must split into $m subvectors")
     // ---- coarse stage: the shared deterministic quantizer --------------

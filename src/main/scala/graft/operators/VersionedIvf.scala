@@ -230,7 +230,6 @@ object VersionedIvf {
       s"nlist $nlist exceeds the cap MaxNlist = ${Similarity.MaxNlist}: the " +
         "centroid table rides one broadcast row, bounded at ~2 GiB")
     val spark = emb.sparkSession
-    graft.plans.GraftFunctions.register(spark)
     val prior = currentSnapshot(root)
     val base = prior.map(_._1)
     val ver = VersionedArtifact.nextName(root)
@@ -262,7 +261,6 @@ object VersionedIvf {
       batchId: String): String = {
     require(batchId != "base" && batchId != "*",
       s"append: batch id '$batchId' is reserved")
-    graft.plans.GraftFunctions.register(spark)
     val corpus = Similarity.prepCorpus(newEmb)
     var (base, m) = liveSnapshot(root)
     if (m.batches.contains(batchId)) return base
@@ -314,7 +312,6 @@ object VersionedIvf {
     * by CAS — a concurrent committed writer surfaces a retryable
     * [[CommitConflictException]] to the takedown scheduler. */
   def delete(spark: SparkSession, root: String, vecIds: DataFrame): String = {
-    graft.plans.GraftFunctions.register(spark)
     val (base, m) = liveSnapshot(root)
     val ids = broadcast(vecIds.select(col("vec_id")).distinct())
     // Which leaves hold a deleted id — ONE probe job over every segment
@@ -400,7 +397,6 @@ object VersionedIvf {
     * quantizer — deterministically, because the zero test is on exact
     * integers. CAS-committed, like [[compact]]. */
   def retrain(spark: SparkSession, root: String): String = {
-    graft.plans.GraftFunctions.register(spark)
     val (base, m) = liveSnapshot(root)
     val ver = VersionedArtifact.nextName(root)
     val w = segToken()
@@ -449,7 +445,6 @@ object VersionedIvf {
   def probeFiltered(spark: SparkSession, root: String, queries: DataFrame,
       k: Int, nprobe: Int, postingsFilter: Column,
       asOf: Option[String] = None): DataFrame = {
-    graft.plans.GraftFunctions.register(spark)
     val m = resolveManifest(root, asOf)
     val cents = readCentroids(spark, root, m)
     val (qs, qprobe) = Similarity.queryProbe(cents, queries, nprobe)
@@ -466,7 +461,6 @@ object VersionedIvf {
     * postings. Appended vectors piling into few cells or falling
     * affinity are the [[retrain]] signals. */
   def stats(spark: SparkSession, root: String): DataFrame = {
-    graft.plans.GraftFunctions.register(spark)
     val m = liveSnapshot(root)._2
     readLeaves(spark, root, m.leaves).join(broadcast(readCentroids(spark, root, m)), "cid")
       .select(col("cid"), col("batch_id"),

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -59,25 +58,5 @@ object RewriteHofDotProduct extends Rule[LogicalPlan] {
           refsExactly(ml, mr, zargs) && refsExactly(al, ar, margs) &&
           isIdentity(finish) =>
       DotProduct(a, b)
-  }
-}
-
-/** `spark.sql.extensions=graft.plans.GraftExtensions` — registers graft's
-  * native expressions and optimizer rules on session build. Sessions that
-  * already exist (e.g. a driver-owned one) get the same via
-  * [[graft.GraftSession.tune]], which uses `experimental.extraOptimizations`
-  * for the rule and the function registry for the expressions. */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((org.apache.spark.sql.catalyst.FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
-      (exprs: Seq[Expression]) => DotProduct(exprs.head, exprs(1))))
-    ext.injectFunction((org.apache.spark.sql.catalyst.FunctionIdentifier("graft_lsh_sig"),
-      new ExpressionInfo(classOf[LshSignature].getName, "graft_lsh_sig"),
-      (exprs: Seq[Expression]) => LshSignature(exprs.head, exprs(1), exprs(2))))
-    ext.injectFunction((org.apache.spark.sql.catalyst.FunctionIdentifier("graft_sorted_intersect"),
-      new ExpressionInfo(classOf[SortedIntersectCount].getName, "graft_sorted_intersect"),
-      (exprs: Seq[Expression]) => SortedIntersectCount(exprs.head, exprs(1))))
-    ext.injectOptimizerRule(_ => RewriteHofDotProduct)
   }
 }

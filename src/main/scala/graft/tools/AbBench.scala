@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Interleaved conf A/B over registered queries —
   * `runMain graft.tools.AbBench <sfDir> <reps> <key=value[;key=value]> <query> [query ...]`.
   *
@@ -25,12 +23,8 @@ object AbBench {
     }.toSeq
     val names = args.drop(3).toSeq
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.get(master = s"local[$cpus]",
+      shufflePartitions = cpus.toInt, appName = "graft-ab-bench")
     val saved = overrides.map { case (k, _) =>
       (k, spark.conf.getOption(k)) }
     def setMode(on: Boolean): Unit = overrides.foreach { case (k, v) =>

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Measurement tool: Spark JOB counts per registered query —
   * `runMain graft.tools.JobCount <sfDir> <query> [query ...]`.
@@ -13,8 +12,9 @@ import org.apache.spark.sql.SparkSession
   * bench seconds alone can't distinguish fewer jobs from faster tasks.
   * Runs each query once warm (construction included, since lifecycle
   * queries submit jobs while building), then counts jobs across a fresh
-  * construction + full-output execution. Uses the Bench session shape
-  * (local[$SPARK_GRAFT_CPUS], AQE on) so counts match bench conditions.
+  * construction + full-output execution. Runs on Bench's session
+  * (`GraftSession.get` at local[$SPARK_GRAFT_CPUS]) so counts match bench
+  * conditions.
   */
 object JobCount {
   def main(args: Array[String]): Unit = {
@@ -23,12 +23,8 @@ object JobCount {
     val names = args.drop(1).toSeq
     require(names.nonEmpty, "usage: JobCount <sfDir> <query> [query ...]")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.get(master = s"local[$cpus]",
+      shufflePartitions = cpus.toInt, appName = "graft-job-count")
     val counter = new java.util.concurrent.atomic.AtomicLong
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit =
@@ -38,9 +34,8 @@ object JobCount {
       val before = counter.get()
       graft.SparkEntry.queries(name)(spark, sfDir)
         .queryExecution.toRdd.count()
-      // listener events post asynchronously; give the bus a beat to drain
-      // (measurement tool — a fixed settle beats private-API bus access)
-      Thread.sleep(500)
+      // listener events post asynchronously: drain the bus before reading
+      org.apache.spark.graft.ListenerBusHook.waitUntilEmpty(spark.sparkContext)
       counter.get() - before
     }
     val out = names.map { n =>

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Build the scaling-ledger corpus —
@@ -19,9 +18,8 @@ object MakeScaled {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val out = args.drop(1).headOption.getOrElse("/tmp/graft_sfx10")
     val copies = args.drop(2).headOption.map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.get(master = "local[8]",
+      shufflePartitions = 8, appName = "graft-make-scaled")
     val docs = spark.read.parquet(s"$src/documents.parquet")
     val scaled = (0 until copies).map(k =>
       docs.withColumn("doc_id", col("doc_id") + lit(k.toLong * 1000000000L)))

@@ -75,4 +75,34 @@ class RulesSpec extends AnyFunSuite {
     assert(!optimized.contains("graft_dot"))
     assert(df.collect().head.getDouble(0) === 10.0)
   }
+
+  // The session recipe: graft's functions and rule come from
+  // GraftSession.tune alone (operators never register them), so a session
+  // that skipped it must fail loudly and one tune must fix it.
+  private val graftFnQueries: Seq[(String, String, Any)] = Seq(
+    ("graft_dot", "SELECT graft_dot(array(1.0D, 2.0D), array(3.0D, 4.0D))", 11.0),
+    ("graft_sorted_intersect",
+      "SELECT graft_sorted_intersect(array(1L, 2L, 3L), array(2L, 3L, 4L))", 2))
+
+  test("an untuned session fails naming the graft function; tune installs it") {
+    val fresh = spark.newSession()
+    graftFnQueries.foreach { case (fn, sql, _) =>
+      val err = intercept[org.apache.spark.sql.AnalysisException](fresh.sql(sql).collect())
+      assert(err.getMessage.contains(fn), err.getMessage)
+    }
+    GraftSession.tune(fresh)
+    graftFnQueries.foreach { case (_, sql, want) =>
+      assert(fresh.sql(sql).head().get(0) == want, sql)
+    }
+  }
+
+  test("tune is idempotent: twice leaves exactly one RewriteHofDotProduct") {
+    val fresh = spark.newSession()
+    def installed = fresh.experimental.extraOptimizations
+      .count(_ == graft.plans.RewriteHofDotProduct)
+    assert(installed === 0)
+    GraftSession.tune(fresh)
+    GraftSession.tune(fresh)
+    assert(installed === 1)
+  }
 }

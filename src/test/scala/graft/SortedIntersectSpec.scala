@@ -14,7 +14,6 @@ class SortedIntersectSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("merge-count == size(array_intersect) on random sorted distinct arrays") {
-    graft.plans.GraftFunctions.register(spark)
     val rnd = new Random(7)
     val rows = (1 to 200).map { _ =>
       // draw from a small universe so intersections are non-trivial
@@ -31,7 +30,6 @@ class SortedIntersectSpec extends AnyFunSuite {
   }
 
   test("empty, disjoint, identical, and null-element inputs") {
-    graft.plans.GraftFunctions.register(spark)
     val df = Seq(
       (Array.empty[Long], Array(1L, 2L)),             // empty side -> 0
       (Array(1L, 3L, 5L), Array(2L, 4L, 6L)),         // disjoint -> 0
@@ -51,7 +49,6 @@ class SortedIntersectSpec extends AnyFunSuite {
   }
 
   test("rejects non-ARRAY<BIGINT> inputs at analysis") {
-    graft.plans.GraftFunctions.register(spark)
     val err = intercept[Exception] {
       Seq((Array(1.0), Array(2.0))).toDF("a", "b")
         .select(call_function("graft_sorted_intersect", $"a", $"b")).collect()
