@@ -39,9 +39,11 @@ package graft
   *     The subquadratic scale forms (d20, s02/s05, g17) stay at sf0.1.
   *     The artifact records which queries ran at the cert tier.
   *   - shuffle read/write bytes per query, via a `SparkListener` over
-  *     task metrics, deltas snapshotted around the LAST timed run —
-  *     bytes are deterministic per run, unlike time; at 100× data,
-  *     shuffle bytes predict cost.
+  *     task metrics, deltas snapshotted around the LAST timed run — at
+  *     100× data, shuffle bytes predict cost. Bytes can vary between
+  *     runs of the same plan (p07 has read 6.80 MB in one run and
+  *     10.46 MB in others, q18 3.89–4.85 MB), so a byte delta needs a
+  *     repeat run before it counts as a plan change.
   *   - a query that throws reports `-1` time plus its error class+message
   *     under `"errors"`, and the process exits 1: a broken query can never
   *     masquerade as a fast one.
@@ -245,7 +247,8 @@ object Bench {
       runSuite(first = si == 1)
     }
     // per-query: min over passes of the per-pass median; shuffle bytes
-    // from the first pass that ran it cleanly (bytes are deterministic);
+    // from the first pass that ran it cleanly (bytes can vary between
+    // runs, so one pass's bytes are a sample, not a plan signature);
     // spread across ALL timed runs of all passes
     val results = selected.indices.map { i =>
       val rs = bySuite.map(_(i))
@@ -312,13 +315,15 @@ object Bench {
       java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_SELF.json"),
         (fullLine + "\n").getBytes("UTF-8"))
     }
-    // a filtered dev run reports everything it ran — the headline cut
-    // only matters for the full suite's 2000-char stdout budget
+    // a filtered dev run reports everything it ran, shuffle bytes
+    // included (it writes no BENCH_SELF.json) — the headline cut only
+    // matters for the full suite's 2000-char stdout budget
     val hl = results.filter { case (k, _, _, _, _, _) =>
       only.nonEmpty || headline(k) }
       .map { case (k, v, _, _, _, _) => s"\"$k\":${num(v)}" }.mkString("{", ",", "}")
+    val filteredBytes = if (only.nonEmpty) s""""shuffle_bytes":$sh,""" else ""
     val compact = s"""{"metric":"total","value":${num(total)},$meta,""" +
-      s""""queries":$hl,"spread_outliers":$outliers,""" +
+      s""""queries":$hl,$filteredBytes"spread_outliers":$outliers,""" +
       s""""queries_all":${results.size},"full":"BENCH_SELF.json"}"""
     spark.stop()
     // ...and the compact line goes LAST on stdout so the driver's

@@ -7,7 +7,9 @@ import graft.sources.EdgeList
   * edge-list file and print them — one parameterized entry point replacing
   * the reference's 11 per-dataset driver classes
   * (`mapreducePredictionTwitter*.java`; print loop at
-  * `mapreducePredictionTwitter.java:136-140`).
+  * `mapreducePredictionTwitter.java:136-140`). It plans through
+  * [[graft.operators.GraphOps.trianglesAuto]], the skew-choosing entry
+  * point g01 runs.
   *
   * Usage: `runMain graft.TriangleMain <edge-file> [delimiter-regex] [--count-only]`
   */
@@ -21,8 +23,7 @@ object TriangleMain {
     val delim = args.drop(1).find(!_.startsWith("--")).getOrElse("\\s+")
     val countOnly = args.contains("--count-only")
     val spark = GraftSession.get(appName = "graft-triangles")
-    val canon = GraphOps.canonicalEdges(EdgeList.read(spark, path, delim)).persist()
-    val tri = GraphOps.trianglesFromCanonical(canon)
+    val tri = GraphOps.trianglesAuto(EdgeList.read(spark, path, delim))
     if (countOnly) println(s"triangles: ${tri.count()}")
     else tri.orderBy("a", "b", "c").collect()
       .foreach(r => println(s"${r.getLong(0)},${r.getLong(1)},${r.getLong(2)}"))

@@ -57,9 +57,8 @@ object GraphOps {
   /** Triangle join over an already-canonical `(u,v)` edge set. The plan
     * references the canonical set three times with *different* join keys,
     * so exchange reuse cannot deduplicate them (verified on the executed
-    * plan) — drivers that own the lifecycle should `.persist()` the
-    * canonical set first (see TriangleMain/GraphBench) to scan the input
-    * once instead of three times. */
+    * plan): over a lazy set the input is scanned three times.
+    * [[trianglesAuto]] passes a checkpointed set, so it is scanned once. */
   def trianglesFromCanonical(canon: DataFrame): DataFrame = {
     val ab = canon.toDF("a", "b")
     val ac = canon.toDF("a", "c")
@@ -96,8 +95,12 @@ object GraphOps {
     * semi-join needs no direction test. */
   def trianglesDegreeOrdered(edges: DataFrame): DataFrame = {
     val canon = canonicalEdges(edges)
-    val deg = symmetrize(canon.toDF("src", "dst"))
-      .groupBy(col("src").as("n")).agg(count(lit(1)).as("d"))
+    trianglesOriented(canon, degreeTable(canon))
+  }
+
+  /** The orientation body of [[trianglesDegreeOrdered]] over a canonical
+    * `(u,v)` set and its `(node, degree)` table. */
+  private def trianglesOriented(canon: DataFrame, deg: DataFrame): DataFrame = {
     val oriented = canon
       .join(deg.toDF("u", "du"), "u")
       .join(deg.toDF("v", "dv"), "v")
@@ -175,6 +178,8 @@ object GraphOps {
       .agg(sort_array(collect_list(col("dst"))).as("neighbors"))
   }
 
+  private val SkewThreshold = 10L
+
   /** Cost-based triangle plan selection — wires the choice the two
     * baselines left to the user (r7 verdict gap #4): BASELINE_SELF
     * measures the id-ordered join winning on near-uniform graphs
@@ -182,45 +187,47 @@ object GraphOps {
     * pure overhead there) and the degree-ordered orientation winning on
     * power-law (69 s / 0.84 GB vs 107 s / 1.60 GB at 5M edges, and
     * structurally immune to the hub-sorts-low deg² blowup). The branch
-    * predictor is the g21 skew certificate: max/median distinct degree,
-    * measured here with ONE eager degree aggregate (max exact,
-    * median via percentile_approx — the decision only picks a plan,
-    * both branches are output-identical, so the median needs no
-    * engine-portable definition and no collect of the degree list).
-    * Threshold ~10 separates the two baseline regimes (uniform fixture
-    * ≈ 1–2, power-law fixture ≥ 100).
+    * predictor is the g21 skew certificate: max/median distinct degree
+    * ([[degreeStats]] — the decision only picks a plan, both branches are
+    * output-identical, so the approximate median needs no engine-portable
+    * definition). [[SkewThreshold]] 10 separates the two baseline regimes
+    * (uniform fixture ≈ 1–2, power-law fixture ≥ 100).
     *
-    * NOTE: building the plan runs the degree aggregate eagerly (the
-    * knnJoin true-cardinality convention) — plan choice from measured
-    * statistics, never from a guess that flaps at scale. When the caller
-    * already knows the skew profile — composing over a not-yet-
-    * materialized edge set, or re-invoking on a graph whose degree stats
-    * are maintained as a pipeline artifact — pass
+    * Building the plan canonicalizes the input ONCE into an eager
+    * `localCheckpoint` (plan choice from measured statistics, the knnJoin
+    * true-cardinality convention) and derives ONE degree table from it:
+    * the statistics and the orientation both read that table, and either
+    * branch reads the checkpointed set, never the raw edges again. The
+    * returned plan owns the checkpoint (ContextCleaner reclaims it).
+    *
+    * When the caller already knows the skew profile — composing over a
+    * not-yet-materialized edge set, or re-invoking on a graph whose
+    * degree stats are maintained as a pipeline artifact — pass
     * `knownStats = Some((maxDeg, medianDeg))` and plan construction is
     * lazy: no scan until the plan executes (the knnJoin `knownBytes`
     * convention, r8 ADVICE applied here). */
-  def trianglesAuto(edges: DataFrame, skewThreshold: Long = 10,
+  def trianglesAuto(edges: DataFrame,
       knownStats: Option[(Long, Long)] = None): DataFrame = {
-    val (maxDeg, medDeg0) = knownStats.getOrElse {
-      val stats = degrees(edges)
-        .agg(max(col("degree")).cast("long").as("mx"),
-          percentile_approx(col("degree"), lit(0.5), lit(10000)).cast("long").as("md"))
-        .head()
-      (if (stats.isNullAt(0)) 0L else stats.getLong(0),
-        if (stats.isNullAt(1)) 1L else stats.getLong(1))
+    def skewed(stats: (Long, Long)) = stats._1 / math.max(1L, stats._2) >= SkewThreshold
+    knownStats match {
+      case Some(stats) =>
+        if (skewed(stats)) trianglesDegreeOrdered(edges) else triangles(edges)
+      case None =>
+        val canon = canonicalEdges(edges).localCheckpoint()
+        val deg = degreeTable(canon)
+        if (skewed(degreeStats(deg))) trianglesOriented(canon, deg)
+        else trianglesFromCanonical(canon)
     }
-    val medDeg = math.max(1L, medDeg0)
-    if (maxDeg / medDeg >= skewThreshold) trianglesDegreeOrdered(edges)
-    else triangles(edges)
   }
 
   /** Undirected degree (distinct neighbors; self-loops excluded). */
-  def degrees(edges: DataFrame): DataFrame = {
-    val canon = canonicalEdges(edges)
+  def degrees(edges: DataFrame): DataFrame = degreeTable(canonicalEdges(edges))
+
+  /** `(node, degree)` of a canonical `(u,v)` edge set. */
+  private def degreeTable(canon: DataFrame): DataFrame =
     symmetrize(canon.toDF("src", "dst"))
       .groupBy(col("src").as("node"))
       .agg(count(lit(1)).as("degree"))
-  }
 
   /** Incrementally-MAINTAINED degrees — the certified producer for
     * [[trianglesAuto]]'s `knownStats` (r9 verdict #8). A pipeline that

@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.{Dedup, GraphOps}
+import org.apache.spark.sql.DataFrame
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
@@ -35,13 +36,26 @@ class GraphPropertySpec extends AnyFunSuite {
     } yield (a, b, c)).toSet
   }
 
+  private def assertBruteForce(tri: DataFrame, es: Seq[(Long, Long)]): Unit = {
+    val got = tri.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+    assert(got.forall { case (a, b, c) => a < b && b < c }, s"not canonical: $es")
+    assert(got.length === got.toSet.size, s"duplicates: $es")
+    assert(got.toSet === brute(es), s"mismatch vs oracle: $es")
+  }
+
   test("triangles: sorted, unique, closed, equal to brute force — ∀ random graphs") {
     samples(edgeGen, 10).foreach { es =>
-      val got = GraphOps.triangles(es.toDF("src", "dst")).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      assert(got.forall { case (a, b, c) => a < b && b < c }, s"not canonical: $es")
-      assert(got.length === got.toSet.size, s"duplicates: $es")
-      assert(got.toSet === brute(es), s"mismatch vs oracle: $es")
+      assertBruteForce(GraphOps.triangles(es.toDF("src", "dst")), es)
+      assertBruteForce(GraphOps.trianglesAuto(es.toDF("src", "dst")), es)
+      // the same graph with a planted hub joined to every node and to 30
+      // fresh leaves: the leaves are most of the nodes, so the median
+      // degree is 1, max/median >= 33, and trianglesAuto must orient
+      val hub = 100L
+      val hubbed = es ++ es.flatMap(e => Seq(e._1, e._2)).distinct.map(n => (hub, n)) ++
+        (1L to 30L).map(l => (hub, hub + l))
+      val tri = GraphOps.trianglesAuto(hubbed.toDF("src", "dst"))
+      assert(TriangleBranch.oriented(tri), s"planted hub took the id-ordered join: $es")
+      assertBruteForce(tri, hubbed)
     }
   }
 

@@ -372,26 +372,25 @@ class PlanSpec extends AnyFunSuite {
 
   test("g01 trianglesAuto selects the branch the skew certificate predicts, on both graph families") {
     import graft.operators.GraphOps
-    // near-uniform graph (max/median ≈ 1): the id-ordered join — its
-    // plan has NO localCheckpoint barrier (the orientation materializes
-    // its oriented edge set as a LogicalRDD / ExistingRDD scan)
+    // near-uniform graph (max/median ≈ 1): the id-ordered join, which
+    // lacks the orientation's wedge attribute (TriangleBranch)
     val uniform = spark.range(4000).selectExpr(
       "id AS src", "(id * 37) % 4000 AS dst")
     val uniPlan = GraphOps.trianglesAuto(uniform)
-      .queryExecution.optimizedPlan.toString
-    assert(!uniPlan.contains("LogicalRDD"),
-      s"uniform graph must take the id-ordered join (no orientation barrier):\n$uniPlan")
+    assert(!TriangleBranch.oriented(uniPlan),
+      s"uniform graph must take the id-ordered join (no oriented wedge):\n" +
+        uniPlan.queryExecution.optimizedPlan)
     // power-law graph (hub node 0, skew ratio >= threshold): the
-    // degree-ordered orientation, visible as the checkpointed scan
+    // degree-ordered orientation
     val skewed = spark.range(8000).selectExpr(
       "CASE WHEN id % 2 = 0 THEN 0 ELSE id END AS src",
       "(id * 37) % 4000 AS dst")
     val skewPlan = GraphOps.trianglesAuto(skewed)
-      .queryExecution.optimizedPlan.toString
-    assert(skewPlan.contains("LogicalRDD"),
-      s"skewed graph must take the degree-ordered orientation:\n$skewPlan")
+    assert(TriangleBranch.oriented(skewPlan),
+      s"skewed graph must take the degree-ordered orientation:\n" +
+        skewPlan.queryExecution.optimizedPlan)
     // both branches stay output-identical through the chooser
-    val viaAuto = GraphOps.trianglesAuto(skewed)
+    val viaAuto = skewPlan
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     val viaId = GraphOps.triangles(skewed)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
