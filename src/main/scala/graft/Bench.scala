@@ -322,9 +322,11 @@ object Bench {
       only.nonEmpty || headline(k) }
       .map { case (k, v, _, _, _, _) => s"\"$k\":${num(v)}" }.mkString("{", ",", "}")
     val filteredBytes = if (only.nonEmpty) s""""shuffle_bytes":$sh,""" else ""
+    // only a full run writes the artifact the pointer names
+    val full = if (only.isEmpty) ""","full":"BENCH_SELF.json"""" else ""
     val compact = s"""{"metric":"total","value":${num(total)},$meta,""" +
       s""""queries":$hl,$filteredBytes"spread_outliers":$outliers,""" +
-      s""""queries_all":${results.size},"full":"BENCH_SELF.json"}"""
+      s""""queries_all":${results.size}$full}"""
     spark.stop()
     // ...and the compact line goes LAST on stdout so the driver's
     // 2000-char tail capture always contains one complete JSON record

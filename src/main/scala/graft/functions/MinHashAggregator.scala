@@ -6,14 +6,16 @@ import org.apache.spark.sql.functions.udaf
 
 /** Mergeable MinHash sketch as a typed aggregate.
   *
-  * [[graft.operators.Dedup.minhashSignature]] computes signatures with K
-  * independent `min` aggregates — fine for one batch. This aggregator
-  * produces the same signature as ONE mergeable buffer, which is what an
-  * incremental 100 TB pipeline needs: per-partition/per-day sketches can
-  * be persisted and `merge`d (elementwise min) without re-reading old
-  * data, exactly like HLL sketch unions. Input is the portable base hash
-  * of each shingle ([[PortableHash.baseHash]]), so results match the
-  * column-wise formulation and the DuckDB oracle.
+  * [[graft.operators.Dedup.minhashSignature]] computes a document's
+  * signature in-row from its tokens (the `graft_minhash` kernel) — fine
+  * when the whole document is in one row. This aggregator produces the
+  * same signature as ONE mergeable buffer over a stream of shingle
+  * hashes, which is what an incremental 100 TB pipeline needs:
+  * per-partition/per-day sketches can be persisted and `merge`d
+  * (elementwise min) without re-reading old data, exactly like HLL sketch
+  * unions. Input is the portable base hash of each shingle
+  * ([[PortableHash.baseHash]]), so results match the in-row kernel and
+  * the DuckDB oracle — an independent path the specs compare it with.
   */
 object MinHashAggregator {
 

@@ -9,8 +9,9 @@ import org.apache.spark.sql.functions._
   * hash), MinHash+LSH, SimHash, exact n-gram Jaccard, and embedding-cosine
   * near-dup. Everything is DataFrame-native (explode/groupBy/join — no
   * driver-side loops), so the same plans run on a 1000-executor cluster:
-  * the only shuffles are the per-doc signature aggregation and the
-  * band-bucket self-join, both keyed well for AQE.
+  * MinHash signatures are computed in-row (a native kernel per
+  * document), so the band-bucket self-join is the MinHash path's only
+  * shuffle, keyed well for AQE.
   *
   * Hashes use [[PortableHash]] (md5-derived) so every sketch is
   * reproducible in the DuckDB oracle; swap in xxhash64 for raw speed.
@@ -25,14 +26,12 @@ object Dedup {
     * shuffle every shingle row. Tokenization runs in its own projection
     * (the [[TextFns.ngramsOfTokens]] performance contract). */
   def shingles(docs: DataFrame): DataFrame =
-    // Scale-adaptive fan-out on doc_id (graft.FanOut): tokenize + the
-    // per-shingle md5 × K MinHash transforms above this are the dominant
-    // CPU of every band/signature path, and on a small tier the scan
+    // Scale-adaptive fan-out on doc_id (graft.FanOut): tokenizing and
+    // hashing every shingle is per-row CPU, and on a small tier the scan
     // plans as ONE task. Hash-partitioning on doc_id keeps each doc's
-    // shingles colocated, so the minhashSignature groupBy(doc_id) above
-    // finds its distribution already satisfied — the fan-out REPLACES
-    // that exchange rather than adding one. No-op at scale (guard in
-    // FanOut.cpuBound).
+    // shingles colocated, so a doc_id-keyed aggregation above this (the
+    // incremental MinHash sketch) finds its distribution already
+    // satisfied. No-op at scale (guard in FanOut.cpuBound).
     graft.FanOut.cpuBound(docs, col("doc_id"))
       .select(col("doc_id"), TextFns.tokens(col("text")).as("__t"))
       .select(col("doc_id"),
@@ -168,19 +167,31 @@ object Dedup {
         (col("doc_id") =!= col("keeper_id")).as("is_dup"))
   }
 
-  /** K-column MinHash signature per document over bigram shingles.
+  /** K-column MinHash signature per document over bigram shingles:
+    * (doc_id, m0..mK-1), one row per document with at least one bigram.
     *
-    * Formulation note (both measured at sf0.1): explode + K min-aggs runs
-    * ~6 s; a fully in-row variant (`array_min` over `transform` per slot)
-    * runs ~7.6 s — the 32 per-row array materializations cost more than
-    * the exchange, which map-side partial aggregation already reduces to
-    * one partial row per (doc, mapper). The exploded form also scales:
-    * shuffle volume is O(docs × mappers) partials, not O(shingles). */
-  def minhashSignature(docs: DataFrame): DataFrame = {
-    val withH = shingles(docs).withColumn("h", PortableHash.baseHash(col("s")))
-    val aggs = (0 until K).map(k => min(PortableHash.minhash(col("h"), k)).as(s"m$k"))
-    withH.groupBy(col("doc_id")).agg(aggs.head, aggs.tail: _*)
-  }
+    * Formulation note: the signature is computed in-row by the native
+    * `graft_minhash` kernel ([[PortableHash.signature]]) — one primitive
+    * loop over the token array per document, no shingle rows, no
+    * regrouping. It replaced an explode + K `min` aggregates: on the
+    * perfbench `executor_work` corpus (4 cores, seed 7) d02's executor
+    * CPU per pass fell from 13.2 s to 2.2–3.5 s. The map-only shape also
+    * bands a stream row by row ([[streamingLshProbe]]). */
+  def minhashSignature(docs: DataFrame): DataFrame =
+    signatureArrays(docs).select(col("doc_id") +:
+      (0 until K).map(k => col("sig").getItem(k).as(s"m$k")): _*)
+
+  /** (doc_id, sig) with `sig` the K-slot signature array, one row per
+    * document with at least one bigram. The fan-out parallelizes the
+    * kernel on a one-task scan (no-op at scale or on a stream,
+    * FanOut.cpuBound). A bigram-less document's signature is null and
+    * the generator drops it in place: a Filter would be pushed below the
+    * fan-out and tokenize every document twice, once on the scan task. */
+  private def signatureArrays(docs: DataFrame): DataFrame =
+    graft.FanOut.cpuBound(docs, col("doc_id"))
+      .select(col("doc_id"), PortableHash.signature(TextFns.tokens(col("text"))).as("__s"))
+      .select(col("doc_id"),
+        explode(when(col("__s").isNotNull, array(col("__s")))).as("sig"))
 
   /** The incremental-pipeline MinHash path: each document's shingle
     * stream is split into deterministic slices (hash parity — stands in
@@ -211,11 +222,9 @@ object Dedup {
     * band, the signature array riding along so candidate pairs score
     * in-row. This IS the persisted LSH index of an incremental pipeline:
     * appending a day's documents appends their band rows. */
-  private[operators] def bandTable(docs: DataFrame, bands: Int): DataFrame = {
+  private[graft] def bandTable(docs: DataFrame, bands: Int): DataFrame = {
     val rows = K / bands
-    val sig = minhashSignature(docs)
-      .select(col("doc_id"), array((0 until K).map(k => col(s"m$k")): _*).as("sig"))
-    sig.select(col("doc_id"), col("sig"), explode(array(
+    signatureArrays(docs).select(col("doc_id"), col("sig"), explode(array(
         (0 until bands).map { b =>
           struct(lit(b).as("band"),
             md5(concat_ws(",", (0 until rows).map(r =>
@@ -225,15 +234,15 @@ object Dedup {
   }
 
   /** Signature-estimated Jaccard of two signature arrays (exact multiple
-    * of 1/K — engine-portable). */
+    * of 1/K — engine-portable): the native `graft_slot_eq` count of equal
+    * slots, over K. */
   private def estJaccard(a: Column, b: Column): Column =
-    round(aggregate(zip_with(a, b, (x, y) => when(x === y, 1).otherwise(0)),
-      lit(0), (acc, x) => acc + x).cast("double") / K, 4)
+    round(call_function("graft_slot_eq", a, b).cast("double") / K, 4)
 
   def minhashLshPairs(docs: DataFrame, bands: Int = 8): DataFrame = {
     // localCheckpoint: the band table feeds BOTH sides of the self-join —
-    // without the barrier the whole signature build (the md5 MinHash
-    // pass, d02's dominant cost) is re-derived once per side, and AQE
+    // without the barrier the whole signature build (tokenize + the md5
+    // MinHash kernel) is re-derived once per side, and AQE
     // sizes the join from compressed estimates that undercount the
     // 32-long sig arrays (the d13 flap class: at 50k smoke docs the
     // estimate slipped under the broadcast threshold and the driver
@@ -381,36 +390,6 @@ object Dedup {
     newVsCorpus.unionByName(newVsNew).distinct()
   }
 
-  /** Row-local MinHash band rows — the STREAMING-SAFE signature path:
-    * shingle set, K MinHash mins, and band keys are all computed inside
-    * one projection with higher-order array functions (`transform` /
-    * `array_min`), then the band structs explode row-locally. No
-    * explode→groupBy re-aggregation anywhere, so a `readStream` source
-    * bands its rows statelessly, micro-batch by micro-batch. Values are
-    * IDENTICAL to [[bandTable]]'s (min over the same distinct-shingle
-    * hash set; same md5 band keys), which StreamingSpec and the st14
-    * oracle both certify. Docs with no shingles (< 2 tokens) produce no
-    * rows, matching the aggregated path. */
-  private[graft] def bandRowsLocal(docs: DataFrame, bands: Int): DataFrame = {
-    val rows = K / bands
-    val sh = array_distinct(TextFns.bigramsOfTokens(col("__t")))
-    docs
-      .select(col("doc_id"), TextFns.tokens(col("text")).as("__t"))
-      .select(col("doc_id"), transform(sh, s => PortableHash.baseHash(s)).as("hs"))
-      .filter(size(col("hs")) >= 1)
-      .select(col("doc_id"), array((0 until K).map(k =>
-        array_min(transform(col("hs"), h => PortableHash.minhash(h, k)))): _*)
-        .as("sig"))
-      .select(col("doc_id"), col("sig"), explode(array(
-        (0 until bands).map { b =>
-          struct(lit(b).as("band"),
-            md5(concat_ws(",", (0 until rows).map(r =>
-              element_at(col("sig"), b * rows + r + 1).cast("string")): _*))
-              .as("bkey"))
-        }: _*)).as("bk"))
-      .select(col("doc_id"), col("sig"), col("bk.band"), col("bk.bkey"))
-  }
-
   /** Streaming incremental dedup (st14): each NEW document's LSH
     * candidate matches against the STATIC corpus band index — d14's
     * batch-vs-index probe under `readStream`, via st09's stream-static
@@ -420,9 +399,11 @@ object Dedup {
     * batch commits — the day-2 loop folds each admitted batch into the
     * index and the next batch probes it.
     *
-    * Streaming-safety is structural, not asserted: the probe side uses
-    * [[bandRowsLocal]] (zero stateful operators), and pair-level dedup
-    * (a doc pair can collide in several bands) is moved INTO the join —
+    * Streaming-safety is structural, not asserted: the probe side is
+    * [[bandTable]] itself, which is map-only (the in-row signature
+    * kernel and a band explode), so it bands a stream statelessly,
+    * micro-batch by micro-batch, with the batch index's values. Pair-level
+    * dedup (a doc pair can collide in several bands) is moved INTO the join —
     * a row survives only on the FIRST matching band, decided row-locally
     * from the two signature arrays riding the join. No `.distinct()`,
     * no dropDuplicates state, append mode end to end. At 100 TB that
@@ -434,7 +415,7 @@ object Dedup {
       bands: Int = 8): DataFrame = {
     val rows = K / bands
     val idx = bandTable(corpus, bands)
-    val probe = bandRowsLocal(newDocs, bands)
+    val probe = bandTable(newDocs, bands)
     def sliceEq(b: Int): Column =
       (0 until rows).map(r =>
         element_at(col("a.sig"), b * rows + r + 1) ===

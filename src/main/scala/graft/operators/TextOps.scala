@@ -35,78 +35,30 @@ object TextOps {
     *    are meaningless below it (a 7-token doc's single most common
     *    bigram is already 29% of it; ungated, every short doc flags).
     *
-    * Scale shape: everything is ROW-LOCAL — duplicate n-grams are found
-    * by sorting the in-row n-gram array and scanning adjacent equals,
-    * the longest-run fold gives the top-bigram count, and the coverage
-    * merge is a left fold over ascending hit positions — so the whole
+    * Scale shape: everything is ROW-LOCAL — both counts come from the
+    * native `graft_gopher_rep` kernel ([[graft.plans.GopherRepetition]]),
+    * one primitive pass per document over its token array: tokens are
+    * dense-ranked, n-grams compared as exact token sequences (no hashed
+    * stand-ins), the top-bigram count is the longest run of equal sorted
+    * bigram keys, and the coverage merges the hits' spans in ascending
+    * position (d19's islands semantics, intra-doc). So the whole
     * operator is one scan with ZERO shuffles (d19 needs the corpus-wide
-    * inverted df; this needs nothing outside the row). Every array the
-    * lambdas capture is projected to an attribute first (the
-    * [[TextFns.ngramsOfTokens]] performance contract), and the rules run
-    * over xxhash64-HASHED n-grams: equality is all they need, the hashes
-    * never leave the operator (counts and coverage do), and interpreted
-    * long comparisons beat interpreted string comparisons ~3× on the
-    * sf0.1 corpus (a 64-bit in-doc collision is ~L²/2⁶⁴ ≈ 10⁻¹⁵). */
+    * inverted df; this needs nothing outside the row). */
   def gopherRepetition(docs: org.apache.spark.sql.DataFrame,
-      dupN: Int = 5): org.apache.spark.sql.DataFrame = {
-    val w = dupN - 1
+      dupN: Int = 5): org.apache.spark.sql.DataFrame =
     docs.select(col("doc_id"), TextFns.tokens(col("text")).as("__t"))
       .select(col("doc_id"), size(col("__t")).cast("long").as("n_tokens"),
-        transform(TextFns.ngramsOfTokens(col("__t"), dupN),
-          g => xxhash64(g)).as("__g"),
-        array_sort(transform(TextFns.bigramsOfTokens(col("__t")),
-          b => xxhash64(b))).as("__sb"))
-      .withColumn("__sg", array_sort(col("__g")))
-      // duplicated n-grams: adjacent equals in the sorted array (i is the
-      // 0-based element index, so element_at(__sg, i) is the PREVIOUS
-      // element in 1-based element_at terms; the when() keeps i=0 from
-      // ever evaluating the out-of-range access)
-      .withColumn("__dups", array_distinct(filter(col("__sg"), (x, i) =>
-        when(i > 0, element_at(col("__sg"), i) === x).otherwise(lit(false)))))
-      // most-frequent-bigram count == longest equal run in the sorted
-      // bigram array: one fold, no per-doc grouping
-      .withColumn("__top",
-        when(size(col("__sb")) <= 1, size(col("__sb")).cast("long"))
-          .otherwise(aggregate(sequence(lit(2), size(col("__sb"))),
-            struct(lit(1L).as("run"), lit(1L).as("best")),
-            (acc, i) => {
-              val same = element_at(col("__sb"), i) === element_at(col("__sb"), i - 1)
-              when(same, struct((acc.getField("run") + 1L).as("run"),
-                  greatest(acc.getField("best"), acc.getField("run") + 1L).as("best")))
-                .otherwise(struct(lit(1L).as("run"), acc.getField("best").as("best")))
-            },
-            acc => acc.getField("best"))))
-      // merged coverage of duplicated n-grams: fold over ascending hit
-      // positions, each hit covering tokens [i, i+w]; the running `end`
-      // merges overlaps exactly like d19's gaps-and-islands.
-      // The size(__dups) short-circuit is ALSO a reference-count device:
-      // with a single downstream use CollapseProject inlines __dups'
-      // whole sort+distinct chain INTO the lambda capture (verified on
-      // the optimized plan), re-evaluating it per element — O(L² log L)
-      // per doc: 2× warm cost at the fixture's ~54-token docs, and
-      // growing quadratically with document length.
-      .withColumn("__dup_tokens",
-        when(size(col("__g")) === 0 || size(col("__dups")) === 0, lit(0L))
-          .otherwise(aggregate(
-            filter(sequence(lit(1), size(col("__g"))), i =>
-              array_contains(col("__dups"), element_at(col("__g"), i))),
-            struct(lit(0L).as("cov"), lit(0L).as("end")),
-            (acc, i) => struct(
-              (acc.getField("cov") + (i.cast("long") + w -
-                greatest(acc.getField("end"), i.cast("long") - 1))).as("cov"),
-              (i.cast("long") + w).as("end")),
-            acc => acc.getField("cov"))))
+        call_function("graft_gopher_rep", col("__t"), lit(dupN)).as("__r"))
       .select(col("doc_id"), col("n_tokens"),
-        col("__top").as("top_bigram_cnt"),
-        expr("10000 * __top * 2 div greatest(n_tokens, CAST(1 AS BIGINT))")
+        col("__r.top_bigram_cnt").as("top_bigram_cnt"),
+        expr("10000 * __r.top_bigram_cnt * 2 div greatest(n_tokens, CAST(1 AS BIGINT))")
           .as("top_bigram_frac_bp"),
-        col("__dup_tokens").as("dup5_tokens"),
-        expr("10000 * __dup_tokens div greatest(n_tokens, CAST(1 AS BIGINT))")
+        col("__r.dup_tokens").as("dup5_tokens"),
+        expr("10000 * __r.dup_tokens div greatest(n_tokens, CAST(1 AS BIGINT))")
           .as("dup5_frac_bp"))
       .withColumn("flagged", (col("n_tokens") >= 50 &&
         (col("top_bigram_frac_bp") > 2000 ||
           col("dup5_frac_bp") > 1500)).cast("int"))
-  }
 
   /** Sequence packing for pretraining: concatenate documents in a
     * deterministic order and cut the stream every `budgetTokens` tokens,
@@ -1060,7 +1012,7 @@ object TextOps {
     // coverage with d19's positional islands CTE restricted to IN-DOC
     // duplicates. Hash parity certifies both rules and the drop flag.
     Q("t17_gopher_repetition",
-      // heavy interpreted-lambda per-row work (sorted-array folds) over a
+      // per-row kernel work (token ranking, sorted n-gram keys) over a
       // one-task scan — fan out first (graft.FanOut, no-op at scale)
       (s, dir) => gopherRepetition(graft.FanOut.cpuBound(
           Tables.load(s, dir, "documents"), col("doc_id")))

@@ -119,5 +119,8 @@ object GraftFunctions {
       LshSignature(exprs.head, exprs(1), exprs(2)))
     ensure("graft_sorted_intersect")(exprs =>
       SortedIntersectCount(exprs.head, exprs(1)))
+    ensure("graft_minhash")(exprs => MinHashSignature(exprs.head, exprs(1)))
+    ensure("graft_slot_eq")(exprs => SlotEq(exprs.head, exprs(1)))
+    ensure("graft_gopher_rep")(exprs => GopherRepetition(exprs.head, exprs(1)))
   }
 }

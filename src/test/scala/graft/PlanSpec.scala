@@ -178,6 +178,24 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
+  test("d02 and t17 run their per-row work in native kernels: no lambda, no signature aggregate") {
+    // MinHash signatures, est-Jaccard and the Gopher rules are in-row
+    // kernels (graft_minhash / graft_slot_eq / graft_gopher_rep): a
+    // LambdaFunction here means a higher-order function crept back onto
+    // the hot path, where it evaluates interpreted per element
+    import org.apache.spark.sql.catalyst.expressions.LambdaFunction
+    import org.apache.spark.sql.catalyst.plans.logical.Aggregate
+    for (q <- Seq("d02_minhash_lsh", "t17_gopher_repetition")) {
+      val plan = SparkEntry.queries(q)(spark, dir).queryExecution.optimizedPlan
+      assert(!plan.exists(_.expressions.exists(_.exists(_.isInstanceOf[LambdaFunction]))),
+        s"$q optimized plan carries a lambda:\n$plan")
+    }
+    // the band table is map-only, so a stream can band statelessly
+    val bands = graft.operators.Dedup.bandTable(Tables.load(spark, dir, "documents"), 8)
+      .queryExecution.optimizedPlan
+    assert(!bands.exists(_.isInstanceOf[Aggregate]), s"band table aggregates:\n$bands")
+  }
+
   test("d15 df count and probe consume one reused shingle exchange") {
     // dupShingleRate repartitions the shingle stream once so the
     // document-frequency aggregation and the join probe share the same
