@@ -518,75 +518,25 @@ object GraphOps {
 
   /** Large-star/small-star alternation to a fixed point; returns
     * `(labels, roundsUsed)` — ScaleSmoke logs the round count as the
-    * scale evidence. One round =
-    *
-    *   large-star: every node attaches its LARGER neighbors to the min
-    *   of its neighborhood (incl. itself) — hub edges migrate to
-    *   component minima, halving star heights geometrically;
-    *   small-star: every node attaches its smaller-or-equal neighbors
-    *   (and itself) to their min — collapses the chains large-star
-    *   leaves.
-    *
-    * Both halves are pure relational ops (groupBy-min + equi-join +
-    * distinct, all map-side-combinable hash shuffles on the node key),
-    * so AQE handles hub skew and the edge multiset never grows beyond
-    * 2|E|. Convergence = the canonical edge set is unchanged over a
-    * full round, detected by (count, xor-of-hashes) — one cheap
-    * aggregate per round on the already-checkpointed set, no diff join.
-    * At the fixed point the set is exactly the star forest
-    * {(v, min(component)) : v not a root}. */
+    * scale evidence. Edges are stored as `(u, v)` with `u > v`; one round
+    * is [[starRound]]. Convergence = the edge set is unchanged over a
+    * full round, detected by (count, xor-of-hashes) — one cheap aggregate
+    * per round on the checkpointed set, no diff join. At the fixed point
+    * the set is exactly the star forest {(v, min(component)) : v not a
+    * root}. */
   def connectedComponentsStar(edges: DataFrame, maxIter: Int = 50): (DataFrame, Int) = {
-    val canon = canonicalEdges(edges).persist()
-    val nodes = canon.select(explode(array(col("u"), col("v"))).as("node"))
-      .distinct().localCheckpoint()
-
-    // Both halves hash-partition the edge list ONCE by the grouping node
-    // (explicit repartition) so the min-aggregation runs exchange-free on
-    // it and the join's probe side reuses the same exchange (ReuseExchange
-    // dedups the identical subtree): one shuffle of the edges per half
-    // instead of two. With the final distinct that is 3 shuffles per
-    // round — the round cost that multiplies by O(log n).
-
-    def largeStar(e: DataFrame): DataFrame = {
-      val sym = e.unionAll(e.select(col("v").as("u"), col("u").as("v")))
-        .repartition(col("u"))
-      val mins = sym.groupBy(col("u").as("n"))
-        .agg(least(min(col("v")), first(col("u"))).as("m"))
-      sym.join(mins, sym("u") === mins("n"))
-        .filter(col("v") > col("u"))
-        .select(col("v").as("u"), col("m").as("v"))
-    }
-
-    def smallStar(e: DataFrame): DataFrame = {
-      val oriented = e.select(greatest(col("u"), col("v")).as("u"),
-        least(col("u"), col("v")).as("v"))
-        .repartition(col("u"))
-      val mins = oriented.groupBy(col("u").as("n")).agg(min(col("v")).as("m"))
-      val om = oriented.join(mins, oriented("u") === mins("n"))
-      om.filter(col("v") =!= col("m"))
-        .select(col("v").as("u"), col("m").as("v"))
-        .unionAll(om.select(col("u"), col("m").as("v")))
-    }
-
-    // store pairs canonically (big, small): large-star emits (v, m) with
-    // v > m by construction, small-star likewise — `u` is always the
-    // larger end, so distinct needs no least/greatest normalization
-    var e = canon.select(col("v").as("u"), col("u").as("v")).localCheckpoint()
+    var e = canonicalEdges(edges).select(col("v").as("u"), col("u").as("v"))
+      .localCheckpoint()
     var prev: (Long, Long) = (-1L, -1L)
     var it = 0
     var converged = false
     while (!converged && it < maxIter) {
-      // LAZY checkpoint (r15 verdict #1): the convergence aggregate below
-      // is the round's ONLY action — its execution computes the new edge
-      // set AND caches it (the lazy checkpoint materializes via
-      // getOrCompute as the aggregate's scan pulls the rows), so each
-      // round submits one Spark job instead of two (eager checkpoint
-      // count + separate aggregate). Plan shape is untouched: the same
-      // 3 shuffles per round, the same aggregate — only the separate
-      // materialization job (and its extra pass over the cached blocks)
-      // is gone. JobsPerRoundSpec pins the 1-job-per-round contract.
-      val next = smallStar(largeStar(e)).distinct()
-        .localCheckpoint(false)
+      // LAZY checkpoint: the convergence aggregate is the round's only
+      // action — its execution computes the new edge set AND caches it
+      // (the checkpoint materializes as the aggregate's scan pulls the
+      // rows), so no separate materialization job runs per round.
+      // JobsPerRoundSpec pins the per-round job count.
+      val next = starRound(e).localCheckpoint(false)
       val chk = next.agg(count(lit(1)), bit_xor(xxhash64(col("u"), col("v"))))
         .collect().head
       val cur = (chk.getLong(0), if (chk.isNullAt(1)) 0L else chk.getLong(1))
@@ -596,18 +546,44 @@ object GraphOps {
       e = next
       it += 1
     }
-    // converged star forest: every non-root points straight at its
-    // component min; roots never appear on the big end. The min-aggregate
-    // (a no-op at the fixed point, where each u occurs once) also keeps
-    // the labeling well-formed — exactly one row per node — if maxIter
-    // ran out before convergence, where the raw edge set could still
-    // hold conflicting (v, m1)/(v, m2) pairs.
-    val labels = nodes
-      .join(e.groupBy(col("u").as("node")).agg(min(col("v")).as("cmp")),
-        Seq("node"), "left")
-      .select(col("node"), coalesce(col("cmp"), col("node")).as("component"))
-    canon.unpersist()
+    // label = min over the node itself and the small ends of its edges.
+    // At the fixed point every non-root has one edge, to its component
+    // min; before it (maxIter ran out) this still yields one row per
+    // node, since star steps keep every non-isolated node in the set.
+    val labels = e.select(inline(array(
+        struct(col("u").as("node"), col("v").as("c")),
+        struct(col("v").as("node"), col("v").as("c")))))
+      .groupBy(col("node")).agg(min(col("c")).as("component"))
     (labels, it)
+  }
+
+  /** One large-star + small-star round (Kiveris et al.) over `(u, v)`
+    * edges with `u > v`, as one linear plan: each star step is a single
+    * group-by-node window pass, so a round costs exactly three exchanges
+    * (two windows and the final distinct) and no join or broadcast
+    * (PlanSpec pins the shape).
+    *
+    *   large-star: every node attaches its LARGER neighbors to the min
+    *   of its neighborhood (incl. itself) — hub edges migrate to
+    *   component minima, halving star heights geometrically;
+    *   small-star: every node attaches its smaller neighbors (and
+    *   itself) to their min — collapses the chains large-star leaves.
+    *
+    * Both emit pairs with the larger end first, so the distinct needs no
+    * least/greatest normalization; after it a round holds at most as
+    * many pairs as its input, so the edge set never grows. */
+  private[graft] def starRound(e: DataFrame): DataFrame = {
+    val byU = org.apache.spark.sql.expressions.Window.partitionBy(col("u"))
+    val large = e.select(inline(array(struct(col("u"), col("v")),
+        struct(col("v").as("u"), col("u").as("v")))))
+      .select(col("u"), col("v"), least(min(col("v")).over(byU), col("u")).as("m"))
+      .filter(col("v") > col("u"))
+      .select(col("v").as("u"), col("m").as("v"))
+    large.select(col("u"), col("v"), min(col("v")).over(byU).as("m"))
+      .select(inline(array(struct(col("v").as("u"), col("m").as("v")),
+        struct(col("u"), col("m").as("v")))))
+      .filter(col("u") =!= col("v"))
+      .distinct()
   }
 
   /** Min-label propagation to a fixed point: each

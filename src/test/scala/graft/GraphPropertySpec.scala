@@ -187,6 +187,36 @@ class GraphPropertySpec extends AnyFunSuite {
     }
   }
 
+  test("star round at the fixed point returns the identical edge set — ∀ random graphs") {
+    // the property the convergence check rests on: once the edge set is
+    // a star forest (every big end has one edge, to a root that is no
+    // big end), one more round changes nothing, so count and hash repeat
+    // exactly there. Checked on the random graphs and on the same graphs
+    // with a planted hub.
+    import org.apache.spark.sql.functions.col
+    def edgeSet(df: DataFrame): Set[(Long, Long)] =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toSet
+    def starForest(es: Set[(Long, Long)]): Boolean =
+      es.map(_._1).size == es.size && es.map(_._2).intersect(es.map(_._1)).isEmpty
+    samples(edgeGen, 8).foreach { es =>
+      val hub = 100L
+      val hubbed = es ++ es.flatMap(e => Seq(e._1, e._2)).distinct.map(n => (hub, n)) ++
+        (1L to 30L).map(l => (hub, hub + l))
+      Seq(es, hubbed).foreach { g =>
+        var e = GraphOps.canonicalEdges(g.toDF("src", "dst"))
+          .select(col("v").as("u"), col("u").as("v")).localCheckpoint()
+        var rounds = 0
+        while (!starForest(edgeSet(e))) {
+          assert(rounds < 20, s"no star forest after 20 rounds: $g")
+          e = GraphOps.starRound(e).localCheckpoint()
+          rounds += 1
+        }
+        assert(edgeSet(GraphOps.starRound(e)) === edgeSet(e),
+          s"one extra round moved the fixed point: $g")
+      }
+    }
+  }
+
   test("star CC with an exhausted round budget still labels every node exactly once") {
     // a path needs ~log2(n) star rounds; cap below that and the edge set
     // is NOT a star forest — the labeling must still be one row per node

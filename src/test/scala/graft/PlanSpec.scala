@@ -432,7 +432,8 @@ class PlanSpec extends AnyFunSuite {
       // id-ordered branch: fully lazy — no degree aggregate, no barrier
       val lazyPlan = GraphOps.trianglesAuto(uniform,
         knownStats = Some((2L, 1L)))
-      Thread.sleep(1000) // let the async listener bus drain
+      // drain the async listener bus, or a late job goes uncounted
+      org.apache.spark.graft.ListenerBusHook.waitUntilEmpty(spark.sparkContext)
       assert(jobs.get() === 0,
         "plan construction with knownStats must not run the degree aggregate")
       assert(!lazyPlan.queryExecution.optimizedPlan.toString.contains("LogicalRDD"))
@@ -558,6 +559,32 @@ class PlanSpec extends AnyFunSuite {
     assert(!plan.contains("CartesianProduct") &&
       !plan.contains("BroadcastNestedLoopJoin"),
       s"non-equi join in the component fold:\n$plan")
+  }
+
+  test("star CC round: one linear plan — 3 shuffle exchanges, no broadcast, no join") {
+    import graft.operators.GraphOps
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    // each star step is one group-by-node window pass, plus the distinct:
+    // a self-join here would re-read the edges (and a small edge list
+    // would be broadcast into it), multiplying stages and jobs per round
+    val edges = Tables.load(spark, dir, "lineitem")
+      .select((col("l_orderkey") % 4000).as("src"),
+        (col("l_partkey") % 4000).as("dst"))
+    val e = GraphOps.canonicalEdges(edges)
+      .select(col("v").as("u"), col("u").as("v")).localCheckpoint()
+    val round = GraphOps.starRound(e)
+    round.collect() // materialize so AQE finalizes the plan
+    val plan = round.queryExecution.executedPlan
+    val helper = new AdaptiveSparkPlanHelper {}
+    val shape = (
+      helper.collectWithSubqueries(plan) { case x: ShuffleExchangeLike => x }.size,
+      helper.collectWithSubqueries(plan) { case b: BroadcastExchangeLike => b }.size,
+      helper.collectWithSubqueries(plan) { case j: BaseJoinExec => j }.size)
+    assert(shape === ((3, 0, 0)),
+      s"(shuffles, broadcasts, joins) of one star round:\n$plan")
+    GraphOps.freeLocalCheckpoint(e)
   }
 
   test("m09 audio round trip: only the doc-id fan-out exchange, keyed, pre-codec") {
