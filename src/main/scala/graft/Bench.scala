@@ -60,12 +60,12 @@ object Bench {
   /** Exact/quadratic certification arms benched at the cert tier.
     * g17 is here because its registered query EMBEDS the exact g16
     * closure as its per-node certification arm; the scale-safe register
-    * fold alone is measured at 5M edges in ScaleSmoke. d25 is the
+    * fold alone is `GraphOps.hyperballEstimates`. d25 is the
     * hostile mass-duplication certification of the capped keeper: its
     * banded candidate stage is quadratic in the planted clique BY
     * CONSTRUCTION (that is what it certifies), so its sf0.1 cost
     * predicts nothing sf0.01 doesn't — the keeper's scale evidence is
-    * ScaleSmoke --d23-only at 500k. */
+    * BASELINE_SELF's "d23 capped keeper" section, at 500k. */
   private val certTierQueries = Set(
     "d05_embedding_neardup", "d18_semantic_clusters", "g16_khop_reach",
     "g17_hyperball", "d25_semantic_representatives_hostile",

@@ -30,8 +30,8 @@ import java.nio.file.Files
   * rate, exactly like real added traffic (duplicating ids instead would
   * square the per-user join volume and measure a different query). Same
   * nFiles ⇒ each trigger ingests xFactor× the rows; at sfDir=sf0.1 and
-  * xFactor=10 that is the 1M-event tier (the streaming analogue of
-  * ScaleSmoke's 10–50× batch tier, BASELINE_SELF.md records it).
+  * xFactor=10 that is the 1M-event tier (the streaming analogue of the
+  * 10–50× "Scale smoke" batch tier; BASELINE_SELF.md records both).
   */
 object StreamBench {
 

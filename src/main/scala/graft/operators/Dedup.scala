@@ -297,10 +297,10 @@ object Dedup {
     *
     * The bucket COUNT is a per-artifact build parameter (the `nlist`
     * convention: registered gate queries run small, production and the
-    * ScaleSmoke ledger run the default) recorded IN the artifact — the
-    * `buckets` line of the [[VersionedBand]] manifest — so append/delete
-    * always derive the modulus from the artifact itself and a caller can
-    * never probe with a mismatched bucket function (a silent
+    * BASELINE_SELF band-takedown ledger run the default) recorded IN the
+    * artifact — the `buckets` line of the [[VersionedBand]] manifest — so
+    * append/delete always derive the modulus from the artifact itself and
+    * a caller can never probe with a mismatched bucket function (a silent
     * missed-takedown otherwise). */
   private[graft] val BandBuckets = 256
   private[operators] def bandBucket(docId: Column, buckets: Int): Column =
@@ -918,11 +918,11 @@ object Dedup {
       .select(col("d1"), col("d2"), round(col("j"), 4).as("jaccard"))
   }
 
-  /** The candidate-generation half of [[prefixJaccardPairs]], split out so
-    * ScaleSmoke can measure the filter's selectivity (candidate pairs vs
-    * the n·(n−1)/2 all-pairs bound) without running the verify stage.
-    * Returns (per-doc rarest-first arrays, distinct candidate pairs). */
-  private[graft] def prefixJaccardParts(docs: DataFrame,
+  /** The candidate-generation half of [[prefixJaccardPairs]]: returns
+    * (per-doc rarest-first arrays, distinct candidate pairs). BASELINE_SELF
+    * "Scale smoke" (d13 rows) records the candidates against the
+    * n·(n−1)/2 all-pairs bound at 50k docs. */
+  private def prefixJaccardParts(docs: DataFrame,
       minJaccard: Double): (DataFrame, DataFrame) = {
     val t = minJaccard
     // Shingles are carried as xxhash64 longs from the source: Jaccard only
@@ -1057,7 +1057,7 @@ object Dedup {
     *
     * Defaults are 8 planes × 8 tables: 256 buckets per table cuts the
     * fixture candidate volume 28× below all-pairs (4,372 of 124,750
-    * pairs at sf0.01; `bandedCandidateCount` audits this at scale). The
+    * pairs at sf0.01; DedupSpec audits it via `bandedCandidateCount`). The
     * earlier 2-planes/32-tables setting bucketed ~every pair somewhere
     * (4 buckets/table ⇒ Σ|b|² ≈ n²/4 per table × 32) — all-pairs cost
     * wearing an LSH hat.
@@ -1291,8 +1291,8 @@ object Dedup {
     * SAME probe set, so the argmax compares like with like (probe
     * members see cap−1 terms, non-probe members cap; deterministic in
     * both engines, and irrelevant below the cap).
-    * `ScaleSmoke --d23-only` proves the bound on the hostile
-    * mass-duplication shape (30% of 500k vectors in ONE cluster). */
+    * BASELINE_SELF "d23 capped keeper on the hostile duplication shape"
+    * records the bound on 30% of 500k vectors in ONE cluster. */
   def semanticRepresentatives(emb: DataFrame, minCos: Double = 0.4,
       dim: Int = 64, planes: Int = 8, tables: Int = 8,
       cap: Int = 256): DataFrame =
@@ -1349,7 +1349,7 @@ object Dedup {
         col("n_members"), col("best.affinity").as("affinity_micro"))
   }
 
-  /** Exposed for the ScaleSmoke candidate-count audit: the (v1, v2)
+  /** Exposed for DedupSpec's candidate-count audit: the (v1, v2)
     * in-bucket candidate pairs the banded form pays exact cosine for —
     * AFTER the exact-duplicate collapse, mirroring
     * [[semanticClustersBanded]]'s actual join input. */
@@ -1357,9 +1357,8 @@ object Dedup {
       planes: Int = 8, tables: Int = 8): Long = {
     val mask = (1L << planes) - 1
     val sig = emb.select(col("vec_id"), VectorFns.toDouble(col("embedding")).as("e"))
-      // same nonZero gate as the operator (and as bandedJoinVolume): a
-      // zero-vector representative would audit bucket pairs the real
-      // join never sees
+      // same nonZero gate as the operator: a zero-vector representative
+      // would audit bucket pairs the real join never sees
       .filter(VectorFns.nonZero(col("e")))
       .groupBy(col("e")).agg(min(col("vec_id")).as("vec_id"))
       .select(col("vec_id"), col("e"))
@@ -1372,27 +1371,6 @@ object Dedup {
     sig.toDF("v1", "t", "b").join(sig.toDF("v2", "t", "b"), Seq("t", "b"))
       .filter(col("v1") < col("v2"))
       .select(col("v1"), col("v2")).distinct().count()
-  }
-
-  /** Analytic in-bucket join volume of the collapsed banded form:
-    * Σ over (table, bucket) of C(occupancy, 2) — the rows the band
-    * self-join actually streams, WITHOUT materializing them (the
-    * distinct-pair audit above forms the pairs, which is itself the
-    * quadratic cost at smoke scale). Used by `ScaleSmoke --d23-only`. */
-  private[graft] def bandedJoinVolume(emb: DataFrame, dim: Int = 64,
-      planes: Int = 8, tables: Int = 8): Long = {
-    val mask = (1L << planes) - 1
-    emb.select(VectorFns.toDouble(col("embedding")).as("e"))
-      .filter(VectorFns.nonZero(col("e")))
-      .groupBy(col("e")).agg(lit(1))
-      .select(Similarity.lshBucket(col("e"), dim, planes * tables).as("s"))
-      .select(explode(array((0 until tables).map { t =>
-        struct(lit(t).as("t"),
-          shiftright(col("s"), t * planes).bitwiseAND(lit(mask)).as("b"))
-      }: _*)).as("tb"))
-      .groupBy(col("tb.t"), col("tb.b")).agg(count(lit(1)).as("sz"))
-      .agg(coalesce(sum(col("sz") * (col("sz") - 1) / 2), lit(0L)).cast("long"))
-      .head().getLong(0)
   }
 
   // ---- oracle SQL generation (same constants as the Spark side) --------

@@ -345,9 +345,9 @@ object GraphOps {
     * on hub nodes, which AQE's skew split cannot fix (it rebalances
     * oversized shuffle-input partitions; a hub's input rows are few, its
     * join output is huge). The degree-cap pre-filter is therefore THE
-    * mitigation for power-law graphs (ScaleSmoke measures it at 5M
-    * edges); AQE skew split earns its keep on skewed fact joins, which
-    * ScaleSmoke demonstrates separately. */
+    * mitigation for power-law graphs (BASELINE_SELF "Scale smoke": cap 64
+    * at 5M edges); AQE skew split earns its keep on skewed fact joins,
+    * which PlanSpec pins separately. */
   def commonNeighbors(edges: DataFrame, minCommon: Long = 2,
       maxDegree: Long = Long.MaxValue): DataFrame = {
     // NOT checkpointed, deliberately: the wedge join references sym 2-4
@@ -491,35 +491,22 @@ object GraphOps {
     }
 
   /** Connected components: label every node with the min node id of its
-    * component. Two interchangeable algorithms behind one API — both
-    * converge to the identical labeling (GraphPropertySpec proves it on
-    * random graphs), so the choice is purely a scale decision:
-    *
-    *   - `"star"` (default): alternating large-star/small-star
-    *     (Kiveris et al., "Connected Components in MapReduce and
-    *     Beyond", SoCC'14). Rounds = O(log n) REGARDLESS of graph
-    *     diameter — the 100 TB path, where a high-diameter component
-    *     (web chains, road networks) would starve a propagation loop.
-    *   - `"minlabel"`: min-label propagation; rounds = diameter. Fewer
-    *     shuffles per round, so it wins on hub-dense low-diameter
-    *     graphs; kept as the cross-check and small-graph fast path.
-    *
-    * Per round both do driver-coordinated iteration with a
-    * `localCheckpoint` (plan truncation — the lineage otherwise grows
-    * per round until analysis dominates), freeing the previous round's
-    * checkpoint blocks ([[freeLocalCheckpoint]]). */
-  def connectedComponents(edges: DataFrame, maxIter: Int = 50,
-      algorithm: String = "star"): DataFrame = algorithm match {
-    case "star"     => connectedComponentsStar(edges, maxIter)._1
-    case "minlabel" => connectedComponentsMinLabel(edges, maxIter)._1
-    case other => throw new IllegalArgumentException(
-      s"unknown connected-components algorithm '$other' (star | minlabel)")
-  }
+    * component, by alternating large-star/small-star
+    * ([[connectedComponentsStar]]; Kiveris et al., "Connected Components
+    * in MapReduce and Beyond", SoCC'14). Rounds = O(log n) REGARDLESS of
+    * graph diameter, where min-label propagation needs diameter rounds
+    * (BASELINE_SELF "Connected components at scale": 21 rounds on a
+    * 1M-node path). [[connectedComponentsMinLabel]] is the cross-check:
+    * GraphPropertySpec proves both give the identical labeling on random
+    * graphs. Each round is a `localCheckpoint` (plan truncation), freeing
+    * the previous round's blocks ([[freeLocalCheckpoint]]). */
+  def connectedComponents(edges: DataFrame, maxIter: Int = 50): DataFrame =
+    connectedComponentsStar(edges, maxIter)._1
 
   /** Large-star/small-star alternation to a fixed point; returns
-    * `(labels, roundsUsed)` — ScaleSmoke logs the round count as the
-    * scale evidence. Edges are stored as `(u, v)` with `u > v`; one round
-    * is [[starRound]]. Convergence = the edge set is unchanged over a
+    * `(labels, roundsUsed)` — the round count is the scale evidence
+    * BASELINE_SELF records. Edges are stored as `(u, v)` with `u > v`;
+    * one round is [[starRound]]. Convergence = the edge set is unchanged over a
     * full round, detected by (count, xor-of-hashes) — one cheap aggregate
     * per round on the checkpointed set, no diff join. At the fixed point
     * the set is exactly the star forest {(v, min(component)) : v not a
@@ -885,8 +872,7 @@ object GraphOps {
     * `(root, nonzero_registers, est_reach)` from the k-round register
     * fold, no exact-BFS certification join. This is the operator a
     * 100 TB graph actually runs (state ≤ n·512 register rows regardless
-    * of reach); ScaleSmoke times it on the 5M-edge power-law graph where
-    * the exact pair set is unmaterializable. */
+    * of reach). No scale timing of it is on record. */
   def hyperballEstimates(edges: DataFrame, hops: Int): DataFrame = {
     val m = 1 << 9
     val sym = symmetrize(canonicalEdges(edges).toDF("src", "dst"))
@@ -1078,7 +1064,7 @@ object GraphOps {
     // The registered form of the hub mitigation: wedge centers above the
     // degree cap are dropped BEFORE the wedge join, bounding its fan-out
     // at Σ min(deg, cap)² — the plan that survives a power-law graph at
-    // 100× (ScaleSmoke measures it with cap 64 at 5M edges; g03 above
+    // 100× (BASELINE_SELF "Scale smoke": cap 64 at 5M edges; g03 above
     // stays as the uncapped exact baseline). Cap 8 here, sized so it
     // actually filters the fixture graph (max degree 19 at sf0.01 —
     // a 64 cap would gate a no-op). The oracle applies the identical

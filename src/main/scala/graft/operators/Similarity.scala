@@ -334,10 +334,10 @@ object Similarity {
     * candidate pairs, so `nlist` must grow with the corpus — nlist ≈ √n
     * balances the two terms at n^1.5 (the standard IVF sizing), while at
     * FIXED nlist a 100× corpus is 10⁴× the candidates. The registered
-    * fixture runs nlist=8 over 5k vectors; `ScaleSmoke --s08-only`
-    * measures both slopes (at 80k×64-dim, √n sizing beat fixed nlist
-    * 15.8 s vs 20.3 s with 4× the 20k corpus's work — the measured
-    * crossover the sizing rule predicts). Recall is certified against
+    * fixture runs nlist=8 over 5k vectors; BASELINE_SELF "s08 k-NN
+    * self-join sizing slopes" records both (at 80k×64-dim, √n sizing beat
+    * fixed nlist 15.8 s vs 20.3 s with 4× the 20k corpus's work — the
+    * measured crossover the sizing rule predicts). Recall is certified against
     * [[bruteForceTopK]] in SimilaritySpec on a planted-duplicate corpus;
     * the oracle certifies the banded computation itself.
     *
@@ -521,7 +521,7 @@ object Similarity {
     * determinism conventions (6dp rounding, integer micro-unit ADC
     * sums, min-id ties), so the full composition is hash-reproducible
     * in the DuckDB oracle (s09). Recall at the 500k×64-dim sweep is
-    * measured and gated in `ScaleSmoke --recall-only`. */
+    * recorded in BASELINE_SELF "ANN recall/cost curve". */
   def ivfPqTopK(emb: DataFrame, queries: DataFrame, k: Int,
       nlist: Int = 8, nprobe: Int = 2, m: Int = 8, ksub: Int = 16,
       dim: Int = 64, candMult: Int = 4): DataFrame = {
@@ -940,8 +940,8 @@ object Similarity {
     // thing from source: first-8 centroids → assignment → micro-integer
     // means → new centroids → re-assignment → probe. One hash certifies
     // the trained doubles, the re-assignment, and the probe ranking.
-    // Recall-recovery on an actually-drifted corpus is measured in
-    // ScaleSmoke --retrain-only (the monitor→retrain→recall loop).
+    // Recall recovery on an actually-drifted corpus: SimilaritySpec's s17
+    // test, and BASELINE_SELF "s17 retrain drift loop" at 100k.
     Q("s17_ivf_retrain",
       (s, dir) => {
         val emb = Tables.load(s, dir, "embeddings")

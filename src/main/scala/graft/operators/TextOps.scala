@@ -706,23 +706,13 @@ object TextOps {
     * empties the prefix, so progress is guaranteed; checkpoints are
     * freed every round (flat storage). Batch factor is DATA-DEPENDENT:
     * measured ~1.7 on English text (top character pairs share letters),
-    * large on id-like corpora — see ScaleSmoke --bpe-scale and
-    * [[bpeTrainFast]] for why no sound rule does better. */
+    * large on id-like corpora (COVERAGE.md's t21 row: 181 rounds for 256
+    * merges at 50k docs) — see [[bpeTrainFast]] for why no sound rule
+    * does better. */
   def bpeTrainBatched(docs: org.apache.spark.sql.DataFrame, merges: Int,
       kMax: Int = 64): org.apache.spark.sql.DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val (table, vocab, _) = bpeTrainBatchedCore(docs, merges, kMax)
-    GraphOps.freeLocalCheckpoint(vocab)
-    table.toDF("step", "lhs", "rhs", "n")
-      .select(col("step"), col("lhs"), col("rhs"),
-        concat(col("lhs"), col("rhs")).as("merged"), col("n"))
-  }
-
-  /** Core of [[bpeTrainBatched]]: (merge rows, final vocab, rounds). */
-  private[graft] def bpeTrainBatchedCore(
-      docs: org.apache.spark.sql.DataFrame, merges: Int, kMax: Int)
-      : (Seq[(Int, String, String, Long)], org.apache.spark.sql.DataFrame, Int) = {
     var vocab = docs
       .select(explode(TextFns.tokens(col("text"))).as("w"))
       .filter(col("w") =!= "" && !col("w").contains("\u0001"))
@@ -732,10 +722,8 @@ object TextOps {
           i => col("w").substr(i, lit(1))).as("syms"))
       .localCheckpoint()
     val out = scala.collection.mutable.Buffer.empty[(Int, String, String, Long)]
-    var rounds = 0
     var exhausted = false
     while (out.size < merges && !exhausted) {
-      rounds += 1
       val top = vocab.filter(size(col("syms")) >= 2)
         .select(col("freq"),
           explode(transform(sequence(lit(1), size(col("syms")) - 1),
@@ -799,7 +787,10 @@ object TextOps {
         vocab = next
       }
     }
-    (out.toSeq, vocab, rounds)
+    GraphOps.freeLocalCheckpoint(vocab)
+    out.toSeq.toDF("step", "lhs", "rhs", "n")
+      .select(col("step"), col("lhs"), col("rhs"),
+        concat(col("lhs"), col("rhs")).as("merged"), col("n"))
   }
 
   /** The k unrolled training rounds shared by t18's and t19's oracles:

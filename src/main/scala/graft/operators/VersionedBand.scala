@@ -247,7 +247,7 @@ object VersionedBand {
     * a hit batch — ~(1 − hits/[[Dedup.BandBuckets]]) of it) carry over
     * by reference. A takedown of a day-1 document now rewrites
     * ~1/[[Dedup.BandBuckets]] of the base partition, not the whole
-    * corpus-sized thing (`ScaleSmoke --band-delete` measures the bytes).
+    * corpus-sized thing (BASELINE_SELF "band takedown" has the bytes).
     * Committed batch ids are kept so a post-takedown replay of the
     * batch stays a no-op. CAS-committed — a concurrent committed writer
     * surfaces a retryable [[CommitConflictException]] to the takedown

@@ -56,9 +56,10 @@ import graft.functions.VectorFns
   * Scale shape: append/delete write only batch/affected-leaf-sized data;
   * a new version's manifest REFERENCES the untouched leaves instead of
   * copying them (the Iceberg/Delta snapshot shape), so commit cost is
-  * metadata-sized (measured in `ScaleSmoke --s16-only`). A probe reads
-  * the nprobe probed cells' leaf dirs by explicit manifest selection —
-  * stronger than catalog partition pruning (nothing to mis-estimate).
+  * metadata-sized (BASELINE_SELF "s16 versioned-chain ledger"). A probe
+  * reads the nprobe probed cells' leaf dirs by explicit manifest
+  * selection — stronger than catalog partition pruning (nothing to
+  * mis-estimate).
   * Reads accept `asOf` — a published version name — for pinned
   * (time-travel) scans: a long-running consumer keeps one snapshot while
   * maintenance publishes past it, protected by vacuum's grace window.
@@ -391,11 +392,11 @@ object VersionedIvf {
     * into one fresh version (original batch lineage preserved in-row).
     * Corpus-sized BY NATURE — retrain is the rare op the monitor
     * triggers, priced like a build, never like an append; the win it
-    * buys (recall recovered on drifted data) is measured in
-    * `ScaleSmoke --retrain-only`. Cells emptied of members (or with an
-    * exactly-zero mean, e.g. an antipodal pair) drop out of the new
-    * quantizer — deterministically, because the zero test is on exact
-    * integers. CAS-committed, like [[compact]]. */
+    * buys (recall recovered on drifted data) is BASELINE_SELF "s17
+    * retrain drift loop" and SimilaritySpec's s17 test. Cells emptied of
+    * members (or with an exactly-zero mean, e.g. an antipodal pair) drop
+    * out of the new quantizer — deterministically, because the zero test
+    * is on exact integers. CAS-committed, like [[compact]]. */
   def retrain(spark: SparkSession, root: String): String = {
     val (base, m) = liveSnapshot(root)
     val ver = VersionedArtifact.nextName(root)

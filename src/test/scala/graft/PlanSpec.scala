@@ -18,6 +18,18 @@ class PlanSpec extends AnyFunSuite {
     df.queryExecution.executedPlan.toString
   }
 
+  /** Runs `body` with `confs` set on the shared session, then restores
+    * each key to its previous value (or unsets it). */
+  private def withConfs[T](confs: (String, String)*)(body: => T): T = {
+    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   test("q28 range join plans as an equi hash join, not a nested loop") {
     val plan = executedPlan(
       SparkEntry.queries("q28_range_join")(spark, dir))
@@ -300,16 +312,13 @@ class PlanSpec extends AnyFunSuite {
     // probe) self-regulate at cluster scale; this lowers them to prove the
     // repo's join shapes are ELIGIBLE — an ineligible shape (filter above
     // the join, expression-wrapped keys) would silently scan everything.
-    val confs = Seq(
+    withConfs(
       "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
       // application threshold is a MIN (probe side must be bigger),
       // creation threshold a MAX (dim side must be smaller)
       "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
       "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "1GB",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val events = Tables.load(spark, dir, "events")
         .select(col("user_id"), round(col("value") * 100).cast("long").as("cents"))
       val dim = Tables.load(spark, dir, "customer")
@@ -320,9 +329,32 @@ class PlanSpec extends AnyFunSuite {
       val plan = executedPlan(joined)
       assert(plan.contains("might_contain"),
         s"no runtime bloom filter injected on the fact side:\n$plan")
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  test("AQE splits the hot partition of a skewed sort-merge fact join (skew=true)") {
+    // the input-skew case GraftSession.tune enables skewJoin for: a zipf
+    // fact whose hottest key owns ~24% of the rows (floor(K·u⁸), so
+    // P(k = 0) = K^(-1/8)) joined to a per-key dim with broadcast off.
+    // AQE sizes partitions on COMPRESSED map output and a hot key's rows
+    // compress hard, so the payload is a hash that keeps them
+    // incompressible. Thresholds are demo-sized (defaults 256m / 5x are
+    // for cluster-scale partitions).
+    withConfs(
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.shuffle.partitions" -> "32",
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "256k",
+      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "64k") {
+      val nKeys = 100000L
+      val u = (pmod(xxhash64(col("id"), lit(9)), lit(1000000000L)) + 1).cast("double") / 1e9
+      val fact = spark.range(1000000L).select(
+        least(floor(lit(nKeys.toDouble) * pow(u, 8.0)), lit(nKeys - 1)).cast("long").as("k"),
+        pmod(xxhash64(col("id"), lit(3)), lit(1000000L)).as("v"))
+      val dim = spark.range(nKeys).select(col("id").as("k"), (col("id") % 13).as("grp"))
+      val plan = executedPlan(fact.join(dim, "k").groupBy("grp").agg(sum("v").as("sv")))
+      assert(plan.contains("SortMergeJoin"), s"expected a sort-merge join:\n$plan")
+      assert(plan.contains("skew=true"), s"AQE did not split the hot partition:\n$plan")
     }
   }
 

@@ -1,7 +1,8 @@
 package graft
 
 import graft.operators.{Similarity, VersionedIvf}
-import org.apache.spark.sql.DataFrame
+import graft.sources.VersionedArtifact
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -169,6 +170,28 @@ class SimilaritySpec extends AnyFunSuite {
     }
   }
 
+  test("ivfPqTopK near-duplicate recall@1 >= 0.9 on planted twins (candMult 16)") {
+    // s09's retrieval contract is near-duplicate recall, not arbitrary-
+    // neighbor recall: the coarse PQ cannot rank noise neighbors, but a
+    // twin at cos ≈ 0.9998 must survive the ADC cut and win the exact
+    // re-rank (BASELINE_SELF "ANN recall/cost curve" gates the same
+    // rule at 500k, nlist 64, nprobe 16)
+    val rnd = new scala.util.Random(11)
+    def vec() = Array.fill(64)(rnd.nextGaussian().toFloat)
+    val bases = (0 until 50).map(i => (i.toLong, vec()))
+    val twins = bases.map { case (i, v) =>
+      (1000L + i, v.map(x => x + rnd.nextGaussian().toFloat * 0.02f))
+    }
+    val loners = (0 until 400).map(i => (2000L + i, vec()))
+    val planted = spark.createDataFrame(bases ++ twins ++ loners)
+      .toDF("vec_id", "embedding")
+    val top1 = Similarity.ivfPqTopK(planted, planted.filter($"vec_id".between(1000L, 1999L)),
+      k = 1, candMult = 16).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val hits = bases.count { case (i, _) => top1.get(1000L + i).contains(i) }
+    info(s"ivf-pq twin recall@1 (nlist=8, nprobe=2, candMult=16): $hits / ${bases.size}")
+    assert(hits >= 45, s"only $hits of ${bases.size} twins found their base")
+  }
+
   // ---- s11: incremental IVF index maintenance ---------------------------
 
   private def postingsRows(root: String): Set[(Long, Long, String)] =
@@ -178,6 +201,18 @@ class SimilaritySpec extends AnyFunSuite {
 
   private def tmp(tag: String): String =
     java.nio.file.Files.createTempDirectory(tag).toString
+
+  /** Coordinate `i` of the cluster center keyed by `key`, in [-1, 1]. */
+  private def centerDim(key: Column, i: Int) =
+    (pmod(xxhash64(key, lit(i + 500)), lit(2001L)) - 1000).cast("double") / 1000.0
+  private def noiseDim(i: Int) =
+    (pmod(xxhash64(col("id"), lit(i)), lit(201L)) - 100).cast("double") / 1000.0
+
+  /** 64-dim vectors for ids in [from, until): id `i` sits in tight
+    * cluster `i % 8`, so any 8 consecutive ids cover every cluster. */
+  private def clustered(from: Long, until: Long): DataFrame =
+    spark.range(from, until).select(col("id").as("vec_id"), array((0 until 64)
+      .map(i => centerDim(pmod(col("id"), lit(8)), i) + noiseDim(i)): _*).as("embedding"))
 
   test("IVF build refuses an nlist past the one-row centroid cap, naming the cap") {
     // the whole centroid table rides ONE broadcast row (assignCells), so
@@ -276,13 +311,24 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("s12: compaction collapses every cell to ONE file and keeps the cid layout") {
-    val day1 = emb.filter($"vec_id" % 4 =!= 3)
-    val day2 = emb.filter($"vec_id" % 4 === 3)
+    // 20 small daily batches, each spanning all 8 clusters: every append
+    // adds one manifest leaf line per cell, and compaction must fold the
+    // chain back to one leaf per cell (the batch-id lines stay, so a
+    // replayed batch remains a no-op)
     val root = tmp("s12-idx")
-    VersionedIvf.build(day1, root, nlist = 8)
-    VersionedIvf.append(spark, day2, root, batchId = "day2")
+    VersionedIvf.build(clustered(0, 400), root, nlist = 8)
+    for (i <- 0 until 20)
+      VersionedIvf.append(spark, clustered(400 + 16 * i, 416 + 16 * i),
+        root, batchId = s"day$i")
+    def manifestLines(): Int = VersionedArtifact.readManifest(root,
+      VersionedArtifact.currentName(root).get).size
     val before = postingsRows(root)
+    val linesBefore = manifestLines()
     VersionedIvf.compact(spark, root)
+    val linesAfter = manifestLines()
+    info(s"manifest lines: $linesBefore before compaction, $linesAfter after")
+    assert(linesAfter < linesBefore / 4,
+      s"compaction did not collapse the manifest: $linesBefore -> $linesAfter lines")
     val leaves = VersionedIvf.currentManifest(root).get.leaves
     assert(leaves.nonEmpty, "compacted postings lost the cid directory layout")
     assert(leaves.map(_.cid).distinct.size === leaves.size,
@@ -296,5 +342,37 @@ class SimilaritySpec extends AnyFunSuite {
     }
     // row-identical through the rewrite (batch lineage kept as a column)
     assert(postingsRows(root) === before)
+  }
+
+  test("s17: retrain after drifted appends raises recall@10 at nprobe=1") {
+    // Day 1: 8 tight clusters. Day 2: 4 clusters centered at MIDPOINTS of
+    // two day-1 cluster directions (plus a mild orthogonal offset), where
+    // the frozen day-1 quantizer is worst: members straddle a cell
+    // boundary, so at nprobe=1 a query misses the neighbors across it.
+    // One exact Lloyd step must win recall back (BASELINE_SELF "s17
+    // retrain drift loop" records 0.69 -> 1.00 at 100k + 20k).
+    val nBase = 2000L
+    val nDrift = nBase / 5
+    val day1 = clustered(0, nBase)
+    val key = pmod(col("id"), lit(4))
+    val day2 = spark.range(nDrift).select((col("id") + nBase).as("vec_id"),
+      array((0 until 64).map(i =>
+        (centerDim(key * 2, i) + centerDim(key * 2 + 1, i)) / 2.0
+          + centerDim(key + 100, i) / 4.0 + noiseDim(i)): _*).as("embedding"))
+    val driftQueries = day2.filter(col("vec_id") % (nDrift / 50) === 1)
+    val truth = topkSet(Similarity.bruteForceTopK(
+      day1.unionByName(day2), driftQueries, k))
+    val root = tmp("s17-drift")
+    VersionedIvf.build(day1, root, nlist = 8)
+    VersionedIvf.append(spark, day2, root, batchId = "day2")
+    def recallNow(): Double = (truth & topkSet(VersionedIvf.probe(
+      spark, root, driftQueries, k, nprobe = 1))).size.toDouble / truth.size
+    val before = recallNow()
+    VersionedIvf.retrain(spark, root)
+    val after = recallNow()
+    info(f"s17 drifted-query recall@10 at nprobe=1: $before%.4f before retrain, $after%.4f after")
+    // stricter than "never lower": this drift costs recall, so a retrain
+    // that leaves the quantizer as it was fails too
+    assert(after > before, f"retrain did not raise recall: $before%.4f -> $after%.4f")
   }
 }
