@@ -31,28 +31,30 @@ object TextFns {
     * in DuckDB, so exact-dedup is oracle-checkable). */
   def fingerprint(c: Column): Column = md5(normalizeText(c))
 
-  /** [[wordBigrams]] over an ALREADY-TOKENIZED array column — see
-    * [[ngramsOfTokens]] for why hot paths must tokenize in their own
-    * projection first. */
+  /** Overlapping word bigrams of an ALREADY-TOKENIZED array column,
+    * space-joined; empty/one-token arrays yield an empty array. See
+    * [[ngramsOfTokens]] for why callers tokenize in their own projection
+    * first. */
   def bigramsOfTokens(t: Column): Column =
     zip_with(
       slice(t, lit(1), greatest(size(t) - 1, lit(0))),
       slice(t, lit(2), greatest(size(t) - 1, lit(0))),
       (a, b) => concat(a, lit(" "), b))
 
-  /** Overlapping word n-grams (n=2) of the normalized text, as an array.
-    * Empty/one-token docs yield an empty array. */
-  def wordBigrams(c: Column): Column = bigramsOfTokens(tokens(c))
-
-  /** [[wordNgrams]] over an ALREADY-TOKENIZED array column.
+  /** Overlapping word n-grams of an ALREADY-TOKENIZED array column,
+    * space-joined. Arrays with fewer than `n` tokens yield an empty array
+    * (guarded: Spark's `sequence(1, stop)` would DESCEND for stop < 1,
+    * not empty). For n = 2 this matches [[bigramsOfTokens]]
+    * content-for-content.
     *
     * PERFORMANCE CONTRACT: every shingle-stream operator tokenizes in
     * its OWN projection and passes the token attribute here. Two
-    * compounding engine behaviors make the fused form (`wordNgrams`
-    * straight over text) a per-shingle disaster: (a) higher-order
-    * functions evaluate INTERPRETED, and an expression captured by the
-    * lambda — here the token array — is re-evaluated per ELEMENT, so the
-    * regex tokenization runs once per shingle, not per document;
+    * compounding engine behaviors make the fused form (n-grams of
+    * `tokens(text)` in one expression) a per-shingle disaster:
+    * (a) higher-order functions evaluate INTERPRETED, and an expression
+    * captured by the lambda — here the token array — is re-evaluated
+    * per ELEMENT, so the regex tokenization runs once per shingle, not
+    * per document;
     * (b) CollapseProject declines to inline a multi-referenced non-cheap
     * producer, so a separate tokens projection survives as a real
     * attribute and the lambda capture becomes a row read. Measured on
@@ -64,13 +66,6 @@ object TextFns {
       .otherwise(transform(sequence(lit(1), size(t) - (n - 1)),
         i => concat_ws(" ", slice(t, i, lit(n)))))
   }
-
-  /** Overlapping word n-grams of the normalized text, space-joined.
-    * Docs with fewer than `n` tokens yield an empty array (guarded:
-    * Spark's `sequence(1, stop)` would DESCEND for stop < 1, not empty).
-    * For n = 2 this matches [[wordBigrams]] content-for-content.
-    * Hot paths: see the [[ngramsOfTokens]] performance contract. */
-  def wordNgrams(c: Column, n: Int): Column = ngramsOfTokens(tokens(c), n)
 
   /** Ratio of non-alphanumeric, non-space chars to total chars. */
   def punctRatio(c: Column): Column = {

@@ -31,9 +31,7 @@ object VectorFns {
     * (cluster-shaped outputs still list it, as a singleton). Without the
     * guard the norm product is 0 and ANSI mode turns the first zero
     * vector in a real corpus into a DIVIDE_BY_ZERO crash (found by
-    * tools/fuzz_oracle.py, which plants one). [[nonZeroSql]] is the
-    * matching oracle-side filter. */
+    * tools/fuzz_oracle.py, which plants one). The oracles filter with
+    * the same test, `list_dot_product(e, e) > 0`. */
   def nonZero(e: Column): Column = dot(e, e) > 0
-
-  def nonZeroSql(arr: String): String = s"list_dot_product($arr, $arr) > 0"
 }

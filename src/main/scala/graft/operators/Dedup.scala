@@ -720,8 +720,8 @@ object Dedup {
   /** Near-dup-cluster-aware train/eval split: documents are assigned a
     * side by a deterministic hash of their [[dupClusters]] CLUSTER id,
     * not of their own content — so a near-duplicate pair can never
-    * straddle the split (the leakage a content-hash split like [[
-    * contentSample]] permits: a paraphrase in train, its twin in eval).
+    * straddle the split (the leakage a content-hash split like
+    * [[contentSample]] permits: a paraphrase in train, its twin in eval).
     * The composition every decontaminated-split pipeline ships: band
     * join → connected components → one hash per cluster. Pure function
     * of corpus content — reproducible across runs, engines, and corpus
@@ -1301,7 +1301,7 @@ object Dedup {
 
   /** The keeper step alone, over EXPLICIT cluster assignments
     * (`assign`: vec_id, cluster_id — from [[semanticClustersBanded]],
-    * [[embeddingClusters]], or any external clustering): medoid per
+    * [[semanticClusters]], or any external clustering): medoid per
     * cluster under the capped probe-set contract documented on
     * [[semanticRepresentatives]]. Factored out so the m·cap bound is
     * measurable on a planted hostile assignment without paying (or

@@ -486,7 +486,7 @@ object Pipeline {
     // sequences (the proxy misprices exactly the degenerate documents
     // quality filtering flags, so whitespace-budgeted packing under- or
     // over-fills real model contexts). Composition of library operators
-    // unmodified: bpeEncode → packSequencesBy. One hash certifies
+    // unmodified: bpeEncodeWith → packSequencesBy. One hash certifies
     // training, encoding, AND the resulting layout.
     // r11 verdict #5: encodes against the SHARED trained-vocab artifact
     // (one training run per process across t18/t19/e07); the oracle still

@@ -85,7 +85,7 @@ object TextOps {
 
   /** The packing layout over a PRE-COUNTED (doc_id, n_tokens) table —
     * what [[packSequences]] (whitespace counts) and e07 (TRAINED-
-    * tokenizer counts from [[bpeEncode]]) share. Same shard-parallel
+    * tokenizer counts from [[bpeEncodeWith]]) share. Same shard-parallel
     * window shape and scale argument as [[packSequences]]'s scaladoc. */
   def packSequencesBy(counts: org.apache.spark.sql.DataFrame,
       budgetTokens: Int = 512, shards: Int = 8): org.apache.spark.sql.DataFrame = {
@@ -227,87 +227,69 @@ object TextOps {
   private val normSql = TextFns.normalizeSql("text")
   private val toksSql = TextFns.tokensSql("text")
 
-  /** BPE TRAINING LOOP (t18) — the iterated form of t16's single inner
-    * step, closing the last LLM-pipeline stage t16 only sampled: k rounds
-    * of (count adjacent symbol pairs over the word-frequency vocabulary →
-    * pick the max-count pair, ties broken (left, right) ascending → merge
-    * every left-to-right non-overlapping occurrence in every word). The
-    * output is the merge table itself — (step, lhs, rhs, merged,
-    * pair_count) — i.e. the trained tokenizer.
+  /** BPE TRAINING (t18) — the iterated form of t16's single inner step,
+    * closing the last LLM-pipeline stage t16 only sampled: k rounds of
+    * (count adjacent symbol pairs over the word-frequency vocabulary →
+    * pick the max-count pair, ties broken (left, right) ascending in
+    * code-point order → merge every left-to-right non-overlapping
+    * occurrence in every word). The output is the merge table itself —
+    * (step, lhs, rhs, merged, n) — i.e. the trained tokenizer.
     *
-    * Shape: a DRIVER-COORDINATED fixed point, exactly g06/g11's class.
-    * Everything heavy stays distributed and vocabulary-sized: the pair
-    * count explodes the DISTINCT vocabulary (already map-side-combined to
-    * word frequencies — the real BPE trick; the corpus token stream is
-    * read once, in round 0), and the chosen pair comes back as ONE
-    * driver-side row per round (the one-row scalar-read pattern the bench
-    * harnesses share). Merge application is an in-row left-fold over each
-    * word's symbol array (`aggregate` HOF; greedy non-overlapping — in
-    * "a a a", the pair (a,a) merges once and the survivor does NOT
-    * re-merge, because a merged token never equals its own left half).
-    * `localCheckpoint` between rounds keeps the plan from growing k deep.
+    * Shape: ONE distributed wave, then exact in-memory training
+    * ([[bpeTrainCore]]). The wave is the only corpus-sized work BPE has:
+    * tokenize → word-frequency groupBy (map-side combined) → collect the
+    * vocabulary, so driver memory is O(distinct eligible words),
+    * independent of corpus size. The k rounds then run over that table
+    * in [[bpeLocalTrain]] — the standard trainer algorithm (Sennrich et
+    * al. 2016 §3; HuggingFace tokenizers and SentencePiece train in
+    * memory over exactly this table): one ordered-set argmax per merge,
+    * and each merge touches only the words that contain its pair. No
+    * Spark job runs per merge; 30k merges are set operations, not job
+    * waves.
+    *
+    * Why sequential, not batched distributed rounds: selecting the top-k
+    * pairwise non-interacting merges per round is NOT sequential-
+    * equivalent — a skipped conflicting pair keeps its count after the
+    * top merge applies wherever their occurrences don't overlap, and can
+    * outrank every selected pair at the next sequential step (measured on
+    * English text: skip-and-continue agrees with sequential on only ~36%
+    * of a 256-merge table). The only provably equal selection rule is
+    * "stop at the first pair sharing a symbol (or output) with the
+    * selected prefix, keep strictly above the cutoff", and on
+    * character-level text the top pairs share letters immediately, so
+    * sound batches average < 2 merges. Sequential dependence is
+    * fundamental to BPE; the scale answer is to make each step
+    * O(affected words) in memory, not to parallelize the step.
+    *
+    * Merge application is a greedy left fold over each word's symbols
+    * (merge when the accumulator's last symbol == l and the incoming one
+    * == r): in "a a a" the pair (a,a) merges once and the survivor does
+    * NOT re-merge, because a merged token never equals its own left
+    * half. Words split by CODE POINT and ties compare in code-point
+    * order, as Spark's UTF8String and DuckDB both do — Java's UTF-16
+    * `compareTo` sorts astral characters below U+E000–U+FFFF.
     *
     * The oracle unrolls the same k rounds in DuckDB with the vocabulary
-    * as '|'-delimited symbol strings and merge application as a
-    * `list_reduce` left fold that mirrors [[bpeTrainCore]]'s `applyMerge`
-    * symbol-for-symbol (merge when last==l AND cur==r, greedy left to
-    * right) — exact for EVERY input, including same-symbol runs. The
-    * previous 8-pass '|l|r|'→'|lr|' replace fixpoint was NOT equivalent:
-    * the pattern consumes the trailing delimiter, so in a run of
-    * identical symbols non-overlapping matches land at stride 3 and the
-    * stranded singles are never adjacent again ('aaaaaa' with merge
-    * (a,a) → [aa,a,aa,a] instead of the engine's [aa,aa,aa]; order
+    * as U+0001-delimited symbol strings and merge application as a
+    * `list_reduce` left fold that mirrors this greedy fold
+    * symbol-for-symbol — exact for EVERY input, including same-symbol
+    * runs. The previous 8-pass '|l|r|'→'|lr|' replace fixpoint was NOT
+    * equivalent: the pattern consumes the trailing delimiter, so in a
+    * run of identical symbols non-overlapping matches land at stride 3
+    * and the stranded singles are never adjacent again ('aaaaaa' with
+    * merge (a,a) → [aa,a,aa,a] instead of the engine's [aa,aa,aa]; order
     * diverges at run length 5, token count at 6). */
   def bpeTrain(docs: org.apache.spark.sql.DataFrame,
-      merges: Int = 8): org.apache.spark.sql.DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    bpeTrainCore(docs, merges)._1.toDF("step", "lhs", "rhs", "n")
-      .select(col("step"), col("lhs"), col("rhs"),
-        concat(col("lhs"), col("rhs")).as("merged"), col("n"))
-  }
-
-  /** ENCODE with the trained tokenizer (t19) — the step t18's merge table
-    * exists for: replay the same `merges` training rounds, then count
-    * each document's tokens under the trained vocabulary (per-word symbol
-    * counts summed per doc). This is the cost model a corpus pipeline
-    * prices everything with — "how many TRAINED-tokenizer tokens is this
-    * corpus" decides packing, budgets, and mixture weights, and the
-    * whitespace proxy (t01) misprices exactly the degenerate documents
-    * quality filtering cares about. The per-word encoding lives on the
-    * DISTINCT vocabulary (the same vocab-bounded shape training has); the
-    * corpus-sized work is one token explode + a vocabulary equi-join
-    * Catalyst sizes (AQE broadcasts the encoded vocab when it fits), then
-    * a per-doc sum. Words containing U+0001 are excluded corpus-wide on
-    * both engines (the [[bpeTrain]] delimiter contract); docs with no
-    * eligible words keep a 0-count row. */
-  def bpeEncode(docs: org.apache.spark.sql.DataFrame,
-      merges: Int = 8): org.apache.spark.sql.DataFrame = {
-    val (_, vocab) = bpeTrainCore(docs, merges)
-    val enc = vocab.select(col("w"), size(col("syms")).cast("long").as("nsyms"))
-    val words = docs
-      .select(col("doc_id"), explode(TextFns.tokens(col("text"))).as("w"))
-      .filter(col("w") =!= "" && !col("w").contains("\u0001"))
-    val agg = words.join(enc, "w")
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).cast("long").as("n_words"),
-        sum(col("nsyms")).cast("long").as("bpe_tokens"))
-    docs.select(col("doc_id")).join(agg, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("n_words"), lit(0L)).as("n_words"),
-        coalesce(col("bpe_tokens"), lit(0L)).as("bpe_tokens"))
-  }
+      merges: Int = 8): org.apache.spark.sql.DataFrame =
+    bpeTrainCore(docs, merges)._1
 
   /** Final trained vocabulary as one row per word — (w, freq, syms_str)
     * with the symbol list space-joined. This is the DIRECT certificate of
     * merge application (t18's merge table only witnesses a fold
     * divergence one round later, through the changed pair counts). */
   def bpeVocab(docs: org.apache.spark.sql.DataFrame,
-      merges: Int): org.apache.spark.sql.DataFrame = {
-    val (_, vocab) = bpeTrainCore(docs, merges)
-    vocab.select(col("w"), col("freq").cast("long").as("freq"),
-      array_join(col("syms"), " ").as("syms_str"))
-  }
+      merges: Int): org.apache.spark.sql.DataFrame =
+    bpeTrainCore(docs, merges)._2.select(col("w"), col("freq"), col("syms_str"))
 
   // ---- persisted trained-tokenizer artifact (r11 verdict #5) ----------
 
@@ -333,17 +315,9 @@ object TextOps {
     * run is idempotent (training is deterministic). */
   def bpeSaveTrained(docs: org.apache.spark.sql.DataFrame, dir: String,
       merges: Int): Unit = {
-    val spark = docs.sparkSession
-    import spark.implicits._
     val (tbl, vocab) = bpeTrainCore(docs, merges)
-    tbl.toDF("step", "lhs", "rhs", "n")
-      .select(col("step"), col("lhs"), col("rhs"),
-        concat(col("lhs"), col("rhs")).as("merged"), col("n"))
-      .write.mode("overwrite").parquet(s"$dir/merges")
-    vocab.select(col("w"), col("freq").cast("long").as("freq"),
-        size(col("syms")).cast("long").as("nsyms"),
-        array_join(col("syms"), " ").as("syms_str"))
-      .write.mode("overwrite").parquet(s"$dir/vocab")
+    tbl.write.mode("overwrite").parquet(s"$dir/merges")
+    vocab.write.mode("overwrite").parquet(s"$dir/vocab")
   }
 
   /** The trained merge table, loaded from a [[bpeSaveTrained]] artifact —
@@ -358,11 +332,19 @@ object TextOps {
       dir: String): org.apache.spark.sql.DataFrame =
     spark.read.schema(vocabSchema).parquet(s"$dir/vocab")
 
-  /** [[bpeEncode]] against a LOADED vocabulary — the production encode
-    * path: no training, one token explode + a vocabulary equi-join +
-    * a per-doc sum. Certified by t19: its hash is unchanged from the
-    * train-inline version, so encode-from-artifact == encode-after-
-    * training exactly. */
+  /** ENCODE with a LOADED trained vocabulary (t19) — the step t18's
+    * merge table exists for: count each document's tokens under the
+    * trained vocabulary (per-word symbol counts summed per doc). This is
+    * the cost model a corpus pipeline prices everything with — "how many
+    * TRAINED-tokenizer tokens is this corpus" decides packing, budgets,
+    * and mixture weights, and the whitespace proxy (t01) misprices
+    * exactly the degenerate documents quality filtering cares about.
+    * The production path: no training, one token explode + a vocabulary
+    * equi-join + a per-doc sum. Words containing U+0001 are excluded on
+    * both engines (the [[bpeTrain]] delimiter contract); docs with no
+    * eligible words keep a 0-count row. Certified by t19: the oracle
+    * replays training from source, so encode-from-artifact ==
+    * encode-after-training exactly. */
   def bpeEncodeWith(docs: org.apache.spark.sql.DataFrame,
       vocab: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val enc = vocab.select(col("w"), col("nsyms"))
@@ -512,127 +494,73 @@ object TextOps {
       ((i + 1).toLong, Seq.fill(f)(w).mkString(" "))
     }
 
-  /** Shared trainer core for [[bpeTrain]] / [[bpeEncode]]: the merge rows
-    * plus the final vocabulary (w, freq, syms). */
+  /** The one BPE trainer behind [[bpeTrain]], [[bpeVocab]] and
+    * [[bpeSaveTrained]] (shape and contract on [[bpeTrain]]): one
+    * word-frequency wave, [[bpeLocalTrain]] over the collected table,
+    * and the merge table and final vocabulary back as DataFrames in the
+    * declared artifact layouts, so an empty corpus still yields typed
+    * empty tables. Words containing U+0001 are excluded on BOTH sides —
+    * it is the oracle's symbol delimiter; zero occurrences in every gate
+    * corpus, and the exclusion is part of the operator contract so a
+    * corpus that does carry it still compares equal instead of
+    * corrupting the oracle's encoding. */
   private def bpeTrainCore(docs: org.apache.spark.sql.DataFrame, merges: Int)
-      : (Seq[(Int, String, String, Long)], org.apache.spark.sql.DataFrame) = {
-    def applyMerge(syms: org.apache.spark.sql.Column, l: String,
-        r: String): org.apache.spark.sql.Column =
-      aggregate(syms, array().cast("array<string>"),
-        (acc, s) => when(size(acc) > 0 &&
-            element_at(acc, -1) === lit(l) && s === lit(r),
-          concat(slice(acc, lit(1), size(acc) - 1), array(lit(l + r))))
-          .otherwise(concat(acc, array(s))))
-    // words containing U+0001 are excluded on BOTH sides — it is the
-    // oracle's symbol delimiter; zero occurrences in every gate corpus,
-    // and the exclusion is part of the operator contract so a corpus
-    // that does carry it still compares equal instead of corrupting the
-    // oracle's encoding
-    var vocab = docs
-      .select(explode(TextFns.tokens(col("text"))).as("w"))
-      .filter(col("w") =!= "" && !col("w").contains("\u0001"))
-      .groupBy(col("w")).agg(count(lit(1)).as("freq"))
-      .select(col("w"), col("freq"),
-        transform(sequence(lit(1), length(col("w"))),
-          i => col("w").substr(i, lit(1))).as("syms"))
-      .localCheckpoint()
-    val out = scala.collection.mutable.Buffer.empty[(Int, String, String, Long)]
-    for (step <- 1 to merges) {
-      val pairs = vocab.filter(size(col("syms")) >= 2)
-        .select(col("freq"),
-          explode(transform(sequence(lit(1), size(col("syms")) - 1),
-            i => struct(element_at(col("syms"), i).as("l"),
-              element_at(col("syms"), i + 1).as("r")))).as("p"))
-        .groupBy(col("p.l").as("l"), col("p.r").as("r"))
-        .agg(sum(col("freq")).as("n"))
-      val best = pairs.orderBy(col("n").desc, col("l"), col("r"))
-        .limit(1).collect()
-      if (best.nonEmpty) {
-        val b = best(0)
-        val (l, r, n) = (b.getString(0), b.getString(1), b.getLong(2))
-        out += ((step, l, r, n))
-        val next = vocab.select(col("w"), col("freq"),
-          applyMerge(col("syms"), l, r).as("syms")).localCheckpoint()
-        // free the PREVIOUS round's checkpoint blocks (r10 verdict:
-        // storage grew linearly in merges) — the CC-loop pattern
-        GraphOps.freeLocalCheckpoint(vocab)
-        vocab = next
-      }
-    }
-    (out.toSeq, vocab)
-  }
-
-  /** BPE training at PRODUCTION vocabulary scale (r10 verdict #1) — the
-    * shape that reaches ~30k merges: ONE distributed wave (tokenize →
-    * word-frequency groupBy, map-side combined — the only corpus-sized
-    * work BPE has) followed by EXACT sequential training with incremental
-    * pair-count maintenance on the collected frequency table, the
-    * standard tokenizer-trainer algorithm (Sennrich et al. 2016 §3;
-    * every production trainer — HuggingFace tokenizers, SentencePiece —
-    * trains in memory over exactly this table).
-    *
-    * Why not distributed merge batching: the r10 verdict proposed
-    * selecting top-k pairwise-non-interacting merges per round, but that
-    * is NOT sequential-equivalent — a skipped conflicting pair keeps its
-    * count after the top merge applies wherever their occurrences don't
-    * overlap, and can outrank every selected pair at the next sequential
-    * step (measured on English text: skip-and-continue agrees with
-    * sequential on only ~36% of a 256-merge table). The only
-    * provably-equal selection rule is "stop at the first pair sharing a
-    * symbol (or output) with the selected prefix, keep strictly above
-    * the cutoff" — and on character-level text the top pairs share
-    * letters immediately, so sound batches average < 2 merges
-    * ([[bpeTrainBatched]] implements that rule for vocabularies too big
-    * to collect). Sequential dependence is fundamental to BPE; the scale
-    * answer is to make each step O(affected words) in memory, not to
-    * parallelize the step.
-    *
-    * The collect is BOUNDED and the bound is the operator's contract:
-    * `minFreq` prunes the tail (a word seen < minFreq times cannot
-    * appear in any top pair of early rounds at meaningful scale — the
-    * classic trainer knob), so driver memory is O(distinct words ≥
-    * minFreq), independent of corpus size. With minFreq=1 the output is
-    * IDENTICAL to [[bpeTrain]] on any corpus (property-proven on random
-    * corpora; t21 certifies it cross-engine against t18's oracle).
-    * Training cost: one heap-ordered argmax + per-occurrence incremental
-    * count updates per merge — 30k merges is heap ops, not job waves;
-    * zero checkpoints, flat storage. */
-  def bpeTrainFast(docs: org.apache.spark.sql.DataFrame, merges: Int,
-      minFreq: Long = 1L): org.apache.spark.sql.DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
+      : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
+    import org.apache.spark.sql.Row
+    import scala.jdk.CollectionConverters._
     val wf = docs.select(explode(TextFns.tokens(col("text"))).as("w"))
       .filter(col("w") =!= "" && !col("w").contains("\u0001"))
       .groupBy(col("w")).agg(count(lit(1)).as("freq"))
-      .filter(col("freq") >= minFreq)
-      .collect()
-      // split by CODE POINT, not UTF-16 code unit: bpeTrain/bpeTrainBatched
-      // use Spark substr and the oracle slices DuckDB strings — both
-      // code-point semantics. A code-unit split would shear supplementary-
-      // plane characters (emoji, rare CJK) into unpaired surrogates and
-      // break the fast==sequential identity.
-      .map(r => (r.getString(0).codePoints().toArray
-        .map(cp => new String(Character.toChars(cp))), r.getLong(1)))
-    bpeLocalTrain(wf, merges).toDF("step", "lhs", "rhs", "n")
-      .select(col("step"), col("lhs"), col("rhs"),
-        concat(col("lhs"), col("rhs")).as("merged"), col("n"))
+      .collect().map(r => (r.getString(0), r.getLong(1)))
+    // split by CODE POINT, not UTF-16 code unit, as the oracle slices
+    // DuckDB strings: a code-unit split would shear supplementary-plane
+    // characters (emoji, rare CJK) into unpaired surrogates
+    val (table, syms) = bpeLocalTrain(wf.map { case (w, f) =>
+      (w.codePoints().toArray.map(cp => new String(Character.toChars(cp))), f)
+    }, merges)
+    val spark = docs.sparkSession
+    val mergeRows = table.map { case (step, l, r, n) => Row(step, l, r, l + r, n) }
+    val vocabRows = wf.indices.map { i =>
+      Row(wf(i)._1, wf(i)._2, syms(i).length.toLong, syms(i).mkString(" "))
+    }
+    (spark.createDataFrame(mergeRows.asJava, mergesSchema),
+      spark.createDataFrame(vocabRows.asJava, vocabSchema))
+  }
+
+  /** String order by code point — the order of Spark's UTF8String and
+    * of DuckDB. Java's `compareTo` compares UTF-16 units, which sorts
+    * surrogate pairs (code points above U+FFFF) below U+E000–U+FFFF;
+    * lifting surrogates above that block at the first differing unit
+    * restores code-point order. */
+  private val codePointOrder: Ordering[String] = new Ordering[String] {
+    private def lift(c: Char): Int =
+      if (c >= 0xE000) c - 0x800 else if (c >= 0xD800) c + 0x2000 else c
+    def compare(a: String, b: String): Int = {
+      val n = math.min(a.length, b.length)
+      var i = 0
+      while (i < n && a.charAt(i) == b.charAt(i)) i += 1
+      if (i == n) Integer.compare(a.length, b.length)
+      else Integer.compare(lift(a.charAt(i)), lift(b.charAt(i)))
+    }
   }
 
   /** Exact sequential BPE over an in-memory word-frequency table with
     * incremental pair-count maintenance: a TreeSet orders candidates by
-    * (count desc, l, r) — [[bpeTrain]]'s exact tie-break — and each merge
-    * touches only the words that contain its pair (occurrence index;
-    * stale entries tolerated and re-checked). Same greedy left-to-right
-    * non-overlapping application as `applyMerge`. */
+    * (count desc, l, r) in code-point order — the tie-break of Spark's
+    * `orderBy` and of the oracle — and each merge touches only the words
+    * that contain its pair (occurrence index; stale entries tolerated
+    * and re-checked). Greedy left-to-right non-overlapping application
+    * (see [[bpeTrain]]). Returns the merge table and every word's final
+    * symbol list, in input order. */
   private[graft] def bpeLocalTrain(words: Array[(Array[String], Long)],
-      merges: Int): Seq[(Int, String, String, Long)] = {
+      merges: Int): (Seq[(Int, String, String, Long)], IndexedSeq[Seq[String]]) = {
     import scala.collection.mutable
     val syms = words.map(w => mutable.ArrayBuffer.from(w._1))
     val freq = words.map(_._2)
     val counts = mutable.HashMap.empty[(String, String), Long]
     val occ = mutable.HashMap.empty[(String, String), mutable.Set[Int]]
     val heap = mutable.TreeSet.empty[(Long, String, String)](
-      Ordering.by(t => (-t._1, t._2, t._3)))
+      Ordering.Tuple3(Ordering.Long.reverse, codePointOrder, codePointOrder))
     def bump(p: (String, String), delta: Long, wordIdx: Int): Unit = {
       val old = counts.getOrElse(p, 0L)
       if (old != 0L) heap -= ((old, p._1, p._2))
@@ -687,110 +615,7 @@ object TextOps {
       }
       step += 1
     }
-    out.toSeq
-  }
-
-  /** The SOUND distributed batched trainer — for vocabularies too large
-    * to collect even pruned. Per round: one pair count, then the longest
-    * prefix of the (count desc, l, r) order whose pairs are pairwise
-    * symbol-AND-output disjoint, STOPPING at the first conflict — where a
-    * SELF-pair (l==r) always counts as one, because its merge creates a
-    * new (lr,lr) pair with no pre-merge witness other than itself — and
-    * keeping only pairs strictly above the stopping count — the one
-    * selection rule that provably equals sequential training (any pair
-    * at or below the cutoff could outrank later selections after the
-    * prefix applies; anything interacting can only lose count, so the
-    * strict prefix stays the true argmax sequence). Batched application
-    * is a single fold with a merge map (disjointness makes simultaneous
-    * == sequential application). Falls back to top-1 when the cutoff
-    * empties the prefix, so progress is guaranteed; checkpoints are
-    * freed every round (flat storage). Batch factor is DATA-DEPENDENT:
-    * measured ~1.7 on English text (top character pairs share letters),
-    * large on id-like corpora (COVERAGE.md's t21 row: 181 rounds for 256
-    * merges at 50k docs) — see [[bpeTrainFast]] for why no sound rule
-    * does better. */
-  def bpeTrainBatched(docs: org.apache.spark.sql.DataFrame, merges: Int,
-      kMax: Int = 64): org.apache.spark.sql.DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    var vocab = docs
-      .select(explode(TextFns.tokens(col("text"))).as("w"))
-      .filter(col("w") =!= "" && !col("w").contains("\u0001"))
-      .groupBy(col("w")).agg(count(lit(1)).as("freq"))
-      .select(col("w"), col("freq"),
-        transform(sequence(lit(1), length(col("w"))),
-          i => col("w").substr(i, lit(1))).as("syms"))
-      .localCheckpoint()
-    val out = scala.collection.mutable.Buffer.empty[(Int, String, String, Long)]
-    var exhausted = false
-    while (out.size < merges && !exhausted) {
-      val top = vocab.filter(size(col("syms")) >= 2)
-        .select(col("freq"),
-          explode(transform(sequence(lit(1), size(col("syms")) - 1),
-            i => struct(element_at(col("syms"), i).as("l"),
-              element_at(col("syms"), i + 1).as("r")))).as("p"))
-        .groupBy(col("p.l").as("l"), col("p.r").as("r"))
-        .agg(sum(col("freq")).as("n"))
-        .orderBy(col("n").desc, col("l"), col("r"))
-        .limit(kMax + 1).collect()
-        .map(b => (b.getString(0), b.getString(1), b.getLong(2)))
-      if (top.isEmpty) exhausted = true
-      else {
-        // longest disjoint prefix; cutoff = count where the scan stopped.
-        // A SELF-pair (l==r) is always a conflict boundary, even when its
-        // symbols are unused: merging (a,a) creates a brand-new pair
-        // (aa,aa) whose only pre-merge witness is (a,a) itself, so no
-        // later table entry would ever set the cutoff for it — yet its
-        // post-merge count (≤ n/2, and ties break lexicographically
-        // either way) can outrank anything selected at or below n.
-        // Stopping AT the self-pair with cutoff = n keeps only pairs
-        // strictly above everything the self-merge could create; the
-        // self-pair itself is emitted via the top-1 fallback, which is
-        // sequential's literal argmax and therefore always sound.
-        val used = scala.collection.mutable.Set.empty[String]
-        val sel = scala.collection.mutable.Buffer.empty[(String, String, Long)]
-        var cutoff = -1L
-        var stop = false
-        top.foreach { case (l, r, n) =>
-          if (!stop) {
-            if (sel.size == kMax || l == r || Seq(l, r, l + r).exists(used)) {
-              cutoff = n; stop = true
-            } else { sel += ((l, r, n)); used ++= Seq(l, r, l + r) }
-          }
-        }
-        val strict0 = if (cutoff < 0) sel.toSeq
-          else sel.toSeq.filter(_._3 > cutoff)
-        // fallback = the table's global argmax (NOT sel.head: sel is
-        // empty when the top pair is a self-pair)
-        val strict = (if (strict0.isEmpty) top.take(1).toSeq else strict0)
-          .take(merges - out.size)
-        strict.foreach { case (l, r, n) =>
-          out += ((out.size + 1, l, r, n))
-        }
-        // one fold applies the whole batch: disjoint symbols+outputs make
-        // simultaneous application equal per-merge sequential passes.
-        // Space is a safe key delimiter: symbols come from whitespace-
-        // split tokens, so no symbol ever contains one.
-        val mergeMap = map(strict.flatMap { case (l, r, _) =>
-          Seq(lit(l + " " + r), lit(l + r)) }: _*)
-        def key(acc: org.apache.spark.sql.Column, s: org.apache.spark.sql.Column) =
-          concat(element_at(acc, -1), lit(" "), s)
-        val next = vocab.select(col("w"), col("freq"),
-          aggregate(col("syms"), array().cast("array<string>"),
-            (acc, s) => when(size(acc) > 0 &&
-                element_at(mergeMap, key(acc, s)).isNotNull,
-              concat(slice(acc, lit(1), size(acc) - 1),
-                array(element_at(mergeMap, key(acc, s)))))
-              .otherwise(concat(acc, array(s)))).as("syms"))
-          .localCheckpoint()
-        GraphOps.freeLocalCheckpoint(vocab)
-        vocab = next
-      }
-    }
-    GraphOps.freeLocalCheckpoint(vocab)
-    out.toSeq.toDF("step", "lhs", "rhs", "n")
-      .select(col("step"), col("lhs"), col("rhs"),
-        concat(col("lhs"), col("rhs")).as("merged"), col("n"))
+    (out.toSeq, syms.toIndexedSeq.map(_.toSeq))
   }
 
   /** The k unrolled training rounds shared by t18's and t19's oracles:
@@ -800,7 +625,7 @@ object TextOps {
     * U+0001 delimiter; words carrying it are excluded from the vocab on
     * both sides — see bpeTrain): merge when the accumulator's LAST
     * symbol == l and the incoming symbol == r, exactly the engine's
-    * `applyMerge` greedy fold — exact on same-symbol runs where the old
+    * greedy fold ([[bpeLocalTrain]]) — exact on same-symbol runs where the old
     * replace fixpoint silently stranded singles (see [[bpeTrain]]).
     * `v$i` LEFT JOINs its round's best pair so an empty candidate set
     * keeps the vocabulary UNCHANGED (the engine's behavior) instead of
@@ -870,7 +695,7 @@ object TextOps {
        |        GROUP BY doc_id)""".stripMargin
 
   /** t19's oracle: the trained vocabulary's per-word symbol counts joined
-    * back to the per-doc token stream — see [[bpeEncode]]. The OOV count
+    * back to the per-doc token stream — see [[bpeEncodeWith]]. The OOV count
     * replays the Spark side's ELIGIBLE-word filter ('' and delimiter
     * words excluded before the vocabulary join) and left-joins, so a
     * vocabulary gap shows up as a real n_oov mismatch, not silence. */
@@ -1438,13 +1263,13 @@ object TextOps {
               |ORDER BY n DESC, pair
               |LIMIT 20""".stripMargin)),
 
-    // ---- t18: BPE TRAINING LOOP (k iterated merges) ---------------------
-    // t16 run to its fixed point: 8 driver-coordinated rounds of
-    // count-pairs → argmax → merge-in-every-word, output = the merge
-    // table (the trained tokenizer). The oracle unrolls the identical 8
-    // rounds over a delimited-symbol vocabulary with a bounded replace
-    // fixpoint — see bpeTrain's scaladoc for the greedy-non-overlap
-    // semantics and the loud-fail bound.
+    // ---- t18: BPE TRAINING (k iterated merges) --------------------------
+    // t16 run to its fixed point: 8 rounds of count-pairs → argmax →
+    // merge-in-every-word, trained in memory after ONE word-count wave
+    // (no Spark job per round); output = the merge table (the trained
+    // tokenizer). The oracle unrolls the identical 8 rounds over a
+    // delimited-symbol vocabulary with the same greedy left fold — see
+    // bpeTrain's scaladoc for the greedy-non-overlap semantics.
     // r11 verdict #5: t18 now trains via the SHARED persisted artifact —
     // one training run per process serves t18, t19, and e07; the query
     // reads the merge table back through the declared schema, and the
@@ -1455,7 +1280,7 @@ object TextOps {
 
     // ---- t19: encode with the trained tokenizer --------------------------
     // Per-document token counts under t18's trained merges — the corpus
-    // cost model (see bpeEncode). Encodes against the LOADED trained
+    // cost model (see bpeEncodeWith). Encodes against the LOADED trained
     // vocabulary (the production path: the tokenizer ships as an
     // artifact); the oracle still replays the full 8 training rounds from
     // source, so one hash certifies training, the artifact round trip,
@@ -1521,13 +1346,13 @@ object TextOps {
       },
       Some(bpeRunCertOracleSql(6))),
 
-    // ---- t21: production-scale trainer == sequential trainer ------------
-    // bpeTrainFast (one distributed word-count wave + exact in-memory
-    // incremental training — the ~30k-merge shape) certified against the
-    // SAME unrolled-rounds oracle t18 uses: one hash pins the fast
-    // trainer's merge table to the sequential definition cross-engine.
+    // ---- t21: direct training == the unrolled rounds --------------------
+    // bpeTrain straight over the corpus (one word-count wave + exact
+    // in-memory training, no artifact round trip) certified against the
+    // SAME unrolled-rounds oracle t18 uses: t18 pins the persisted
+    // artifact path, t21 the trainer's own output.
     Q("t21_bpe_fast_train",
-      (s, dir) => bpeTrainFast(Tables.load(s, dir, "documents"), merges = 8),
+      (s, dir) => bpeTrain(Tables.load(s, dir, "documents"), merges = 8),
       Some(bpeTrainOracleSql(8))),
 
     // ---- t15: overlapping token-window chunking (RAG layout) -----------

@@ -86,4 +86,22 @@ class JobsPerRoundSpec extends AnyFunSuite {
     assert(jobs <= 8, s"versioned delete submitted $jobs jobs for 3 segments " +
       "— the affected-leaf probe has re-split into per-segment jobs")
   }
+
+  test("BPE training runs no Spark job per merge: 8 merges cost at most 1 job more than 2") {
+    import graft.operators.TextOps
+    // One word-count wave, then in-memory training: the job count must
+    // not grow with the merge budget. The per-round Spark loop this
+    // trainer replaced measured 10 jobs at 2 merges and 28 at 8 (three
+    // per merge: pair count, argmax collect, checkpoint of the folded
+    // vocabulary). One job of headroom absorbs AQE stage submission.
+    val docs = Tables.load(spark, "/root/testdata/sf0.001", "documents")
+    TextOps.bpeTrain(docs, merges = 2).collect() // warm
+    val (few, jFew) = jobsDuring(TextOps.bpeTrain(docs, merges = 2).collect())
+    val (many, jMany) = jobsDuring(TextOps.bpeTrain(docs, merges = 8).collect())
+    assert(few.length === 2 && many.length === 8,
+      s"corpus too small to train 8 merges: ${few.length}, ${many.length}")
+    assert(jMany - jFew <= 1L,
+      s"BPE training grew by ${jMany - jFew} jobs from 2 to 8 merges " +
+        s"($jFew → $jMany): a Spark job runs per merge")
+  }
 }

@@ -199,15 +199,81 @@ class TextOpsSpec extends AnyFunSuite {
     assert(out("cccc") === "c c c c") // (c,c) never selected in 6 rounds
   }
 
-  test("bpeTrainFast == bpeTrain == bpeTrainBatched — ∀ random corpora") {
-    // the three trainer shapes (per-round distributed loop, one-wave
-    // in-memory incremental, sound batched selection) define ONE
-    // operator: identical merge tables, including count columns and
-    // tie-breaks, on corpora with runs, ties, and multi-char collisions.
+  /** The per-round distributed trainer, kept as the test reference: the
+    * definition the oracle's unrolled rounds mirror, three Spark jobs per
+    * merge (pair count → argmax → greedy fold over every word). Returns
+    * the merge rows plus the final vocabulary (w, freq, syms). */
+  private def perRoundTrain(docs: org.apache.spark.sql.DataFrame, merges: Int)
+      : (Seq[(Int, String, String, Long)], org.apache.spark.sql.DataFrame) = {
+    def applyMerge(syms: org.apache.spark.sql.Column, l: String,
+        r: String): org.apache.spark.sql.Column =
+      aggregate(syms, array().cast("array<string>"),
+        (acc, s) => when(size(acc) > 0 &&
+            element_at(acc, -1) === lit(l) && s === lit(r),
+          concat(slice(acc, lit(1), size(acc) - 1), array(lit(l + r))))
+          .otherwise(concat(acc, array(s))))
+    var vocab = docs
+      .select(explode(graft.functions.TextFns.tokens(col("text"))).as("w"))
+      .filter(col("w") =!= "" && !col("w").contains("\u0001"))
+      .groupBy(col("w")).agg(count(lit(1)).as("freq"))
+      .select(col("w"), col("freq"),
+        transform(sequence(lit(1), length(col("w"))),
+          i => col("w").substr(i, lit(1))).as("syms"))
+      .localCheckpoint()
+    val out = scala.collection.mutable.Buffer.empty[(Int, String, String, Long)]
+    for (step <- 1 to merges) {
+      val pairs = vocab.filter(size(col("syms")) >= 2)
+        .select(col("freq"),
+          explode(transform(sequence(lit(1), size(col("syms")) - 1),
+            i => struct(element_at(col("syms"), i).as("l"),
+              element_at(col("syms"), i + 1).as("r")))).as("p"))
+        .groupBy(col("p.l").as("l"), col("p.r").as("r"))
+        .agg(sum(col("freq")).as("n"))
+      val best = pairs.orderBy(col("n").desc, col("l"), col("r"))
+        .limit(1).collect()
+      if (best.nonEmpty) {
+        val b = best(0)
+        val (l, r, n) = (b.getString(0), b.getString(1), b.getLong(2))
+        out += ((step, l, r, n))
+        val next = vocab.select(col("w"), col("freq"),
+          applyMerge(col("syms"), l, r).as("syms")).localCheckpoint()
+        graft.operators.GraphOps.freeLocalCheckpoint(vocab)
+        vocab = next
+      }
+    }
+    (out.toSeq, vocab)
+  }
+
+  private def mergeTable(df: org.apache.spark.sql.DataFrame) = df.collect()
+    .map(r => (r.getAs[Int]("step"), r.getAs[String]("lhs"),
+      r.getAs[String]("rhs"), r.getAs[Long]("n"))).toSeq.sortBy(_._1)
+
+  /** bpeTrain's merge table AND bpeVocab's final symbols both equal the
+    * per-round reference on `docs`; returns the merge table. */
+  private def assertMatchesReference(docs: org.apache.spark.sql.DataFrame,
+      merges: Int, clue: String): Seq[(Int, String, String, Long)] = {
+    val (refTable, refVocab) = perRoundTrain(docs, merges)
+    val table = mergeTable(TextOps.bpeTrain(docs, merges))
+    assert(table === refTable, s"$clue: merge table != per-round reference")
+    def vocab(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(vocab(TextOps.bpeVocab(docs, merges).select("w", "syms_str")) ===
+      vocab(refVocab.select(col("w"), array_join(col("syms"), " "))),
+      s"$clue: final symbols != per-round reference")
+    table
+  }
+
+  test("bpeTrain == the per-round reference trainer — ∀ random corpora") {
+    // one word-count wave + in-memory training must reproduce the
+    // per-round distributed definition exactly: merge table (counts and
+    // tie-breaks included) and every word's final symbols, on corpora
+    // with runs, ties, multi-char collisions, and — through U+FF41 and an
+    // astral emoji in the alphabet — ties whose UTF-16 and code-point
+    // orders disagree.
     import spark.implicits._
     val rnd = new scala.util.Random(20260815L)
-    def corpus(): Seq[(Long, String)] = {
-      val alphabet = "ab-c"
+    val alphabet = Seq("a", "b", "-", "c", "\uFF41", "\uD83D\uDE00")
+    def corpus(): Seq[(Long, String)] =
       (0 until 12).map { i =>
         val words = (0 until rnd.nextInt(6) + 1).map { _ =>
           (0 until rnd.nextInt(7) + 1)
@@ -215,67 +281,65 @@ class TextOpsSpec extends AnyFunSuite {
         }
         (i.toLong, words.mkString(" "))
       }
-    }
-    def table(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getAs[Int]("step"), r.getAs[String]("lhs"),
-        r.getAs[String]("rhs"), r.getAs[Long]("n"))).toSeq.sortBy(_._1)
     (0 until 4).foreach { trial =>
-      val docs = corpus().toDF("doc_id", "text")
-      val seq = table(TextOps.bpeTrain(docs, merges = 6))
-      val fast = table(TextOps.bpeTrainFast(docs, merges = 6))
-      val bat = table(TextOps.bpeTrainBatched(docs, merges = 6))
-      assert(fast === seq, s"trial $trial: fast != sequential")
-      assert(bat === seq, s"trial $trial: batched != sequential")
+      assertMatchesReference(corpus().toDF("doc_id", "text"), 6, s"trial $trial")
     }
     // and on the run-cert corpus (every stride-bug shape)
-    val docs = TextOps.runCertCorpus.toDF("doc_id", "text")
-    val seq = table(TextOps.bpeTrain(docs, merges = 6))
-    assert(table(TextOps.bpeTrainFast(docs, merges = 6)) === seq)
-    assert(table(TextOps.bpeTrainBatched(docs, merges = 6)) === seq)
+    assertMatchesReference(TextOps.runCertCorpus.toDF("doc_id", "text"), 6,
+      "run-cert")
 
     // ADVICE r11 self-pair corpus: (a,a):7 and (b,c):2 are symbol-disjoint,
-    // so the old batched rule selected both with no cutoff — but merging
-    // (a,a) creates (aa,aa):3, which sequential emits BEFORE (b,c):2. The
-    // self-pair-is-a-conflict rule must reproduce sequential exactly.
+    // but merging (a,a) creates (aa,aa):3, which sequential training
+    // emits BEFORE (b,c):2.
     val selfPair = Seq((0L, "aaaaaaaa"), (1L, "bc bc")).toDF("doc_id", "text")
-    val spSeq = table(TextOps.bpeTrain(selfPair, merges = 3))
-    assert(spSeq === Seq((1, "a", "a", 7L), (2, "aa", "aa", 3L),
-      (3, "b", "c", 2L)))
-    assert(table(TextOps.bpeTrainFast(selfPair, merges = 3)) === spSeq)
-    assert(table(TextOps.bpeTrainBatched(selfPair, merges = 3)) === spSeq)
+    assert(assertMatchesReference(selfPair, 3, "self-pair") ===
+      Seq((1, "a", "a", 7L), (2, "aa", "aa", 3L), (3, "b", "c", 2L)))
 
     // ADVICE r11 supplementary-plane corpus: Spark substr and the oracle
-    // slice by CODE POINT; a UTF-16 code-unit split in the fast trainer
-    // would shear these emoji into unpaired surrogates.
-    val astral = Seq((0L, "😀😀a 😀a b"))
+    // slice by CODE POINT; a UTF-16 code-unit split would shear these
+    // emoji into unpaired surrogates.
+    val astral = Seq((0L, "\uD83D\uDE00\uD83D\uDE00a \uD83D\uDE00a b"))
       .toDF("doc_id", "text")
-    val asSeq = table(TextOps.bpeTrain(astral, merges = 3))
-    assert(asSeq.head._2 === "😀",
-      "sequential must treat the emoji as ONE symbol")
-    assert(table(TextOps.bpeTrainFast(astral, merges = 3)) === asSeq)
-    assert(table(TextOps.bpeTrainBatched(astral, merges = 3)) === asSeq)
+    assert(assertMatchesReference(astral, 3, "astral").head._2 === "\uD83D\uDE00",
+      "training must treat the emoji as ONE symbol")
 
     // CJK extension B (r12 verdict #6): same two-code-unit class as the
     // emoji but from the CJK astral block, as a repeated RUN — the shape
     // where a code-unit split would also corrupt the stride machinery.
-    val cjkB = Seq((0L, "𠀀𠀀𠀀a 𠀀a b"))
+    val cjkB = Seq((0L, "\uD840\uDC00\uD840\uDC00\uD840\uDC00a \uD840\uDC00a b"))
       .toDF("doc_id", "text")
-    val cbSeq = table(TextOps.bpeTrain(cjkB, merges = 3))
-    assert(cbSeq.head._2 === "𠀀",
-      "sequential must treat the ext-B char as ONE symbol")
-    assert(table(TextOps.bpeTrainFast(cjkB, merges = 3)) === cbSeq)
-    assert(table(TextOps.bpeTrainBatched(cjkB, merges = 3)) === cbSeq)
+    assert(assertMatchesReference(cjkB, 3, "cjk-b").head._2 === "\uD840\uDC00",
+      "training must treat the ext-B char as ONE symbol")
   }
 
-  test("bpeEncode: per-doc counts under the trained merges") {
+  test("bpeTrain: ties break in code-point order, not UTF-16 order") {
+    import spark.implicits._
+    // (U+FF41, U+FF41) and (U+1F600, U+1F600) tie at count 1. Spark's
+    // orderBy and DuckDB compare code points, so U+FF41 wins; Java's
+    // String.compareTo compares UTF-16 units and would pick the emoji,
+    // whose lead surrogate 0xD83D sorts below 0xFF41.
+    val fw = "\uFF41"
+    val emoji = "\uD83D\uDE00"
+    val docs = Seq((0L, s"$fw$fw $emoji$emoji")).toDF("doc_id", "text")
+    val expected = Seq((1, fw, fw, 1L))
+    assert(perRoundTrain(docs, 1)._1 === expected)
+    assert(mergeTable(TextOps.bpeTrain(docs, merges = 1)) === expected)
+    assert(TextOps.bpeLocalTrain(
+      Array((Array(fw, fw), 1L), (Array(emoji, emoji), 1L)), 1)._1 === expected)
+  }
+
+  test("bpeEncodeWith: per-doc counts and packing under a saved trained vocabulary") {
     import spark.implicits._
     val docs = Seq(
       (0L, "aaaa aaaa ab", "en"),
       (1L, "aaaa ab abab", "en")
     ).toDF("doc_id", "text", "lang")
+    val dir = java.nio.file.Files.createTempDirectory("bpe-encode").toString
+    TextOps.bpeSaveTrained(docs, dir, merges = 3)
+    val encoded = TextOps.bpeEncodeWith(docs, TextOps.bpeLoadVocab(spark, dir))
     // after the 3 merges above: aaaa→[aaaa] (1 sym), ab→[ab] (1),
     // abab→[ab,ab] (2)
-    val out = TextOps.bpeEncode(docs, merges = 3).collect()
+    val out = encoded.collect()
       .map(r => r.getAs[Long]("doc_id") ->
         (r.getAs[Long]("n_words"), r.getAs[Long]("bpe_tokens"))).toMap
     assert(out(0L) === ((3L, 3L)))
@@ -285,8 +349,7 @@ class TextOpsSpec extends AnyFunSuite {
     // budget 4 — doc0 (3 bpe tokens) fills [0,3); doc1 (4) starts at
     // offset 3 of seq 0 and spills into seq 1
     val packed = TextOps.packSequencesBy(
-        TextOps.bpeEncode(docs, merges = 3)
-          .select(col("doc_id"), col("bpe_tokens").as("n_tokens")),
+        encoded.select(col("doc_id"), col("bpe_tokens").as("n_tokens")),
         budgetTokens = 4, shards = 1).collect()
       .map(r => r.getAs[Long]("doc_id") ->
         (r.getAs[Long]("n_tokens"), r.getAs[Long]("seq_id"),
@@ -319,7 +382,7 @@ class TextOpsSpec extends AnyFunSuite {
     out.foreach { case (id, (n, _)) => assert(counts(id) === n) }
   }
 
-  test("trained-vocab artifact: loaded merges == bpeTrain, encode-from-artifact == bpeEncode") {
+  test("trained-vocab artifact: loaded merges == bpeTrain, encode == trained vocabulary") {
     import spark.implicits._
     val docs = Seq(
       (0L, "aaaa aaaa ab river bank", "en"),
@@ -333,14 +396,23 @@ class TextOpsSpec extends AnyFunSuite {
     assert(rows(TextOps.bpeLoadMerges(spark, dir)) ===
       rows(TextOps.bpeTrain(docs, merges = 4)),
       "merge table changed through the artifact round trip")
-    // counts compare on the shared columns; the artifact path ALSO emits
-    // n_oov (zero on the training corpus by construction — every
+    // encode against the loaded vocabulary == each doc's words priced by
+    // the train-inline vocabulary's final symbols; the artifact path ALSO
+    // emits n_oov (zero on the training corpus by construction — every
     // eligible word is in its own vocabulary)
+    val nsyms = TextOps.bpeVocab(docs, merges = 4).collect()
+      .map(r => r.getAs[String]("w") -> r.getAs[String]("syms_str").split(" ").length.toLong)
+      .toMap
+    val expected = docs.select(col("doc_id"),
+        graft.functions.TextFns.tokens(col("text")).as("t")).collect()
+      .map { r =>
+        val ws = r.getSeq[String](1).filter(_.nonEmpty)
+        Seq(r.getLong(0), ws.length.toLong, ws.map(nsyms).sum)
+      }.toSet
     val fromArtifact = TextOps.bpeEncodeWith(docs,
       TextOps.bpeLoadVocab(spark, dir))
-    assert(rows(fromArtifact.select("doc_id", "n_words", "bpe_tokens")) ===
-      rows(TextOps.bpeEncode(docs, merges = 4)),
-      "encode against the loaded vocabulary diverged from train-inline encode")
+    assert(rows(fromArtifact.select("doc_id", "n_words", "bpe_tokens")) === expected,
+      "encode against the loaded vocabulary diverged from the trained vocabulary")
     assert(fromArtifact.filter($"n_oov" =!= 0L).count() === 0L,
       "n_oov nonzero on the vocabulary's own training corpus")
     // and a genuinely out-of-vocabulary doc REPORTS its OOV words
